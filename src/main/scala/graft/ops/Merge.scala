@@ -26,10 +26,14 @@ import org.apache.spark.sql.functions._
   *    proves the bucketed apply exchange-free). The right form when
   *    base and changes are comparable in size or already co-located.
   *  - `upsertSmallChanges`: the CDC shape (changes ≪ base). The change
-  *    set broadcasts; the base is SCANNED twice (pass-through anti
-  *    join + matched inner join) and never shuffled — at a 100 TB base
-  *    two scans beat one full shuffle by the width of the cluster
-  *    network. No driver-side state, no collect.
+  *    set broadcasts and the base is never shuffled — at a 100 TB base
+  *    a scan beats one full shuffle by the width of the cluster
+  *    network. FULL row images (`partialImages = false`, every base
+  *    value column present) scan the base ONCE: a touched key's base
+  *    values can never survive, so MERGE is the pass-through anti join
+  *    plus the change images. Partial images must merge per column,
+  *    so the base is SCANNED twice (pass-through anti join + matched
+  *    inner join). No driver-side state, no collect.
   */
 object Merge {
 
@@ -84,11 +88,11 @@ object Merge {
     * that can KEEP a change row evaluates it: [[upsert]]'s delete
     * filter reads `c.op` for every present row, and
     * [[upsertSmallChanges]]'s insert branch — the only place a
-    * null-key row survives to (it matches neither anti-probe) —
-    * filters on `op`. A dropped standalone assert column would be
-    * pruned away, check and all. The base side is not re-scanned: base
-    * rows originate as checked change rows (or a caller-stamped
-    * snapshot), so the invariant holds inductively. */
+    * null-key row survives to (it matches neither anti-probe) — and
+    * its full-image branch both filter on `op`. A dropped standalone
+    * assert column would be pruned away, check and all. The base side
+    * is not re-scanned: base rows originate as checked change rows (or
+    * a caller-stamped snapshot), so the invariant holds inductively. */
   private def nullKeyError(kc: String, opName: String): String =
     s"[graft] $opName: null merge key '$kc' in changes — a null key matches no " +
       s"join, so the row would silently duplicate on every redelivery"
@@ -162,55 +166,92 @@ object Merge {
 
   /** Same MERGE semantics as [[upsert]], planned for a change set that
     * is ≪ the base (the CDC apply shape): every join broadcasts the
-    * change side, so the base snapshot is scanned — twice — but never
+    * change side, so the base snapshot is scanned but never
     * hash-partitioned. Output row set is identical to `upsert` on the
-    * same inputs (CurationSpec asserts parity on the edge cases).
-    */
-  /** @param cacheMatched persist the (≤ |changes|-row) matched set so
-    *               the base contributes two scans instead of three.
-    *               Callers whose session teardown runs `clearCache()`
-    *               between queries (Bench/Verify) keep the default;
-    *               long-lived loops that merge repeatedly on one
-    *               session (foreachBatch materialization) pass false —
-    *               an un-released persist per batch is a slow leak.
+    * same inputs (CurationSpec asserts parity on the edge cases, for
+    * both shapes below).
+    *
+    * FULL images (`partialImages = false`) carrying every base value
+    * column take the identity
+    * `base ⋉̸ broadcast(change keys) ∪ change images with op ≠ 'D'`:
+    * one base scan, one broadcast, no join against the images. Any
+    * other input merges per column through a matched inner join, so the
+    * base is scanned twice (three times with `cacheMatched = false`).
+    *
+    * @param cacheMatched join shape only: persist the
+    *               (≤ |changes|-row) matched set so the base contributes
+    *               two scans instead of three. Callers whose session
+    *               teardown runs `clearCache()` between queries
+    *               (Bench/Verify) keep the default; long-lived loops that
+    *               merge repeatedly on one session (foreachBatch
+    *               materialization) pass false — an un-released persist
+    *               per batch is a slow leak.
     */
   def upsertSmallChanges(base: DataFrame, changes: DataFrame, key: String, opCol: String,
-      partialImages: Boolean = true, cacheMatched: Boolean = true): DataFrame = {
+      partialImages: Boolean = true, cacheMatched: Boolean = true): DataFrame =
+    smallChanges(base, changes, key, opCol, partialImages, cacheMatched, touchedKeys = None)
+
+  /** [[upsertSmallChanges]] with full images, for a caller that already
+    * holds the change set's key set in a cheaper form than the change
+    * set itself — the CDC materializer's pre-reduce events, whose keys
+    * need no shuffle. `touchedKeys` must carry a column named `key` and
+    * exactly the keys of `changes` (duplicates are fine: it only feeds
+    * the pass-through anti join). A change set that lacks a base value
+    * column takes the join shape, as in [[upsertSmallChanges]]. */
+  private[graft] def upsertFullImages(base: DataFrame, changes: DataFrame, key: String,
+      opCol: String, touchedKeys: DataFrame): DataFrame =
+    smallChanges(base, changes, key, opCol, partialImages = false, cacheMatched = false,
+      touchedKeys = Some(touchedKeys))
+
+  private def smallChanges(base: DataFrame, changes: DataFrame, key: String, opCol: String,
+      partialImages: Boolean, cacheMatched: Boolean,
+      touchedKeys: Option[DataFrame]): DataFrame = {
     val (k, kc, op) = validate(base, changes, key, opCol)
     val checked = guardNullKey(changes, kc, op, "MERGE upsertSmallChanges")
     val valueCols = base.columns.filter(_ != k).toSeq
     val inChanges = changeColMatcher(base, changes)
     val isDelete = col(op) <=> lit("D")
+    val keys = touchedKeys.getOrElse(checked).select(col(k))
     // base rows whose key has no change: pass through (scan + broadcast anti)
     val untouched = base
-      .join(broadcast(checked.select(col(k))), Seq(k), "left_anti")
+      .join(broadcast(keys), Seq(k), "left_anti")
       .select(col(k) +: valueCols.map(col): _*)
-    // matched (key in both): merge per column; D drops the row. The
-    // result is ≤ |changes| rows and feeds BOTH the applied branch and
-    // the insert anti-probe — persist so the base contributes exactly
-    // two scans (released by the session-level clearCache teardown the
-    // engine's drivers run between queries, as with q41's own persist).
-    val matchedJoin = base.alias("b")
-      .join(broadcast(checked.alias("c")), Seq(k), "inner")
-    val matched = if (cacheMatched) matchedJoin.persist() else matchedJoin
-    val applied = matched
-      .filter(!(col(s"c.$op") <=> lit("D")))
-      .select(col(k) +: valueCols.map { v =>
-        if (!inChanges(v)) col(s"b.$v").as(v)
-        else if (partialImages) coalesce(col(s"c.$v"), col(s"b.$v")).as(v)
-        else col(s"c.$v").as(v)
-      }: _*)
-    // inserts: change keys absent from base. The matched-key set is
-    // ≤ |changes| rows, so the anti probe broadcasts it — the base
-    // contributes only through the (unshuffled) inner join above.
-    val inserts = checked
-      .join(broadcast(matched.select(col(k))), Seq(k), "left_anti")
-      .filter(!isDelete)
-      .select(col(k) +: valueCols.map { v =>
-        if (inChanges(v)) col(v).as(v)
-        else lit(null).cast(base.schema(v).dataType).as(v)
-      }: _*)
-    untouched.unionByName(applied).unionByName(inserts)
+    if (!partialImages && valueCols.forall(inChanges)) {
+      // full images: a touched key's row is its change image verbatim
+      // (or gone, for 'D'), so no base value is needed. The filter reads
+      // `op` for every change row — the null-key guard's carrier.
+      val images = checked
+        .filter(!isDelete)
+        .select(col(k) +: valueCols.map(v => col(v).as(v)): _*)
+      untouched.unionByName(images)
+    } else {
+      // matched (key in both): merge per column; D drops the row. The
+      // result is ≤ |changes| rows and feeds BOTH the applied branch and
+      // the insert anti-probe — persist so the base contributes exactly
+      // two scans (released by the session-level clearCache teardown the
+      // engine's drivers run between queries, as with q41's own persist).
+      val matchedJoin = base.alias("b")
+        .join(broadcast(checked.alias("c")), Seq(k), "inner")
+      val matched = if (cacheMatched) matchedJoin.persist() else matchedJoin
+      val applied = matched
+        .filter(!(col(s"c.$op") <=> lit("D")))
+        .select(col(k) +: valueCols.map { v =>
+          if (!inChanges(v)) col(s"b.$v").as(v)
+          else if (partialImages) coalesce(col(s"c.$v"), col(s"b.$v")).as(v)
+          else col(s"c.$v").as(v)
+        }: _*)
+      // inserts: change keys absent from base. The matched-key set is
+      // ≤ |changes| rows, so the anti probe broadcasts it — the base
+      // contributes only through the (unshuffled) inner join above.
+      val inserts = checked
+        .join(broadcast(matched.select(col(k))), Seq(k), "left_anti")
+        .filter(!isDelete)
+        .select(col(k) +: valueCols.map { v =>
+          if (inChanges(v)) col(v).as(v)
+          else lit(null).cast(base.schema(v).dataType).as(v)
+        }: _*)
+      untouched.unionByName(applied).unionByName(inserts)
+    }
   }
 
   /** Compare-and-swap MERGE for OUT-OF-ORDER transports: the row with
@@ -240,9 +281,11 @@ object Merge {
     * checked change rows (or a caller-stamped snapshot), so the
     * invariant holds inductively.
     *
-    * Scale shape is [[upsertSmallChanges]]'s: every join broadcasts the
-    * change side, the base is scanned twice and never shuffled (the
-    * per-key pre-reduce shuffles only the small change side).
+    * Scale shape is [[upsertSmallChanges]]'s join shape:
+    * every join broadcasts the change side, the base is scanned twice
+    * and never shuffled (the per-key pre-reduce shuffles only the small
+    * change side). A CAS needs both versions, so the full-image
+    * single-scan identity does not apply here.
     */
   def upsertVersioned(base: DataFrame, changes: DataFrame, key: String,
       versionCol: String, cacheMatched: Boolean = true): DataFrame = {

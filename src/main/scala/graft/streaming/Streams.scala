@@ -1016,9 +1016,10 @@ object Streams {
       // identical columns, so a column the state has but an older
       // producer's batch lacks is null-filled on the change side too —
       // correct under whole-row full-image semantics: the image simply
-      // has no value for it. Ordered mode leaves changes untouched;
-      // upsertSmallChanges already passes base values through for
-      // columns absent from the change set.
+      // has no value for it. Ordered mode leaves changes untouched:
+      // requireCompatibleDrift refuses a state column the batch lacks,
+      // so after this widen the change set carries every base value
+      // column — the precondition of Merge's full-image shape.
       //
       // TYPE drift (int→bigint and friends) is handled for shared
       // columns by upcasting BOTH sides to the wider numeric type —
@@ -1057,17 +1058,21 @@ object Streams {
       val casChanges =
         if (orderedTransport) changes
         else widen(changes, base0.schema)
-      // partialImages=false: pgoutput new-images are FULL rows, so a
-      // change's NULL is a real NULL and must clear the base value —
-      // coalesce semantics would diverge from last-image batch replay.
+      // Full images: pgoutput new-images are FULL rows, so a change's
+      // NULL is a real NULL and must clear the base value — coalesce
+      // semantics would diverge from last-image batch replay.
       // Small-changes path (both modes): a micro-batch is ≪ the
       // accumulated state, so the change set broadcasts and the state
       // table is scanned, never shuffled — per-batch latency stays
-      // flat as state grows.
+      // flat as state grows. Ordered mode scans the state ONCE: the
+      // pass-through anti join takes its touched keys from the
+      // pre-reduce events (the same key set, with no shuffle), so the
+      // reduce runs once, feeding only the change images. CAS mode
+      // joins both versions and scans it twice.
       val merged0 =
         if (orderedTransport)
-          graft.ops.Merge.upsertSmallChanges(base, changes, keyCol, "op",
-            partialImages = false, cacheMatched = false)
+          graft.ops.Merge.upsertFullImages(base, changes, keyCol, "op",
+            touchedKeys = projected.select(col(keyCol)))
         else
           graft.ops.Merge.upsertVersioned(base, casChanges, keyCol, "lsn",
             cacheMatched = false)
@@ -1204,17 +1209,7 @@ object Streams {
       casTombstoneRetention: Long = Long.MaxValue,
       maxConcurrentRelations: Int = 1,
       statePartitions: Int = 0): StreamingQuery = {
-    // each relation's state dir sits NEXT TO its siblings under
-    // stateRoot, and every apply runs recoverCdcState, whose crash
-    // sweep deletes `<state>__prev` and `<state>__swap_<batchId>`
-    // siblings — a relation NAMED like another's bookkeeping would
-    // have its entire state destroyed by that sweep. Refuse at build.
-    for (a <- relations.map(_.name); b <- relations.map(_.name) if a != b)
-      require(b != s"${a}__prev" && b != s"${a}__compact_horizon" &&
-          !(b.startsWith(s"${a}__swap_") && b.stripPrefix(s"${a}__swap_").matches("\\d+")),
-        s"[graft] relation name '$b' collides with relation '$a''s state-swap bookkeeping " +
-          s"(<state>__prev / <state>__swap_<batchId>) — '$a''s crash recovery would sweep " +
-          s"'$b''s state dir; rename one of them")
+    requireDistinctStateDirs(relations)
     runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
       requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
         checkpoint,
@@ -1250,12 +1245,7 @@ object Streams {
       maxConcurrentRelations: Int = 1,
       statePartitions: Int = 0,
       orderedTransport: Boolean = true): StreamingQuery = {
-    for (a <- relations.map(_.name); b <- relations.map(_.name) if a != b)
-      require(b != s"${a}__prev" && b != s"${a}__compact_horizon" &&
-          !(b.startsWith(s"${a}__swap_") && b.stripPrefix(s"${a}__swap_").matches("\\d+")),
-        s"[graft] relation name '$b' collides with relation '$a''s state-swap bookkeeping " +
-          s"(<state>__prev / <state>__swap_<batchId>) — '$a''s crash recovery would sweep " +
-          s"'$b''s state dir; rename one of them")
+    requireDistinctStateDirs(relations)
     runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
       requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
         checkpoint, s"parquet-multi:$stateRoot:scd2${partitionTag(statePartitions)}" +
@@ -1273,6 +1263,20 @@ object Streams {
       } finally cached.unpersist()
     })
   }
+
+  /** Each relation's state dir sits NEXT TO its siblings under
+    * stateRoot, and every apply runs recoverCdcState, whose crash sweep
+    * deletes `<state>__prev` and `<state>__swap_<batchId>` siblings — a
+    * relation NAMED like another's bookkeeping would have its entire
+    * state destroyed by that sweep. Refuse at build (both parquet
+    * demuxes). */
+  private def requireDistinctStateDirs(relations: Seq[Envelope.Relation]): Unit =
+    for (a <- relations.map(_.name); b <- relations.map(_.name) if a != b)
+      require(b != s"${a}__prev" && b != s"${a}__compact_horizon" &&
+          !(b.startsWith(s"${a}__swap_") && b.stripPrefix(s"${a}__swap_").matches("\\d+")),
+        s"[graft] relation name '$b' collides with relation '$a''s state-swap bookkeeping " +
+          s"(<state>__prev / <state>__swap_<batchId>) — '$a''s crash recovery would sweep " +
+          s"'$b''s state dir; rename one of them")
 
   /** Two relations mapped to ONE target table would silently
     * interleave their histories (the drift guard even widens the

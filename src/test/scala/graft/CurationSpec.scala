@@ -110,6 +110,11 @@ class CurationSpec extends SparkSuite {
     }
     loud(graft.ops.Merge.upsert(base, changes, "k", "op").collect())
     loud(graft.ops.Merge.upsertSmallChanges(base, changes, "k", "op").collect())
+    // a shuffled input: over a bare local relation the optimizer would
+    // evaluate the guard eagerly in ANY branch, proving nothing about
+    // the full-image branch that keeps the row
+    loud(graft.ops.Merge.upsertSmallChanges(base, changes.repartition(2), "k", "op",
+      partialImages = false).collect())
     val vbase = Seq((1L, "a", "0/10")).toDF("k", "name", "lsn")
     val vchanges = Seq(
       (java.lang.Long.valueOf(2L), "b", "0/20"),
@@ -210,16 +215,35 @@ class CurationSpec extends SparkSuite {
       (4L, "I", java.lang.Double.valueOf(40.0)),       // insert
       (5L, null.asInstanceOf[String], java.lang.Double.valueOf(50.0))) // NULL op: upsert
       .toDF("k", "op", "v")
-    for (partial <- Seq(true, false)) {
-      val a = graft.ops.Merge.upsert(base, changes, "k", "op", partial)
-      val b = graft.ops.Merge.upsertSmallChanges(base, changes, "k", "op", partial)
+    // the same edge cases carrying EVERY base column: with full images
+    // this takes the single-scan shape (no matched join); the set above
+    // lacks `name`, so it keeps pinning the join shape
+    val fullChanges = Seq(
+      (2L, "D", null.asInstanceOf[String], null.asInstanceOf[java.lang.Double]),
+      (9L, "D", "z", java.lang.Double.valueOf(99.0)),
+      (3L, "U", null.asInstanceOf[String], null.asInstanceOf[java.lang.Double]),
+      (4L, "I", "d", java.lang.Double.valueOf(40.0)),
+      (5L, null.asInstanceOf[String], "e", java.lang.Double.valueOf(50.0)))
+      .toDF("k", "op", "name", "v")
+    for ((label, ch) <- Seq("partial columns" -> changes, "every column" -> fullChanges);
+         partial <- Seq(true, false)) {
+      val a = graft.ops.Merge.upsert(base, ch, "k", "op", partial)
+      val b = graft.ops.Merge.upsertSmallChanges(base, ch, "k", "op", partial)
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"partialImages=$partial: broadcast path diverged from full-outer path")
+        s"$label, partialImages=$partial: broadcast path diverged from full-outer path")
       // nullability may differ (full outer marks the key nullable; the
       // broadcast path's inner/anti joins keep it non-null) — names and
       // types must not
       assert(a.schema.map(f => (f.name, f.dataType)) == b.schema.map(f => (f.name, f.dataType)),
-        s"partialImages=$partial: schema drift")
+        s"$label, partialImages=$partial: schema drift")
+      // the analyzed plan: a persisted matched join shows there as a
+      // join (the cache substitution happens later)
+      val innerJoins = b.queryExecution.analyzed.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.joinType == org.apache.spark.sql.catalyst.plans.Inner => j
+      }
+      assert(innerJoins.isEmpty == (label == "every column" && !partial),
+        s"$label, partialImages=$partial: only full images skip the matched join")
     }
   }
 

@@ -646,6 +646,109 @@ class MultiTableCdcSpec extends SparkSuite {
     assert(spark.read.parquet(s"$root/status").count() == 1L)
   }
 
+  test("a busy two-relation micro-batch: pinned job count, and one state scan + one broadcast per relation write") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // Full images make the ordered MERGE `state ⋉̸ touched keys ∪
+    // images`: per relation the write plan scans the state once, builds
+    // one broadcast (the pre-reduce touched keys) and reduces once.
+    // Both figures are plan/scheduler facts, immune to host load.
+    val src = Files.createTempDirectory("graft_mtbusy_in")
+    val ckpt = Files.createTempDirectory("graft_mtbusy_ckpt").toString
+    val root = Files.createTempDirectory("graft_mtbusy_state").toString
+    val now = System.currentTimeMillis()
+    def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
+      val f = src.resolve(name)
+      Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      f.toFile.setLastModified(mtime)
+    }
+    def student(lsn: String, tag: String, id: Long, fn: String) =
+      s"""{"lsn": "$lsn", "tag": "$tag", "table": "students", "new": {"id": $id, "first_name": "$fn", "last_name": "ln$id", "date_of_birth": "1990-01-01", "status_id": 1}}"""
+    def status(lsn: String, tag: String, id: Long, v: String) =
+      s"""{"lsn": "$lsn", "tag": "$tag", "table": "status", "new": {"id": $id, "value": "$v"}}"""
+    def delete(lsn: String, table: String, id: Long) =
+      s"""{"lsn": "$lsn", "tag": "delete", "table": "$table", "old": {"id": $id}}"""
+    writeChunk("chunk_0000.jsonl", now - 60000L,
+      student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
+      student("0/00000030", "insert", 3L, "three"),
+      status("0/00000018", "insert", 1L, "active"), status("0/00000028", "insert", 2L, "idle"),
+      status("0/00000038", "insert", 3L, "gone"))
+    Streams.materializeCdcTables(
+      Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
+      .awaitTermination()
+    quiesce()
+    // the busy batch: repeated updates of one key, a delete of a live
+    // key and of an absent one, an insert — on both relations
+    writeChunk("chunk_0001.jsonl", now - 30000L,
+      student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
+      delete("0/00000060", "students", 2L), delete("0/00000070", "students", 9L),
+      student("0/00000080", "insert", 4L, "four"),
+      status("0/00000048", "update", 1L, "busy"), delete("0/00000058", "status", 3L),
+      status("0/00000068", "insert", 4L, "new"))
+    val marker = "graft-busy-batch-flush"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+        else if (flushed.getCount > 0) jobs.incrementAndGet()
+    }
+    // AQE wraps the write command itself: the helper walks into the
+    // final plan and its query stages
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = helper.foreach(qe.executedPlan) {
+        case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+          writes.add(c.outputPath.getName.replaceAll("__swap_\\d+$", "") -> w)
+        case _ =>
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(qel)
+    try {
+      Streams.materializeCdcTables(
+        Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
+        .awaitTermination()
+      quiesce()
+      // every event of the run precedes the marker job's on the bus
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(qel)
+    }
+    assert(jobs.get() == 11,
+      s"a busy two-relation micro-batch ran ${jobs.get()} jobs; the full-image apply runs 11 " +
+        "(the matched-join apply ran 23: three state scans and four broadcasts per relation)")
+    val byRel = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
+    assert(byRel.map(_._1).sorted == Seq("status", "students"),
+      s"expected one state write per relation: ${byRel.map(_._1)}")
+    for ((rel, plan) <- byRel) {
+      val stateScans = helper.collect(plan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == rel) => s
+      }
+      val broadcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
+      assert(stateScans.size == 1 && broadcasts.size == 1,
+        s"$rel: the write must scan the state once and build one broadcast " +
+          s"(got ${stateScans.size} scans, ${broadcasts.size} broadcasts):\n$plan")
+    }
+    assert(collectStudents(spark.read.parquet(s"$root/students")) == Map(
+      1L -> (("eins", "ln1", "1990-01-01", 1)), 3L -> (("three", "ln3", "1990-01-01", 1)),
+      4L -> (("four", "ln4", "1990-01-01", 1))))
+    assert(collectStatus(spark.read.parquet(s"$root/status")) ==
+      Map(1L -> "busy", 2L -> "idle", 4L -> "new"))
+  }
+
   test("a batch with no events for a relation skips that relation's state rewrite entirely") {
     import java.nio.file.Files
     val src = Files.createTempDirectory("graft_mtskip_in")

@@ -663,8 +663,10 @@ class StreamsExtraSpec extends SparkSuite {
     // swap-incomplete): the swap fully landed — state IS the post-batch
     // result — but the process died before the offset commit was
     // written. The replayed batch merges the same reduced change set
-    // into the post-batch state; [[Merge.upsertSmallChanges]] must make
-    // that a no-op for exactly-once-equivalent output.
+    // into the post-batch state; the ordered full-image merge
+    // ([[Merge.upsertFullImages]]: one state scan, `state ⋉̸ touched
+    // keys ∪ images`) must make that a no-op for exactly-once-equivalent
+    // output. (Partial images would take the two-scan join shape.)
     val in = Fixture.materializeChunks(3)
     val ckpt = Files.createTempDirectory("graft_lostcommit_ckpt").toString
     val stateDir = Files.createTempDirectory("graft_lostcommit_state").toString
@@ -899,7 +901,7 @@ class StreamsExtraSpec extends SparkSuite {
 
   test("CAS mode, lost checkpoint commit: replaying an out-of-order batch into CAS state is idempotent (equal-version keeps base)") {
     import java.nio.file.Files
-    // The ordered-mode lost-commit test replays onto upsertSmallChanges;
+    // The ordered-mode lost-commit test replays onto the full-image merge;
     // this replays onto the CAS merge, exercising the path ordered mode
     // never hits: every replayed row meets the state at an EQUAL
     // version, and equal-keeps-base is what makes the replay a no-op.
