@@ -13,20 +13,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // harness files are single small parquets; default 128MB split =
-      // one scan task. 1MB splits let local[N] parallelize the scans
-      // (a real cluster gets this from many files/row groups instead).
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = "32")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions") // = SPARK_GRAFT_CPUS
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
       try {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid (r22 measurement, guide §1): how many propagation rounds does
   * [[graft.ops.Dedup.connectedComponents]] take on the REAL fixture pair
   * lists, and what does each cost? The CC loop is the shared engine of
@@ -14,17 +12,7 @@ import org.apache.spark.sql.SparkSession
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = "32")
     import org.apache.spark.sql.functions.col
 
     // warm scans + codegen so the probe measures the loop, not cold start

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev/judge aid: dump `.explain("formatted")` for every declared query
   * to <outDir>/<query>.txt. Drives the same `SparkEntry.queries` map the
   * bench and oracle gate use, at the same local config, so the captured
@@ -21,16 +19,7 @@ object PlanDump {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
     val only = if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(defaultCpus = "32")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -44,17 +44,7 @@ object ScaleSmoke {
         s"valid: ${sections.toSeq.sorted.mkString(", ")}")
     def want(s: String) = only.isEmpty || only(s)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = "32")
 
     val docs = sources.Tables.documents(spark, sfDir)
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1L

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // harness files are single small parquets; default 128MB split =
-      // one scan task. 1MB splits let local[N] parallelize the scans
-      // (a real cluster gets this from many files/row groups instead).
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = "4")
     new java.io.File(outDir).mkdirs()
     // failures must be VISIBLE, not absent: a query that dies writes no
     // output dir, so the driver's compare records nothing for it — r14

@@ -547,6 +547,83 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
 
+  /** How the materializer core finds a micro-batch's targets. */
+  private sealed trait Guard
+
+  /** One relation per stream. The envelopes may carry no `table`
+    * column; when they do, the batch must hold one table and the first
+    * one seen binds the checkpoint. `alias` is the public materializer
+    * and `twin` its multi-table counterpart, which the refusals name. */
+  private final case class SingleTable(alias: String, twin: String) extends Guard
+
+  /** The registered relations, demuxed on `table` and applied up to
+    * `parallelism` at a time. */
+  private final case class Demux(relations: Seq[Envelope.Relation], parallelism: Int)
+    extends Guard
+
+  /** One target of a micro-batch: the relation name (the registry name
+    * under [[Demux]]; under [[SingleTable]] the bound table or "", which
+    * the fixed-sink aliases ignore), its key column, and its events,
+    * projected on first use inside the apply. */
+  private final class Target(val name: String, val keyCol: String, project: => DataFrame) {
+    lazy val events: DataFrame = project
+  }
+
+  /** The materializer core: the one per-batch frame behind all eight
+    * public CDC materializers, which differ only in their sink identity,
+    * their [[Guard]] and their per-target apply. This is where the
+    * exactly-once argument lives — a replayable source (the checkpoint
+    * redelivers every uncommitted batch) plus an idempotent apply
+    * (*Structured Streaming*, SIGMOD 2018). Per micro-batch:
+    *
+    *  1. bind the checkpoint to `identity` ([[requireSinkBinding]]);
+    *  2. on the run's first batch, run `onStart`;
+    *  3. persist the batch: the guard's one action materializes the
+    *     cache and every apply reads it, where unpersisted each would
+    *     re-read the micro-batch source;
+    *  4. guard: [[requireSingleTable]] + [[requireTableBinding]] with
+    *     [[Envelope.project]], or one [[tableCensus]] with
+    *     [[Envelope.projectRelation]] per relation;
+    *  5. apply the targets with row events, plus the quiet ones when
+    *     `applyQuiet(firstBatch)` — quiet targets are otherwise skipped
+    *     outright, with no probe job, because the guard's count already
+    *     proved them empty;
+    *  6. run `afterBatch(batchId, firstBatch, applied target names)`,
+    *     then unpersist.
+    *
+    * The checkpoint commits only after the whole frame returns. */
+  private def materialize(envelopes: DataFrame, checkpoint: String, identity: String,
+      guard: Guard, applyQuiet: Boolean => Boolean = _ => false,
+      onStart: () => Unit = () => (),
+      afterBatch: (Long, Boolean, Set[String]) => Unit = (_, _, _) => ())(
+      apply: (Target, Long, Boolean) => Unit): StreamingQuery = {
+    val started = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boundTable = new java.util.concurrent.atomic.AtomicReference[String]()
+    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
+      val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
+      requireSinkBinding(hconf, checkpoint, identity)
+      val firstBatch = started.compareAndSet(false, true)
+      if (firstBatch) onStart()
+      val cached = batch.persist()
+      try {
+        val (counted, parallelism) = guard match {
+          case SingleTable(alias, twin) =>
+            val (tbl, n) = requireSingleTable(cached, alias, twin)
+            tbl.foreach(requireTableBinding(hconf, checkpoint, _, twin, boundTable))
+            (Seq(new Target(tbl.getOrElse(""), "id", Envelope.project(cached)) -> n), 1)
+          case Demux(relations, parallelism) =>
+            val census = tableCensus(cached, relations.map(_.name))
+            (relations.map(r => new Target(r.name, r.outName(r.key),
+              Envelope.projectRelation(cached.filter(col("table") === r.name), r)) ->
+              census.getOrElse(r.name, 0L)), parallelism)
+        }
+        val active = counted.collect { case (t, n) if n > 0L || applyQuiet(firstBatch) => t }
+        applyRelations(active, parallelism)(apply(_, batchId, firstBatch))
+        afterBatch(batchId, firstBatch, active.map(_.name).toSet)
+      } finally cached.unpersist()
+    })
+  }
+
   /** Streaming CDC MATERIALIZATION — the reference's whole loop as one
     * operator: envelope stream → per-batch last-image reduce → MERGE
     * into a queryable parquet state table ([[graft.ops.Merge]]). This
@@ -618,28 +695,13 @@ object Streams {
   def materializeCdc(envelopes: DataFrame, checkpoint: String,
       statePath: String, orderedTransport: Boolean = true,
       casTombstoneRetention: Long = Long.MaxValue,
-      statePartitions: Int = 0): StreamingQuery = {
-    val boundTable = new java.util.concurrent.atomic.AtomicReference[String]()
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint,
-        s"parquet:$statePath:${modeTag(orderedTransport)}${partitionTag(statePartitions)}")
-      // persist: the single-table guard, the empty-batch probe, and
-      // the merge each drive an action — unpersisted, every one
-      // re-reads the micro-batch source
-      val cached = batch.persist()
-      try {
-        val (tbl, n) = requireSingleTable(cached, "materializeCdc", "materializeCdcTables")
-        tbl.foreach(requireTableBinding(
-          batch.sparkSession.sparkContext.hadoopConfiguration, checkpoint, _,
-          "materializeCdcTables", boundTable))
-        if (n > 0L)
-          applyBatchParquet(Envelope.project(cached), statePath, batchId, "id",
-            orderedTransport, casTombstoneRetention, knownNonEmpty = true,
-            statePartitions = statePartitions)
-      } finally cached.unpersist()
-    })
-  }
+      statePartitions: Int = 0): StreamingQuery =
+    materialize(envelopes, checkpoint,
+      s"parquet:$statePath:${modeTag(orderedTransport)}${partitionTag(statePartitions)}",
+      SingleTable("materializeCdc", "materializeCdcTables")) { (t, batchId, _) =>
+      applyBatchParquet(t.events, statePath, batchId, t.keyCol, orderedTransport,
+        casTombstoneRetention, statePartitions)
+    }
 
   /** Streaming SCD2 MATERIALIZATION — q50's type-2 history kept
     * continuously current: envelope stream → per-batch incremental fold
@@ -691,31 +753,20 @@ object Streams {
     * transactional table format's row-level MERGE. */
   def materializeScd2(envelopes: DataFrame, checkpoint: String,
       statePath: String, statePartitions: Int = 0,
-      orderedTransport: Boolean = true): StreamingQuery = {
-    val boundTable = new java.util.concurrent.atomic.AtomicReference[String]()
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      // the transport mode is part of the sink identity: an unordered
-      // state carries zero-width tombstones the ordered fold would
-      // neither read nor regenerate — switching modes on a live
-      // checkpoint must refuse, not silently corrupt
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint, s"parquet:$statePath:scd2${partitionTag(statePartitions)}" +
-          (if (orderedTransport) "" else ":ooo"))
-      val cached = batch.persist()
-      try {
-        val (tbl, n) = requireSingleTable(cached, "materializeScd2", "materializeScd2Tables")
-        tbl.foreach(requireTableBinding(
-          batch.sparkSession.sparkContext.hadoopConfiguration, checkpoint, _,
-          "materializeScd2Tables", boundTable))
-        if (n > 0L)
-          applyBatchScd2(Envelope.project(cached), statePath, batchId, statePartitions,
-            orderedTransport = orderedTransport)
-      } finally cached.unpersist()
-    })
-  }
+      orderedTransport: Boolean = true): StreamingQuery =
+    // the transport mode is part of the sink identity: an unordered
+    // state carries zero-width tombstones the ordered fold would
+    // neither read nor regenerate — switching modes on a live
+    // checkpoint must refuse, not silently corrupt
+    materialize(envelopes, checkpoint,
+      s"parquet:$statePath:scd2${partitionTag(statePartitions)}${oooTag(orderedTransport)}",
+      SingleTable("materializeScd2", "materializeScd2Tables")) { (t, batchId, _) =>
+      applyBatchScd2(t.events, statePath, batchId, statePartitions, t.keyCol, orderedTransport)
+    }
 
-  /** One micro-batch folded into the SCD2 history parquet — see
-    * [[materializeScd2]] for the contract.
+  /** One micro-batch folded into the SCD2 history parquet — the
+    * per-target apply [[materialize]] runs for [[materializeScd2]] and
+    * [[materializeScd2Tables]]; see [[materializeScd2]] for the contract.
     *
     * `statePartitions > 0` gives the history the SAME bucket layout as
     * [[materializeCdc]]'s state (`graft_bucket = pmod(xxhash64(id), n)`,
@@ -927,231 +978,224 @@ object Streams {
   }
 
   /** One relation's reduced micro-batch merged into its parquet state —
-    * the per-batch body shared by [[materializeCdc]] (one relation) and
-    * [[materializeCdcTables]] (N demuxed relations, one call each).
-    * A sub-batch with NO events for this relation returns without
-    * touching the state: rewriting an untouched relation's whole state
-    * parquet every micro-batch would make quiet relations pay the
-    * busiest relation's write amplification. Callers that already
-    * counted the batch (the census / single-table guard, whose one agg
-    * job materializes the cache) pass `knownNonEmpty = true` and the
-    * probe job is skipped — no second pass re-asks an answered
-    * question. */
+    * the per-target apply [[materialize]] runs for [[materializeCdc]]
+    * (one relation) and [[materializeCdcTables]] (N demuxed relations,
+    * one call each). The caller skips relations with no events in the
+    * batch: rewriting an untouched relation's whole state parquet every
+    * micro-batch would make quiet relations pay the busiest relation's
+    * write amplification. */
   private def applyBatchParquet(projected: DataFrame, statePath: String,
       batchId: Long, keyCol: String, orderedTransport: Boolean,
-      casTombstoneRetention: Long, knownNonEmpty: Boolean = false,
-      statePartitions: Int = 0): Unit = {
-    if (knownNonEmpty || !projected.isEmpty) {
-      val spark = projected.sparkSession
-      val reduced = reduceBatch(projected, keyCol)
-      require(!reduced.columns.exists(_.equalsIgnoreCase(casBatchCol)),
-        s"[graft] materializeCdc reserves column '$casBatchCol' — rename it in the source schema")
-      if (statePartitions > 0)
-        require(!reduced.columns.exists(_.equalsIgnoreCase(bucketCol)),
-          s"[graft] partitioned materializeCdc reserves column '$bucketCol' — rename it in the source schema")
-      // ordered transports don't need the LSN once the batch is
-      // reduced; the CAS path keeps it as the state's version column,
-      // plus the arrival-batch stamp that ages tombstones for GC
-      val changes0 =
-        if (orderedTransport) reduced.drop("lsn")
-        else reduced.withColumn(casBatchCol, lit(batchId))
-      // Partitioned state: the key's bucket is part of the ON-DISK
-      // LAYOUT (dir names), so the hash and count are layout contracts
-      // — the sink-binding tag pins the count; xxhash64's seed-42
-      // output is deterministic and version-stable the same way the
-      // md5-based sampling buckets are.
-      val changes =
-        if (statePartitions > 0) changes0.withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
-        else changes0
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val state = new org.apache.hadoop.fs.Path(statePath)
-      val fs = state.getFileSystem(hconf)
-      recoverCdcState(fs, statePath)
-      val stateExists = fs.exists(state)
-      // Partitioned-mode batch classification:
-      //  - incremental (the steady state): on-disk layout is already
-      //    bucket-partitioned and the batch brings no schema drift →
-      //    read ONLY the touched buckets (partition-pruned scan) and
-      //    dynamic-overwrite ONLY those buckets. Per-batch write cost
-      //    is O(touched state), not O(state).
-      //  - full rewrite: first write, layout migration (state predates
-      //    partitioning), or additive/widening drift (EVERY partition's
-      //    schema must widen coherently — exactly the "rewrites whole →
-      //    immediately coherent" argument below, preserved by scoping
-      //    it to drift batches only). Goes through the rename-aside
-      //    swap like the legacy path.
-      // ONE read of the state per batch: every spark.read.parquet call
-      // re-runs partition discovery (a listing of every bucket dir —
-      // a driver job at large bucket counts), so the layout probe, the
-      // drift probe, and the base all share this DataFrame's file index
-      val onDisk = if (stateExists) Some(spark.read.parquet(statePath)) else None
-      val onDiskPartitioned = statePartitions > 0 &&
-        onDisk.exists(_.columns.contains(bucketCol))
-      val driftTarget =
-        if (orderedTransport) changes.drop("op").schema else changes.schema
-      val incremental = onDiskPartitioned &&
-        !needsWiden(onDisk.get.schema, driftTarget)
-      val touched: Seq[Int] =
-        if (incremental)
-          changes.select(col(bucketCol)).distinct().collect().map(_.getInt(0)).toSeq
-        else Seq.empty // bounded by statePartitions, like the census collect
-      val base0 = onDisk match {
-        case Some(full) if incremental => full.filter(col(bucketCol).isin(touched: _*))
-        case Some(full) if statePartitions > 0 && !onDiskPartitioned =>
-          // one-time layout migration: derive each state row's bucket
-          // from its key; this batch rewrites the state whole, after
-          // which every batch is incremental
-          full.withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
-        case Some(full) => full
-        case None =>
-          if (orderedTransport) changes.drop("op").limit(0)
-          else changes.limit(0) // first batch: empty state, same schema
-      }
-      if (stateExists) requireCompatibleDrift(base0.schema, changes.schema, statePath)
-      // ADDITIVE SCHEMA DRIFT: after a drift restart the change batch
-      // carries columns the accumulated state predates — null-fill the
-      // base so history widens in place (each batch rewrites the state
-      // parquet whole, so the widened schema is immediately coherent;
-      // no mergeSchema multi-footer read needed). The CAS merge needs
-      // identical columns, so a column the state has but an older
-      // producer's batch lacks is null-filled on the change side too —
-      // correct under whole-row full-image semantics: the image simply
-      // has no value for it. Ordered mode leaves changes untouched:
-      // requireCompatibleDrift refuses a state column the batch lacks,
-      // so after this widen the change set carries every base value
-      // column — the precondition of Merge's full-image shape.
-      //
-      // TYPE drift (int→bigint and friends) is handled for shared
-      // columns by upcasting BOTH sides to the wider numeric type —
-      // the other common ALTER COLUMN migration. Incompatible type
-      // changes fail loudly in the merge's analysis rather than
-      // guessing.
-      def widen(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame = {
-        val added = to.fields.filterNot(f => df.columns.exists(_.equalsIgnoreCase(f.name)))
-          .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-        to.fields.foldLeft(added) { (d, f) =>
-          d.columns.find(_.equalsIgnoreCase(f.name)) match {
-            case Some(own) =>
-              val ownType = d.schema(own).dataType
-              widerNumeric(ownType, f.dataType) match {
-                case Some(w) if w != ownType => d.withColumn(own, col(own).cast(w))
-                case _ => d
-              }
-            case None => d
-          }
+      casTombstoneRetention: Long, statePartitions: Int): Unit = {
+    val spark = projected.sparkSession
+    val reduced = reduceBatch(projected, keyCol)
+    require(!reduced.columns.exists(_.equalsIgnoreCase(casBatchCol)),
+      s"[graft] materializeCdc reserves column '$casBatchCol' — rename it in the source schema")
+    if (statePartitions > 0)
+      require(!reduced.columns.exists(_.equalsIgnoreCase(bucketCol)),
+        s"[graft] partitioned materializeCdc reserves column '$bucketCol' — rename it in the source schema")
+    // ordered transports don't need the LSN once the batch is
+    // reduced; the CAS path keeps it as the state's version column,
+    // plus the arrival-batch stamp that ages tombstones for GC
+    val changes0 =
+      if (orderedTransport) reduced.drop("lsn")
+      else reduced.withColumn(casBatchCol, lit(batchId))
+    // Partitioned state: the key's bucket is part of the ON-DISK
+    // LAYOUT (dir names), so the hash and count are layout contracts
+    // — the sink-binding tag pins the count; xxhash64's seed-42
+    // output is deterministic and version-stable the same way the
+    // md5-based sampling buckets are.
+    val changes =
+      if (statePartitions > 0) changes0.withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
+      else changes0
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val state = new org.apache.hadoop.fs.Path(statePath)
+    val fs = state.getFileSystem(hconf)
+    recoverCdcState(fs, statePath)
+    val stateExists = fs.exists(state)
+    // Partitioned-mode batch classification:
+    //  - incremental (the steady state): on-disk layout is already
+    //    bucket-partitioned and the batch brings no schema drift →
+    //    read ONLY the touched buckets (partition-pruned scan) and
+    //    dynamic-overwrite ONLY those buckets. Per-batch write cost
+    //    is O(touched state), not O(state).
+    //  - full rewrite: first write, layout migration (state predates
+    //    partitioning), or additive/widening drift (EVERY partition's
+    //    schema must widen coherently — exactly the "rewrites whole →
+    //    immediately coherent" argument below, preserved by scoping
+    //    it to drift batches only). Goes through the rename-aside
+    //    swap like the legacy path.
+    // ONE read of the state per batch: every spark.read.parquet call
+    // re-runs partition discovery (a listing of every bucket dir —
+    // a driver job at large bucket counts), so the layout probe, the
+    // drift probe, and the base all share this DataFrame's file index
+    val onDisk = if (stateExists) Some(spark.read.parquet(statePath)) else None
+    val onDiskPartitioned = statePartitions > 0 &&
+      onDisk.exists(_.columns.contains(bucketCol))
+    val driftTarget =
+      if (orderedTransport) changes.drop("op").schema else changes.schema
+    val incremental = onDiskPartitioned &&
+      !needsWiden(onDisk.get.schema, driftTarget)
+    val touched: Seq[Int] =
+      if (incremental)
+        changes.select(col(bucketCol)).distinct().collect().map(_.getInt(0)).toSeq
+      else Seq.empty // bounded by statePartitions, like the census collect
+    val base0 = onDisk match {
+      case Some(full) if incremental => full.filter(col(bucketCol).isin(touched: _*))
+      case Some(full) if statePartitions > 0 && !onDiskPartitioned =>
+        // one-time layout migration: derive each state row's bucket
+        // from its key; this batch rewrites the state whole, after
+        // which every batch is incremental
+        full.withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
+      case Some(full) => full
+      case None =>
+        if (orderedTransport) changes.drop("op").limit(0)
+        else changes.limit(0) // first batch: empty state, same schema
+    }
+    if (stateExists) requireCompatibleDrift(base0.schema, changes.schema, statePath)
+    // ADDITIVE SCHEMA DRIFT: after a drift restart the change batch
+    // carries columns the accumulated state predates — null-fill the
+    // base so history widens in place (each batch rewrites the state
+    // parquet whole, so the widened schema is immediately coherent;
+    // no mergeSchema multi-footer read needed). The CAS merge needs
+    // identical columns, so a column the state has but an older
+    // producer's batch lacks is null-filled on the change side too —
+    // correct under whole-row full-image semantics: the image simply
+    // has no value for it. Ordered mode leaves changes untouched:
+    // requireCompatibleDrift refuses a state column the batch lacks,
+    // so after this widen the change set carries every base value
+    // column — the precondition of Merge's full-image shape.
+    //
+    // TYPE drift (int→bigint and friends) is handled for shared
+    // columns by upcasting BOTH sides to the wider numeric type —
+    // the other common ALTER COLUMN migration. Incompatible type
+    // changes fail loudly in the merge's analysis rather than
+    // guessing.
+    def widen(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame = {
+      val added = to.fields.filterNot(f => df.columns.exists(_.equalsIgnoreCase(f.name)))
+        .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+      to.fields.foldLeft(added) { (d, f) =>
+        d.columns.find(_.equalsIgnoreCase(f.name)) match {
+          case Some(own) =>
+            val ownType = d.schema(own).dataType
+            widerNumeric(ownType, f.dataType) match {
+              case Some(w) if w != ownType => d.withColumn(own, col(own).cast(w))
+              case _ => d
+            }
+          case None => d
         }
       }
-      val base =
-        if (orderedTransport) widen(base0, changes.drop("op").schema)
-        else
-          // LSN canonicalization migration: change LSNs are normalized
-          // to fixed-width %08X/%08X at the projection edge (r10);
-          // state written by earlier code may hold raw variable-width
-          // wire LSNs, which compare WRONG against canonical ones.
-          // Normalizing the base's version column on read is a no-op
-          // for canonical values and auto-migrates old state — one
-          // touched batch completes the migration for the relation
-          // (per BUCKET in the partitioned layout: untouched buckets
-          // normalize on every read until their first rewrite).
-          widen(base0, changes.schema)
-            .withColumn("lsn", Envelope.normalizeLsn(col("lsn")))
-      val casChanges =
-        if (orderedTransport) changes
-        else widen(changes, base0.schema)
-      // Full images: pgoutput new-images are FULL rows, so a change's
-      // NULL is a real NULL and must clear the base value — coalesce
-      // semantics would diverge from last-image batch replay.
-      // Small-changes path (both modes): a micro-batch is ≪ the
-      // accumulated state, so the change set broadcasts and the state
-      // table is scanned, never shuffled — per-batch latency stays
-      // flat as state grows. Ordered mode scans the state ONCE: the
-      // pass-through anti join takes its touched keys from the
-      // pre-reduce events (the same key set, with no shuffle), so the
-      // reduce runs once, feeding only the change images. CAS mode
-      // joins both versions and scans it twice.
-      val merged0 =
-        if (orderedTransport)
-          graft.ops.Merge.upsertFullImages(base, changes, keyCol, "op",
-            touchedKeys = projected.select(col(keyCol)))
-        else
-          graft.ops.Merge.upsertVersioned(base, casChanges, keyCol, "lsn",
-            cacheMatched = false)
-      // Tombstone GC: a CAS winner keeps ITS OWN arrival-batch stamp
-      // (whole-row CAS), so a tombstone's age counts from the delete's
-      // arrival, not from later batches it merely survived. Replay of
-      // this batch recomputes the same batchId → the same compaction
-      // decision — idempotent like the merge itself. Rows carried over
-      // from a PRE-UPGRADE state (written before the stamp column
-      // existed — widen() null-fills it, and the CAS keeps base rows
-      // whole, so the NULL would persist) are backfilled with THIS
-      // batch's id: they age from the upgrade batch. Without the
-      // backfill, `batchId - NULL > retention` is NULL and a
-      // null-blind filter would delete every pre-upgrade tombstone on
-      // the first post-upgrade batch, letting late older updates
-      // resurrect deleted keys. The filter itself runs only under a
-      // FINITE horizon, matching materializeCdcJdbc's gate.
-      val merged =
-        if (orderedTransport) merged0
-        else {
-          val stamped = merged0.withColumn(casBatchCol,
-            coalesce(col(casBatchCol), lit(batchId)))
-          if (casTombstoneRetention == Long.MaxValue) stamped
-          else stamped.filter(
-            !(col("op") === "D" &&
-              lit(batchId) - col(casBatchCol) > lit(casTombstoneRetention)))
-        }
-      // ONE FILE PER BUCKET: partitionBy alone lets every write task
-      // emit a file into every bucket dir it holds rows for — at 32
-      // tasks × n buckets that is an n×32 small-file explosion whose
-      // per-file open cost then dominates every later read. Clustering
-      // rows by bucket first makes each bucket dir exactly one file
-      // (a bucket's rows hash to one shuffle partition).
-      def clustered(df: DataFrame): DataFrame = df.repartition(col(bucketCol))
-      if (incremental) {
-        // In-place dynamic partition overwrite: only the bucket dirs
-        // present in `merged` (= the touched buckets) are replaced;
-        // untouched buckets' files are not read, written, or moved.
-        // Crash safety WITHOUT the rename-aside swap: in-flight task
-        // output stages under dot-prefixed dirs readers ignore, and a
-        // crash anywhere before the checkpoint commit replays the
-        // batch — re-merging the same reduced changes into a bucket is
-        // idempotent whether that bucket was already replaced (same
-        // winning images / CAS keeps newer) or not. The swap's
-        // all-or-nothing guarantee is only needed when the WHOLE state
-        // is replaced, because there the danger is merging into an
-        // empty base; here every bucket always has a live dir.
-        clustered(merged).write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(bucketCol)
-          .parquet(statePath)
-      } else if (statePartitions > 0 && !stateExists) {
-        clustered(merged).write.mode("overwrite").partitionBy(bucketCol).parquet(statePath)
-      } else {
-        val tmp = new org.apache.hadoop.fs.Path(s"${statePath}__swap_$batchId")
-        val w0 = (if (statePartitions > 0) clustered(merged) else merged)
-          .write.mode("overwrite")
-        val w = if (statePartitions > 0) w0.partitionBy(bucketCol) else w0
-        w.parquet(tmp.toString)
-        // Rename-aside swap: `state` is moved, never deleted, before its
-        // replacement lands — each individual rename is atomic on a local
-        // FS / HDFS, so a crash at any point leaves a recoverable dir for
-        // recoverCdcState (old state at __prev, or the completed tmp).
-        // Hadoop FileSystems report many failures by RETURNING FALSE, not
-        // throwing — an unchecked false would let foreachBatch return
-        // normally, the checkpoint COMMIT the batch, and the next batch's
-        // recovery sweep the completed swap dir: that batch's changes gone
-        // with no replay. Throw on false so a failed swap aborts the batch
-        // BEFORE its checkpoint commit and the replayed MERGE lands it.
-        val prev = new org.apache.hadoop.fs.Path(s"${statePath}__prev")
-        if (fs.exists(state)) {
-          if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
-          checkedFs(fs.rename(state, prev), s"rename $state -> $prev")
-        }
-        checkedFs(fs.rename(tmp, state), s"rename $tmp -> $state")
-        // Failing the cleanup delete also aborts+replays; that replay is
-        // idempotent (state already swapped; recovery just sweeps prev).
+    }
+    val base =
+      if (orderedTransport) widen(base0, changes.drop("op").schema)
+      else
+        // LSN canonicalization migration: change LSNs are normalized
+        // to fixed-width %08X/%08X at the projection edge (r10);
+        // state written by earlier code may hold raw variable-width
+        // wire LSNs, which compare WRONG against canonical ones.
+        // Normalizing the base's version column on read is a no-op
+        // for canonical values and auto-migrates old state — one
+        // touched batch completes the migration for the relation
+        // (per BUCKET in the partitioned layout: untouched buckets
+        // normalize on every read until their first rewrite).
+        widen(base0, changes.schema)
+          .withColumn("lsn", Envelope.normalizeLsn(col("lsn")))
+    val casChanges =
+      if (orderedTransport) changes
+      else widen(changes, base0.schema)
+    // Full images: pgoutput new-images are FULL rows, so a change's
+    // NULL is a real NULL and must clear the base value — coalesce
+    // semantics would diverge from last-image batch replay.
+    // Small-changes path (both modes): a micro-batch is ≪ the
+    // accumulated state, so the change set broadcasts and the state
+    // table is scanned, never shuffled — per-batch latency stays
+    // flat as state grows. Ordered mode scans the state ONCE: the
+    // pass-through anti join takes its touched keys from the
+    // pre-reduce events (the same key set, with no shuffle), so the
+    // reduce runs once, feeding only the change images. CAS mode
+    // joins both versions and scans it twice.
+    val merged0 =
+      if (orderedTransport)
+        graft.ops.Merge.upsertFullImages(base, changes, keyCol, "op",
+          touchedKeys = projected.select(col(keyCol)))
+      else
+        graft.ops.Merge.upsertVersioned(base, casChanges, keyCol, "lsn",
+          cacheMatched = false)
+    // Tombstone GC: a CAS winner keeps ITS OWN arrival-batch stamp
+    // (whole-row CAS), so a tombstone's age counts from the delete's
+    // arrival, not from later batches it merely survived. Replay of
+    // this batch recomputes the same batchId → the same compaction
+    // decision — idempotent like the merge itself. Rows carried over
+    // from a PRE-UPGRADE state (written before the stamp column
+    // existed — widen() null-fills it, and the CAS keeps base rows
+    // whole, so the NULL would persist) are backfilled with THIS
+    // batch's id: they age from the upgrade batch. Without the
+    // backfill, `batchId - NULL > retention` is NULL and a
+    // null-blind filter would delete every pre-upgrade tombstone on
+    // the first post-upgrade batch, letting late older updates
+    // resurrect deleted keys. The filter itself runs only under a
+    // FINITE horizon, matching materializeCdcJdbc's gate.
+    val merged =
+      if (orderedTransport) merged0
+      else {
+        val stamped = merged0.withColumn(casBatchCol,
+          coalesce(col(casBatchCol), lit(batchId)))
+        if (casTombstoneRetention == Long.MaxValue) stamped
+        else stamped.filter(
+          !(col("op") === "D" &&
+            lit(batchId) - col(casBatchCol) > lit(casTombstoneRetention)))
+      }
+    // ONE FILE PER BUCKET: partitionBy alone lets every write task
+    // emit a file into every bucket dir it holds rows for — at 32
+    // tasks × n buckets that is an n×32 small-file explosion whose
+    // per-file open cost then dominates every later read. Clustering
+    // rows by bucket first makes each bucket dir exactly one file
+    // (a bucket's rows hash to one shuffle partition).
+    def clustered(df: DataFrame): DataFrame = df.repartition(col(bucketCol))
+    if (incremental) {
+      // In-place dynamic partition overwrite: only the bucket dirs
+      // present in `merged` (= the touched buckets) are replaced;
+      // untouched buckets' files are not read, written, or moved.
+      // Crash safety WITHOUT the rename-aside swap: in-flight task
+      // output stages under dot-prefixed dirs readers ignore, and a
+      // crash anywhere before the checkpoint commit replays the
+      // batch — re-merging the same reduced changes into a bucket is
+      // idempotent whether that bucket was already replaced (same
+      // winning images / CAS keeps newer) or not. The swap's
+      // all-or-nothing guarantee is only needed when the WHOLE state
+      // is replaced, because there the danger is merging into an
+      // empty base; here every bucket always has a live dir.
+      clustered(merged).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(bucketCol)
+        .parquet(statePath)
+    } else if (statePartitions > 0 && !stateExists) {
+      clustered(merged).write.mode("overwrite").partitionBy(bucketCol).parquet(statePath)
+    } else {
+      val tmp = new org.apache.hadoop.fs.Path(s"${statePath}__swap_$batchId")
+      val w0 = (if (statePartitions > 0) clustered(merged) else merged)
+        .write.mode("overwrite")
+      val w = if (statePartitions > 0) w0.partitionBy(bucketCol) else w0
+      w.parquet(tmp.toString)
+      // Rename-aside swap: `state` is moved, never deleted, before its
+      // replacement lands — each individual rename is atomic on a local
+      // FS / HDFS, so a crash at any point leaves a recoverable dir for
+      // recoverCdcState (old state at __prev, or the completed tmp).
+      // Hadoop FileSystems report many failures by RETURNING FALSE, not
+      // throwing — an unchecked false would let foreachBatch return
+      // normally, the checkpoint COMMIT the batch, and the next batch's
+      // recovery sweep the completed swap dir: that batch's changes gone
+      // with no replay. Throw on false so a failed swap aborts the batch
+      // BEFORE its checkpoint commit and the replayed MERGE lands it.
+      val prev = new org.apache.hadoop.fs.Path(s"${statePath}__prev")
+      if (fs.exists(state)) {
         if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
+        checkedFs(fs.rename(state, prev), s"rename $state -> $prev")
       }
+      checkedFs(fs.rename(tmp, state), s"rename $tmp -> $state")
+      // Failing the cleanup delete also aborts+replays; that replay is
+      // idempotent (state already swapped; recovery just sweeps prev).
+      if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
     }
   }
 
@@ -1210,25 +1254,12 @@ object Streams {
       maxConcurrentRelations: Int = 1,
       statePartitions: Int = 0): StreamingQuery = {
     requireDistinctStateDirs(relations)
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint,
-        s"parquet-multi:$stateRoot:${modeTag(orderedTransport)}${partitionTag(statePartitions)}")
-      val cached = batch.persist()
-      try {
-        val census = tableCensus(cached, relations.map(_.name))
-        // quiet relations are skipped OUTRIGHT — the census already
-        // proved they have no events, so no probe job runs for them
-        applyRelations(relations.filter(r => census.getOrElse(r.name, 0L) > 0L),
-          maxConcurrentRelations) { rel =>
-          applyBatchParquet(
-            Envelope.projectRelation(cached.filter(col("table") === rel.name), rel),
-            s"$stateRoot/${rel.name}", batchId, rel.outName(rel.key),
-            orderedTransport, casTombstoneRetention, knownNonEmpty = true,
-            statePartitions = statePartitions)
-        }
-      } finally cached.unpersist()
-    })
+    materialize(envelopes, checkpoint,
+      s"parquet-multi:$stateRoot:${modeTag(orderedTransport)}${partitionTag(statePartitions)}",
+      Demux(relations, maxConcurrentRelations)) { (t, batchId, _) =>
+      applyBatchParquet(t.events, s"$stateRoot/${t.name}", batchId, t.keyCol,
+        orderedTransport, casTombstoneRetention, statePartitions)
+    }
   }
 
   /** Multi-table SCD2 materialization — [[materializeScd2]] demuxed per
@@ -1246,22 +1277,12 @@ object Streams {
       statePartitions: Int = 0,
       orderedTransport: Boolean = true): StreamingQuery = {
     requireDistinctStateDirs(relations)
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint, s"parquet-multi:$stateRoot:scd2${partitionTag(statePartitions)}" +
-          (if (orderedTransport) "" else ":ooo"))
-      val cached = batch.persist()
-      try {
-        val census = tableCensus(cached, relations.map(_.name))
-        applyRelations(relations.filter(r => census.getOrElse(r.name, 0L) > 0L),
-          maxConcurrentRelations) { rel =>
-          applyBatchScd2(
-            Envelope.projectRelation(cached.filter(col("table") === rel.name), rel),
-            s"$stateRoot/${rel.name}", batchId, statePartitions,
-            keyCol = rel.outName(rel.key), orderedTransport = orderedTransport)
-        }
-      } finally cached.unpersist()
-    })
+    materialize(envelopes, checkpoint,
+      s"parquet-multi:$stateRoot:scd2${partitionTag(statePartitions)}${oooTag(orderedTransport)}",
+      Demux(relations, maxConcurrentRelations)) { (t, batchId, _) =>
+      applyBatchScd2(t.events, s"$stateRoot/${t.name}", batchId, statePartitions,
+        t.keyCol, orderedTransport)
+    }
   }
 
   /** Each relation's state dir sits NEXT TO its siblings under
@@ -1313,14 +1334,13 @@ object Streams {
     * into recovery), the batch misses its checkpoint commit, and the
     * replay re-lands completed relations as no-ops — the exact
     * contract the mid-demux crash test pins for the sequential path. */
-  private def applyRelations(relations: Seq[Envelope.Relation], parallelism: Int)(
-      apply: Envelope.Relation => Unit): Unit =
-    if (parallelism <= 1 || relations.size <= 1) relations.foreach(apply)
+  private def applyRelations[T](targets: Seq[T], parallelism: Int)(apply: T => Unit): Unit =
+    if (parallelism <= 1 || targets.size <= 1) targets.foreach(apply)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, relations.size))
+        math.min(parallelism, targets.size))
       try {
-        val futures = relations.map { r =>
+        val futures = targets.map { r =>
           pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit = apply(r)
           })
@@ -1371,28 +1391,9 @@ object Streams {
   private def requireTableBinding(hconf: org.apache.hadoop.conf.Configuration,
       checkpoint: String, observed: String, alt: String,
       cache: java.util.concurrent.atomic.AtomicReference[String]): Unit = {
-    val bound = cache.get()
-    if (bound == null) {
-      val p = new org.apache.hadoop.fs.Path(checkpoint, "graft_source_table")
-      val fs = p.getFileSystem(hconf)
-      val stored =
-        if (fs.exists(p)) {
-          val in = fs.open(p)
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-            new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-          } finally in.close()
-        } else {
-          val tmp = new org.apache.hadoop.fs.Path(checkpoint, "graft_source_table.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(observed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          checkedFs(fs.rename(tmp, p), s"bind source table $tmp -> $p")
-          observed
-        }
-      cache.set(stored)
-    }
+    if (cache.get() == null)
+      cache.set(bindCheckpointFile(hconf,
+        new org.apache.hadoop.fs.Path(checkpoint, "graft_source_table"), observed))
     val expect = cache.get()
     require(expect == observed,
       s"[graft] this checkpoint materializes relation '$expect' but the stream now " +
@@ -1553,31 +1554,45 @@ object Streams {
   private def requireSinkBinding(hconf: org.apache.hadoop.conf.Configuration,
       checkpoint: String, identity: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(checkpoint, "graft_sink_identity")
+    val stored = bindCheckpointFile(hconf, p, identity)
+    require(stored == identity,
+      s"[graft] checkpoint $checkpoint is bound to sink '$stored' but this query " +
+        s"materializes '$identity' — reusing offsets against a different sink silently " +
+        s"skips every already-committed batch there; move the data and delete " +
+        s"$p to re-bind deliberately")
+  }
+
+  /** Read the small UTF-8 checkpoint file `p`; when it is absent,
+    * create it holding `value` first. Returns the stored value.
+    * The create is temp + rename, so a crash mid-write cannot leave a
+    * partial file that fails every restart. */
+  private def bindCheckpointFile(hconf: org.apache.hadoop.conf.Configuration,
+      p: org.apache.hadoop.fs.Path, value: String): String = {
     val fs = p.getFileSystem(hconf)
     if (fs.exists(p)) {
       val in = fs.open(p)
-      val stored = try {
+      try {
         val buf = new java.io.ByteArrayOutputStream()
         org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
         new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
       } finally in.close()
-      require(stored == identity,
-        s"[graft] checkpoint $checkpoint is bound to sink '$stored' but this query " +
-          s"materializes '$identity' — reusing offsets against a different sink silently " +
-          s"skips every already-committed batch there; move the data and delete " +
-          s"$p to re-bind deliberately")
     } else {
-      val tmp = new org.apache.hadoop.fs.Path(checkpoint, "graft_sink_identity.tmp")
+      val tmp = p.suffix(".tmp")
       val out = fs.create(tmp, true)
-      try out.write(identity.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      checkedFs(fs.rename(tmp, p), s"bind sink identity $tmp -> $p")
+      checkedFs(fs.rename(tmp, p), s"bind $tmp -> $p")
+      value
     }
   }
 
   /** The transport-mode component of a sink identity. */
   private def modeTag(orderedTransport: Boolean): String =
     if (orderedTransport) "ordered" else "cas"
+
+  /** The SCD2 sinks' transport-mode suffix: none for ordered transport. */
+  private def oooTag(orderedTransport: Boolean): String =
+    if (orderedTransport) "" else ":ooo"
 
   /** Binding-tag suffix for the partitioned state layout: a restart
     * that changes the bucket COUNT would silently re-route keys into
@@ -1646,32 +1661,23 @@ object Streams {
       url: String, table: String, props: Map[String, String] = Map.empty,
       orderedTransport: Boolean = true,
       casTombstoneRetention: Long = Long.MaxValue,
-      allowSinkOnlyColumns: Boolean = false): StreamingQuery = {
-    // one canonical-LSN probe per stream START, not per batch (it is a
-    // full scan): a pre-canonicalization CAS table mis-orders against
-    // canonical change LSNs, so refuse to stream onto one
-    val probed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val boundTable = new java.util.concurrent.atomic.AtomicReference[String]()
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint, s"jdbc:$url#$table:${modeTag(orderedTransport)}")
-      // first batch of this run: canonical-version probe + NULL-stamp
-      // backfill — both O(state) scans that must not recur per batch
-      val firstBatch = probed.compareAndSet(false, true)
-      if (!orderedTransport && firstBatch)
-        graft.sources.Jdbc.requireCanonicalVersions(url, table, "lsn", props)
-      val cached = batch.persist()
-      try {
-        val (tbl, _) = requireSingleTable(cached, "materializeCdcJdbc", "materializeCdcJdbcTables")
-        tbl.foreach(requireTableBinding(
-          batch.sparkSession.sparkContext.hadoopConfiguration, checkpoint, _,
-          "materializeCdcJdbcTables", boundTable))
-        applyBatchJdbc(Envelope.project(cached), url, table, batchId, "id", props,
+      allowSinkOnlyColumns: Boolean = false): StreamingQuery =
+    materialize(envelopes, checkpoint, s"jdbc:$url#$table:${modeTag(orderedTransport)}",
+      SingleTable("materializeCdcJdbc", "materializeCdcJdbcTables"),
+      // a batch with no row events still applies: ensureTable creates
+      // the table on the first batch (see applyBatchJdbc)
+      applyQuiet = _ => true,
+      // one canonical-LSN probe per stream START, not per batch (it is
+      // a full scan): a pre-canonicalization CAS table mis-orders
+      // against canonical change LSNs, so refuse to stream onto one
+      onStart = () => if (!orderedTransport)
+        graft.sources.Jdbc.requireCanonicalVersions(url, table, "lsn", props)) {
+      (t, batchId, firstBatch) =>
+        // the NULL-stamp backfill is an O(state) scan: first batch only
+        applyBatchJdbc(t.events, url, table, batchId, t.keyCol, props,
           orderedTransport, casTombstoneRetention, allowSinkOnlyColumns,
           backfillStamps = firstBatch)
-      } finally cached.unpersist()
-    })
-  }
+    }
 
   /** SCD2 → JDBC materialization: [[materializeScd2]]'s type-2 history
     * landed in a queryable warehouse table instead of parquet state —
@@ -1703,24 +1709,12 @@ object Streams {
   def materializeScd2Jdbc(envelopes: DataFrame, checkpoint: String,
       url: String, table: String, props: Map[String, String] = Map.empty,
       allowSinkOnlyColumns: Boolean = false,
-      orderedTransport: Boolean = true): StreamingQuery = {
-    val boundTable = new java.util.concurrent.atomic.AtomicReference[String]()
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint, s"jdbc-scd2:$url#$table" +
-          (if (orderedTransport) "" else ":ooo"))
-      val cached = batch.persist()
-      try {
-        val (tbl, n) = requireSingleTable(cached, "materializeScd2Jdbc", "materializeScd2Tables")
-        tbl.foreach(requireTableBinding(
-          batch.sparkSession.sparkContext.hadoopConfiguration, checkpoint, _,
-          "materializeScd2Tables", boundTable))
-        if (n > 0L)
-          applyBatchScd2Jdbc(Envelope.project(cached), url, table, "id",
-            props, allowSinkOnlyColumns, orderedTransport)
-      } finally cached.unpersist()
-    })
-  }
+      orderedTransport: Boolean = true): StreamingQuery =
+    materialize(envelopes, checkpoint, s"jdbc-scd2:$url#$table${oooTag(orderedTransport)}",
+      SingleTable("materializeScd2Jdbc", "materializeScd2JdbcTables")) { (t, _, _) =>
+      applyBatchScd2Jdbc(t.events, url, table, t.keyCol, props, allowSinkOnlyColumns,
+        orderedTransport)
+    }
 
   /** Max keys per pushed-down IN predicate on the unordered SCD2 JDBC
     * read path — wide batches chunk into several pushed scans instead
@@ -1730,8 +1724,8 @@ object Streams {
   private[streaming] val scd2JdbcInChunk = 1000
 
   /** One relation's micro-batch folded into its JDBC SCD2 history —
-    * the per-batch body shared by [[materializeScd2Jdbc]] and
-    * [[materializeScd2JdbcTables]] (the [[applyBatchJdbc]] split,
+    * the per-target apply [[materialize]] runs for [[materializeScd2Jdbc]]
+    * and [[materializeScd2JdbcTables]] (the [[applyBatchJdbc]] split,
     * SCD2-shaped). */
   private def applyBatchScd2Jdbc(projected: DataFrame, url: String,
       table: String, keyCol: String, props: Map[String, String],
@@ -1820,32 +1814,19 @@ object Streams {
       allowSinkOnlyColumns: Boolean = false,
       orderedTransport: Boolean = true): StreamingQuery = {
     requireDistinctTargets(relations, tableNames)
-    val started = new java.util.concurrent.atomic.AtomicBoolean(false)
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint,
-        s"jdbc-scd2-multi:$url#${relations.map(r => tableNames(r.name)).sorted.mkString(",")}" +
-          (if (orderedTransport) "" else ":ooo"))
-      val firstBatch = started.compareAndSet(false, true)
-      val cached = batch.persist()
-      try {
-        val census = tableCensus(cached, relations.map(_.name))
-        val active =
-          if (firstBatch) relations
-          else relations.filter(r => census.getOrElse(r.name, 0L) > 0L)
-        applyRelations(active, maxConcurrentRelations) { rel =>
-          applyBatchScd2Jdbc(
-            Envelope.projectRelation(cached.filter(col("table") === rel.name), rel),
-            url, tableNames(rel.name), rel.outName(rel.key), props, allowSinkOnlyColumns,
-            orderedTransport)
-        }
-      } finally cached.unpersist()
-    })
+    materialize(envelopes, checkpoint,
+      s"jdbc-scd2-multi:$url#${relations.map(r => tableNames(r.name)).sorted.mkString(",")}" +
+        oooTag(orderedTransport),
+      Demux(relations, maxConcurrentRelations), applyQuiet = firstBatch => firstBatch) {
+      (t, _, _) =>
+        applyBatchScd2Jdbc(t.events, url, tableNames(t.name), t.keyCol, props,
+          allowSinkOnlyColumns, orderedTransport)
+    }
   }
 
   /** One relation's reduced micro-batch applied to its JDBC table —
-    * the per-batch body shared by [[materializeCdcJdbc]] and
-    * [[materializeCdcJdbcTables]]. No empty-batch skip HERE:
+    * the per-target apply [[materialize]] runs for [[materializeCdcJdbc]]
+    * and [[materializeCdcJdbcTables]]. No empty-batch skip HERE:
     * `ensureTable` is a scoped metadata read (plus the widening ALTER
     * when drift landed) and the table is created eagerly on the first
     * batch either way. The multi-table demux skips quiet relations
@@ -1933,50 +1914,36 @@ object Streams {
     require(casQuietGcEvery > 0L,
       s"[graft] casQuietGcEvery must be positive (got $casQuietGcEvery)")
     requireDistinctTargets(relations, tableNames)
-    val probed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    runForeachBatch(envelopes, checkpoint, (batch, batchId) => {
-      requireSinkBinding(batch.sparkSession.sparkContext.hadoopConfiguration,
-        checkpoint,
-        s"jdbc-multi:$url#${relations.map(r => tableNames(r.name)).sorted.mkString(",")}:${modeTag(orderedTransport)}")
-      val firstBatch = probed.compareAndSet(false, true)
-      if (!orderedTransport && firstBatch)
+    materialize(envelopes, checkpoint,
+      s"jdbc-multi:$url#${relations.map(r => tableNames(r.name)).sorted.mkString(",")}:${modeTag(orderedTransport)}",
+      Demux(relations, maxConcurrentRelations),
+      // the FIRST batch of a run applies every relation (eager table
+      // creation + stamp backfill, both first-batch contracts); later
+      // batches skip quiet relations outright — zero Spark jobs AND
+      // zero JDBC round-trips for the catalog's untouched majority
+      applyQuiet = firstBatch => firstBatch,
+      onStart = () => if (!orderedTransport)
         relations.foreach(rel =>
-          graft.sources.Jdbc.requireCanonicalVersions(url, tableNames(rel.name), "lsn", props))
-      val cached = batch.persist()
-      try {
-        val census = tableCensus(cached, relations.map(_.name))
-        // the FIRST batch of a run applies every relation (eager table
-        // creation + stamp backfill, both first-batch contracts); later
-        // batches skip quiet relations outright — zero Spark jobs AND
-        // zero JDBC round-trips for the catalog's untouched majority
-        val active =
-          if (firstBatch) relations
-          else relations.filter(r => census.getOrElse(r.name, 0L) > 0L)
-        applyRelations(active, maxConcurrentRelations) { rel =>
-          applyBatchJdbc(
-            Envelope.projectRelation(cached.filter(col("table") === rel.name), rel),
-            url, tableNames(rel.name), batchId, rel.outName(rel.key), props,
-            orderedTransport, casTombstoneRetention, allowSinkOnlyColumns,
-            backfillStamps = firstBatch)
-        }
-        // the quiet-relation skip also skips applyBatchJdbc's tombstone
-        // GC, so a relation that takes deletes then goes quiet would
-        // hold its tombstones past the retention horizon forever. Sweep
-        // quiet relations' tombstones every casQuietGcEvery-th batch:
-        // one DELETE round-trip per quiet relation, amortized to ~zero
-        // per batch, and idempotent under checkpoint replay (the same
-        // batchId recomputes the same horizon). Tables exist — the
-        // first batch of every run applies ALL relations (ensureTable).
+          graft.sources.Jdbc.requireCanonicalVersions(url, tableNames(rel.name), "lsn", props)),
+      // the quiet-relation skip also skips applyBatchJdbc's tombstone
+      // GC, so a relation that takes deletes then goes quiet would
+      // hold its tombstones past the retention horizon forever. Sweep
+      // quiet relations' tombstones every casQuietGcEvery-th batch:
+      // one DELETE round-trip per quiet relation, amortized to ~zero
+      // per batch, and idempotent under checkpoint replay (the same
+      // batchId recomputes the same horizon). Tables exist — the
+      // first batch of every run applies ALL relations (ensureTable).
+      afterBatch = (batchId, firstBatch, applied) =>
         if (!orderedTransport && casTombstoneRetention != Long.MaxValue &&
-            !firstBatch && batchId % casQuietGcEvery == 0L) {
-          val activeNames = active.map(_.name).toSet
-          relations.filterNot(r => activeNames(r.name)).foreach { rel =>
+            !firstBatch && batchId % casQuietGcEvery == 0L)
+          relations.filterNot(r => applied(r.name)).foreach { rel =>
             graft.sources.Jdbc.deleteExpiredTombstones(url, tableNames(rel.name),
               "op", casBatchCol, batchId - casTombstoneRetention, props)
-          }
-        }
-      } finally cached.unpersist()
-    })
+          }) { (t, batchId, firstBatch) =>
+      applyBatchJdbc(t.events, url, tableNames(t.name), batchId, t.keyCol, props,
+        orderedTransport, casTombstoneRetention, allowSinkOnlyColumns,
+        backfillStamps = firstBatch)
+    }
   }
 
   /** STREAMING INDEX MAINTENANCE — the incremental complement of the

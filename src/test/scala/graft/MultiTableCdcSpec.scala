@@ -209,18 +209,32 @@ class MultiTableCdcSpec extends SparkSuite {
   }
 
   test("negative pin: the JDBC single-table materializer also refuses the mixed stream") {
+    // every single-table materializer refuses, and points the user at
+    // ITS OWN multi-table twin — not a sibling of the other sink kind
     val in = Fixture.materializeMultiTableChunks(3)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mtnegj_ckpt").toString
-    val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      Streams.materializeCdcJdbc(
-        Streams.envelopeStream(spark, in, schema = union), ckpt,
-        "jdbc:derby:memory:graft_mtnegj;create=true", "students_live")
-        .awaitTermination()
-    }
+    val url = "jdbc:derby:memory:graft_mtnegj;create=true"
+    def dir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    type Start = (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery
+    val cases: Seq[(String, String, Start)] = Seq(
+      ("materializeCdc", "materializeCdcTables",
+        (s, ck) => Streams.materializeCdc(s, ck, dir("graft_mtneg_state") + "/students")),
+      ("materializeScd2", "materializeScd2Tables",
+        (s, ck) => Streams.materializeScd2(s, ck, dir("graft_mtneg_state") + "/students")),
+      ("materializeCdcJdbc", "materializeCdcJdbcTables",
+        (s, ck) => Streams.materializeCdcJdbc(s, ck, url, "students_live")),
+      ("materializeScd2Jdbc", "materializeScd2JdbcTables",
+        (s, ck) => Streams.materializeScd2Jdbc(s, ck, url, "students_hist")))
     def msgs(t: Throwable): String = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .map(x => Option(x.getMessage).getOrElse("")).mkString("\n")
-    assert(msgs(failed).contains("materializes ONE relation") &&
-      msgs(failed).contains("materializeCdcJdbcTables"), msgs(failed))
+    for ((alias, twin, start) <- cases) {
+      val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        start(Streams.envelopeStream(spark, in, schema = union), dir("graft_mtnegj_ckpt"))
+          .awaitTermination()
+      }
+      assert(msgs(failed).contains(s"$alias materializes ONE relation") &&
+        msgs(failed).contains(s"must go through $twin,"), s"$alias:\n${msgs(failed)}")
+      quiesce()
+    }
   }
 
   test("negative pin: an unregistered relation in the stream fails the demux loudly instead of dropping its events") {
@@ -1135,6 +1149,90 @@ class MultiTableCdcSpec extends SparkSuite {
     quiesce()
     assert(relations.map(landed) == before,
       s"replaying a batch whose commit was lost must be a no-op on every relation's history (ordered=$ordered)")
+    }
+  }
+
+  test("golden pin: every materializer binds its checkpoint to a byte-exact sink identity") {
+    // graft_sink_identity is compared byte-for-byte on every restart: a
+    // changed template refuses every existing checkpoint. Each case
+    // streams one envelope into a fresh checkpoint and reads the file back.
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val src = Files.createTempDirectory("graft_golden_in")
+    Files.write(src.resolve("chunk_0000.jsonl"),
+      """{"lsn": "0/00000010", "tag": "insert", "table": "students", "new": {"id": 1, "first_name": "a", "last_name": "b", "date_of_birth": "1990-01-01", "status_id": 1}}"""
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def in = Streams.envelopeStream(spark, src.toString, schema = union)
+    val st = Files.createTempDirectory("graft_golden_state").toString
+    val url = "jdbc:derby:memory:graft_golden;create=true"
+    val cases: Seq[(String, String => StreamingQuery)] = Seq(
+      s"parquet:$st/c_o:ordered" ->
+        (ck => Streams.materializeCdc(in, ck, s"$st/c_o")),
+      s"parquet:$st/c_c:cas" ->
+        (ck => Streams.materializeCdc(in, ck, s"$st/c_c", orderedTransport = false)),
+      s"parquet:$st/c_o4:ordered:b4" ->
+        (ck => Streams.materializeCdc(in, ck, s"$st/c_o4", statePartitions = 4)),
+      s"parquet:$st/c_c4:cas:b4" ->
+        (ck => Streams.materializeCdc(in, ck, s"$st/c_c4", orderedTransport = false,
+          statePartitions = 4)),
+      s"parquet:$st/s_o:scd2" ->
+        (ck => Streams.materializeScd2(in, ck, s"$st/s_o")),
+      s"parquet:$st/s_u:scd2:ooo" ->
+        (ck => Streams.materializeScd2(in, ck, s"$st/s_u", orderedTransport = false)),
+      s"parquet:$st/s_o4:scd2:b4" ->
+        (ck => Streams.materializeScd2(in, ck, s"$st/s_o4", statePartitions = 4)),
+      s"parquet:$st/s_u4:scd2:b4:ooo" ->
+        (ck => Streams.materializeScd2(in, ck, s"$st/s_u4", statePartitions = 4,
+          orderedTransport = false)),
+      s"parquet-multi:$st/ct_o:ordered" ->
+        (ck => Streams.materializeCdcTables(in, ck, s"$st/ct_o", relations)),
+      s"parquet-multi:$st/ct_c:cas" ->
+        (ck => Streams.materializeCdcTables(in, ck, s"$st/ct_c", relations,
+          orderedTransport = false)),
+      s"parquet-multi:$st/ct_o4:ordered:b4" ->
+        (ck => Streams.materializeCdcTables(in, ck, s"$st/ct_o4", relations,
+          statePartitions = 4)),
+      s"parquet-multi:$st/ct_c4:cas:b4" ->
+        (ck => Streams.materializeCdcTables(in, ck, s"$st/ct_c4", relations,
+          orderedTransport = false, statePartitions = 4)),
+      s"parquet-multi:$st/st_o:scd2" ->
+        (ck => Streams.materializeScd2Tables(in, ck, s"$st/st_o", relations)),
+      s"parquet-multi:$st/st_u:scd2:ooo" ->
+        (ck => Streams.materializeScd2Tables(in, ck, s"$st/st_u", relations,
+          orderedTransport = false)),
+      s"parquet-multi:$st/st_o4:scd2:b4" ->
+        (ck => Streams.materializeScd2Tables(in, ck, s"$st/st_o4", relations,
+          statePartitions = 4)),
+      s"parquet-multi:$st/st_u4:scd2:b4:ooo" ->
+        (ck => Streams.materializeScd2Tables(in, ck, s"$st/st_u4", relations,
+          statePartitions = 4, orderedTransport = false)),
+      s"jdbc:$url#live_o:ordered" ->
+        (ck => Streams.materializeCdcJdbc(in, ck, url, "live_o")),
+      s"jdbc:$url#live_c:cas" ->
+        (ck => Streams.materializeCdcJdbc(in, ck, url, "live_c", orderedTransport = false)),
+      s"jdbc-scd2:$url#hist_o" ->
+        (ck => Streams.materializeScd2Jdbc(in, ck, url, "hist_o")),
+      s"jdbc-scd2:$url#hist_u:ooo" ->
+        (ck => Streams.materializeScd2Jdbc(in, ck, url, "hist_u", orderedTransport = false)),
+      s"jdbc-multi:$url#live_status_o,live_students_o:ordered" ->
+        (ck => Streams.materializeCdcJdbcTables(in, ck, url, relations,
+          tableNames = n => s"live_${n}_o")),
+      s"jdbc-multi:$url#live_status_c,live_students_c:cas" ->
+        (ck => Streams.materializeCdcJdbcTables(in, ck, url, relations,
+          tableNames = n => s"live_${n}_c", orderedTransport = false)),
+      s"jdbc-scd2-multi:$url#hist_status_o,hist_students_o" ->
+        (ck => Streams.materializeScd2JdbcTables(in, ck, url, relations,
+          tableNames = n => s"hist_${n}_o")),
+      s"jdbc-scd2-multi:$url#hist_status_u,hist_students_u:ooo" ->
+        (ck => Streams.materializeScd2JdbcTables(in, ck, url, relations,
+          tableNames = n => s"hist_${n}_u", orderedTransport = false)))
+    for ((identity, start) <- cases) {
+      val ckpt = Files.createTempDirectory("graft_golden_ckpt").toString
+      start(ckpt).awaitTermination()
+      quiesce()
+      val bound = new String(Files.readAllBytes(Paths.get(ckpt, "graft_sink_identity")),
+        java.nio.charset.StandardCharsets.UTF_8)
+      assert(bound == identity)
     }
   }
 }
