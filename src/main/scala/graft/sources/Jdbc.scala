@@ -537,14 +537,24 @@ object Jdbc {
 
   /** SCD2 (type-2) history apply for ORDERED transports — the JDBC
     * landing of [[graft.streaming.Streams.materializeScd2]]'s
-    * contract: per key, every event PAST the key's stored high-water
-    * mark (max valid_from/valid_to already in the table — a delete's
-    * LSN lives on as a valid_to, exactly as in the parquet state)
-    * first CLOSES the key's open interval (`UPDATE … SET valid_to,
-    * is_current = 0 WHERE is_current = 1`) and then, unless it is a
-    * delete, INSERTS the new open row. Closed history rows are
-    * append-only — only the open row ever updates, the warehouse-
-    * friendly write shape.
+    * contract. Per key, the fresh events are those PAST the key's
+    * stored high-water mark (max valid_from/valid_to already in the
+    * table — a delete's LSN lives on as a valid_to, exactly as in the
+    * parquet state), and they collapse to:
+    *  - one probe: the high-water `SELECT`, once per key;
+    *  - one close: `UPDATE … SET valid_to, is_current = 0 WHERE
+    *    is_current = 1` at the first fresh event's valid_from;
+    *  - one INSERT per fresh non-delete event, its interval already
+    *    known: valid_to is the next fresh event's valid_from with
+    *    `is_current = 0`, the key's last one lands open (`NULL, 1`).
+    *    A delete inserts nothing.
+    * That is [[graft.cdc.Envelope.scd2Fold]]'s interval rule, so the
+    * rows are exactly those of closing and inserting event by event.
+    * Closes and inserts are JDBC statement batches, flushed at a key
+    * boundary after at most [[keysPerFlush]] keys: all closes, then
+    * all inserts (keys are unique per partition, so no close reaches
+    * a pending insert). Closed history rows are append-only — only the
+    * stored open row ever updates, the warehouse-friendly write shape.
     *
     * Replay is a no-op row-for-row: a replayed event's valid_from is
     * ≤ the key's high water and is screened out, so at-least-once
@@ -553,8 +563,9 @@ object Jdbc {
     * must be repartitioned by key and sorted by (key, valid_from) so
     * one key's events apply in LSN order inside one transaction
     * ([[graft.streaming.Streams.materializeScd2Jdbc]] guarantees
-    * both). At scale each hwm probe and close is a per-key point
-    * lookup — production indexes (key) or (key, is_current). */
+    * both). The history table carries no index, so each probe and
+    * close scans it; production indexes (key, is_current) to make
+    * them point lookups. */
   def applyScd2(events: DataFrame, url: String, table: String,
       keyCol: String, tagCol: String, props: Map[String, String] = Map.empty): Unit = {
     val schema = events.schema
@@ -571,7 +582,8 @@ object Jdbc {
     val insertSql = s"INSERT INTO $table (" +
       (payload.map(f => quoted(f.name)) ++ Seq(quoted("valid_to"), quoted("is_current")))
         .mkString(", ") +
-      s") VALUES (${payload.map(_ => "?").mkString(", ")}, NULL, 1)"
+      s") VALUES (${payload.map(_ => "?").mkString(", ")}, ?, ?)"
+    val vtPos = payload.length + 1
     val closeSql = s"UPDATE $table SET ${quoted("valid_to")} = ?, ${quoted("is_current")} = 0 " +
       s"WHERE ${quoted(keyName)} = ? AND ${quoted("is_current")} = 1"
     val hwmSql = s"SELECT MAX(${quoted("valid_from")}), MAX(${quoted("valid_to")}) " +
@@ -591,6 +603,25 @@ object Jdbc {
             var curKey: Any = null
             var haveKey = false
             var hwm = Long.MinValue
+            var closed = false // the key's one close is queued
+            // the key's latest fresh non-delete event: its INSERT waits
+            // until the next fresh event (or the key's end) fixes valid_to
+            var pending: Row = null
+            var keys = 0; var nClose = 0; var nIns = 0
+            def insert(validTo: Option[Long]): Unit = if (pending != null) {
+              slots.foreach { case (dt, srcIdx, pos) => setParam(ins, pos, dt, pending, srcIdx) }
+              validTo match {
+                case Some(vt) => ins.setLong(vtPos, vt); ins.setInt(vtPos + 1, 0)
+                case None => ins.setNull(vtPos, sqlType(LongType)); ins.setInt(vtPos + 1, 1)
+              }
+              ins.addBatch(); nIns += 1
+              pending = null
+            }
+            def flush(): Unit = {
+              if (nClose > 0) close.executeBatch()
+              if (nIns > 0) ins.executeBatch()
+              keys = 0; nClose = 0; nIns = 0
+            }
             // the per-key hwm cache is only sound on key-clustered,
             // (key, valid_from)-sorted input; this is public API, so a
             // mis-partitioned caller must fail LOUDLY, not silently
@@ -608,7 +639,10 @@ object Jdbc {
                   s"[graft] applyScd2 input is not key-clustered: key '$k' re-appears " +
                     s"after its cluster ended — repartition by '$keyName' and " +
                     "sortWithinPartitions(key, valid_from) before calling")
-                curKey = k; haveKey = true; prevVf = Long.MinValue
+                insert(None) // the previous key's last row stays open
+                if (keys == keysPerFlush) flush()
+                keys += 1
+                curKey = k; haveKey = true; prevVf = Long.MinValue; closed = false
                 setParam(hwmSt, 1, keyType, row, keyIdx)
                 val rs = hwmSt.executeQuery()
                 hwm = Long.MinValue
@@ -625,15 +659,18 @@ object Jdbc {
               prevVf = vf
               if (vf > hwm) { // the high-water replay screen
                 hwm = vf
-                close.setLong(1, vf)
-                setParam(close, 2, keyType, row, keyIdx)
-                close.executeUpdate()
-                if (row.getString(tagIdx) != "delete") {
-                  slots.foreach { case (dt, srcIdx, pos) => setParam(ins, pos, dt, row, srcIdx) }
-                  ins.executeUpdate()
+                if (!closed) {
+                  close.setLong(1, vf)
+                  setParam(close, 2, keyType, row, keyIdx)
+                  close.addBatch(); nClose += 1
+                  closed = true
                 }
+                insert(Some(vf)) // this event closes the one before it
+                if (row.getString(tagIdx) != "delete") pending = row
               }
             }
+            insert(None)
+            flush()
             c.commit()
           } finally { hwmSt.close(); close.close(); ins.close() }
         } catch {
@@ -643,14 +680,21 @@ object Jdbc {
     }
   }
 
+  /** Key clusters per statement-batch flush in [[applyScd2]] and
+    * [[replaceScd2Keys]] — the 1,000-row bound of [[applyChanges]],
+    * counted in keys so a flush always ends at a key boundary. */
+  private val keysPerFlush = 1000
+
   /** Key-replacement write for the UNORDERED SCD2 sink
     * ([[graft.streaming.Streams.materializeScd2Jdbc]] with
     * `orderedTransport = false`): each touched key's WHOLE rebuilt
-    * interval set replaces its stored rows — per partition, per key
-    * cluster, one transaction: DELETE the key's rows once on cluster
-    * entry, then INSERT the rebuilt set. Input must be repartitioned
-    * by key (one key never spans two transactions) and key-clustered;
-    * a violating caller fails loudly ([[applyScd2]]'s discipline).
+    * interval set replaces its stored rows — per partition, one
+    * transaction: DELETE the key's rows, then INSERT the rebuilt set,
+    * as statement batches flushed every ≤ [[keysPerFlush]] key
+    * clusters (all deletes, then all inserts — keys are unique per
+    * partition). Input must be repartitioned by key (one key never
+    * spans two transactions) and key-clustered; a violating caller
+    * fails loudly ([[applyScd2]]'s discipline).
     * Idempotent under replay: the rebuild regenerates the identical
     * interval set from the table's own rows, so delete+insert re-lands
     * the same rows. At scale each delete is a per-key point lookup —
@@ -679,6 +723,10 @@ object Jdbc {
           try {
             var curKey: Any = null
             var haveKey = false
+            var keys = 0 // every queued key has ≥ 1 queued insert
+            def flush(): Unit = if (keys > 0) {
+              del.executeBatch(); ins.executeBatch(); keys = 0
+            }
             val seenKeys = new scala.collection.mutable.HashSet[Any]
             it.foreach { row =>
               val k = row.get(keyIdx)
@@ -686,13 +734,16 @@ object Jdbc {
                 require(seenKeys.add(k),
                   s"[graft] replaceScd2Keys input is not key-clustered: key '$k' re-appears " +
                     s"after its cluster ended — repartition by '$keyName' before calling")
+                if (keys == keysPerFlush) flush()
+                keys += 1
                 curKey = k; haveKey = true
                 setParam(del, 1, keyType, row, keyIdx)
-                del.executeUpdate()
+                del.addBatch()
               }
               slots.foreach { case (dt, srcIdx, pos) => setParam(ins, pos, dt, row, srcIdx) }
-              ins.executeUpdate()
+              ins.addBatch()
             }
+            flush()
             c.commit()
           } finally { del.close(); ins.close() }
         } catch {

@@ -1755,7 +1755,10 @@ object Streams {
     }
     if (orderedTransport)
       // one key never spans two transactions, and its events apply
-      // in LSN order inside the partition
+      // in LSN order inside the partition. Per key: one hwm probe,
+      // one close of the stored open row, one insert per fresh
+      // non-delete event with its interval already known; closes and
+      // inserts go out as statement batches per ≤ 1,000 keys
       graft.sources.Jdbc.applyScd2(
         events.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col("valid_from")),
         url, table, keyCol, "tag", props)

@@ -284,6 +284,111 @@ class JdbcSpec extends SparkSuite {
       "deleted key reads live after mixed-order JDBC delivery")
   }
 
+  // ---- applyScd2 / replaceScd2Keys called directly --------------------
+
+  private val scd2Url = "jdbc:derby:memory:graft_scd2_direct;create=true"
+
+  private def scd2Events(rows: Seq[(Long, String, String, Long)]) =
+    rows.toDF("id", "fn", "tag", "valid_from")
+
+  /** Creates `table` holding the SCD2 fold of `stored`. */
+  private def seedHistory(table: String, stored: Seq[(Long, String, String, Long)]): Unit = {
+    val hist = graft.cdc.Envelope.scd2Fold(scd2Events(stored))
+    Jdbc.ensureTable(scd2Url, table, hist.schema, "")
+    Jdbc.write(hist, scd2Url, table, SaveMode.Append)
+  }
+
+  /** Every history row, sorted; NULL fn reads "<null>", NULL valid_to -1. */
+  private def historyRows(df: org.apache.spark.sql.DataFrame) = df
+    .select("id", "fn", "valid_from", "valid_to", "is_current").collect().toSeq
+    .map(r => (r.getLong(0), if (r.isNullAt(1)) "<null>" else r.getString(1), r.getLong(2),
+      if (r.isNullAt(3)) -1L else r.getLong(3), r.getInt(4)))
+    .sorted
+
+  private def tableHistory(table: String) = historyRows(Jdbc.snapshot(spark, scd2Url, table))
+
+  test("applyScd2 collapses each key's fresh events in one partition: the table equals the scd2Fold of stored + new; re-applying is a no-op") {
+    val table = "scd2_collapse"
+    // > 1,000 keys in the one partition, so a flush runs mid-partition
+    val bulk = 1000L until 2500L
+    val stored = Seq(
+      (2L, "x", "insert", 5L),
+      (3L, "p", "insert", 6L),
+      (6L, "s1", "insert", 7L), (6L, "s2", "update", 8L), (6L, "s3", "update", 9L),
+      (7L, "g", "insert", 11L), (7L, null, "delete", 12L)) ++
+      bulk.filter(_ % 2 == 0).map(k => (k, s"b$k", "insert", 1L))
+    val batch = Seq(
+      // insert → update → update
+      (1L, "a", "insert", 10L), (1L, "b", "update", 20L), (1L, "c", "update", 30L),
+      // update → delete, over a stored open row
+      (2L, "y", "update", 40L), (2L, null, "delete", 50L),
+      // delete → re-insert
+      (3L, null, "delete", 60L), (3L, "q", "insert", 70L),
+      // an orphan delete
+      (4L, null, "delete", 80L),
+      // one event delivered twice (a duplicated LSN)
+      (5L, "d", "insert", 90L), (5L, "d", "insert", 90L), (5L, "e", "update", 95L),
+      // stored history: replays under and at the high-water mark, then fresh events
+      (6L, "s2", "update", 8L), (6L, "s3", "update", 9L),
+      (6L, "s4", "update", 100L), (6L, "s5", "update", 110L),
+      // a mark that only the stored delete's valid_to records
+      (7L, null, "delete", 12L), (7L, "r", "insert", 120L)) ++
+      bulk.flatMap(k => Seq((k, s"u$k", "update", 200L), (k, s"v$k", "update", 201L)))
+    seedHistory(table, stored)
+    val expected = historyRows(graft.cdc.Envelope.scd2Fold(
+      scd2Events(stored ++ batch).dropDuplicates("id", "valid_from")))
+    val input = scd2Events(batch).coalesce(1).sortWithinPartitions("id", "valid_from")
+    Jdbc.applyScd2(input, scd2Url, table, "id", "tag")
+    val landed = tableHistory(table)
+    assert(landed == expected,
+      s"the landed history must equal the scd2Fold of stored + new events: " +
+        s"${landed.diff(expected).take(5)} vs ${expected.diff(landed).take(5)}")
+    Jdbc.applyScd2(input, scd2Url, table, "id", "tag")
+    assert(tableHistory(table) == landed,
+      "re-applying the same batch must leave the history unchanged, row for row")
+  }
+
+  test("applyScd2 and replaceScd2Keys refuse unclustered or unsorted input with their exact message, and the partition rolls back") {
+    val table = "scd2_refuse"
+    // past one flush, so keys before the violation reach the table first
+    val keys = 1L to 1100L
+    seedHistory(table, keys.filter(_ % 3 == 1).map(k => (k, s"s$k", "insert", 1L)))
+    val before = tableHistory(table)
+    assert(before.nonEmpty)
+    def refusal(apply: => Unit): String = {
+      val t = intercept[Throwable](apply)
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+        .mkString("\n")
+    }
+    def onePartition(rows: Seq[(Long, String, String, Long)]) =
+      spark.sparkContext.parallelize(rows, 1).toDF("id", "fn", "tag", "valid_from")
+    val fresh = keys.map(k => (k, s"n$k", "update", 50L))
+
+    val reappears = refusal(Jdbc.applyScd2(
+      onePartition(fresh :+ ((1L, "again", "update", 60L))), scd2Url, table, "id", "tag"))
+    assert(reappears.contains("requirement failed: [graft] applyScd2 input is not key-clustered: " +
+      "key '1' re-appears after its cluster ended — repartition by 'id' and " +
+      "sortWithinPartitions(key, valid_from) before calling"), reappears)
+    assert(tableHistory(table) == before, "a refused applyScd2 must roll its partition back")
+
+    val unsorted = refusal(Jdbc.applyScd2(
+      onePartition(fresh :+ ((1100L, "older", "update", 40L))), scd2Url, table, "id", "tag"))
+    assert(unsorted.contains("requirement failed: [graft] applyScd2 input is not sorted by " +
+      "(key, valid_from): key '1100' delivered valid_from=40 after 50"), unsorted)
+    assert(tableHistory(table) == before, "a refused applyScd2 must roll its partition back")
+
+    val rebuilt = (keys.map(k => (k, s"r$k", 50L, Option.empty[Long], 1)) :+
+      ((1L, "again", 60L, Option.empty[Long], 1)))
+    val replaced = refusal(Jdbc.replaceScd2Keys(
+      spark.sparkContext.parallelize(rebuilt, 1)
+        .toDF("id", "fn", "valid_from", "valid_to", "is_current"),
+      scd2Url, table, "id"))
+    assert(replaced.contains("requirement failed: [graft] replaceScd2Keys input is not " +
+      "key-clustered: key '1' re-appears after its cluster ended — repartition by 'id' " +
+      "before calling"), replaced)
+    assert(tableHistory(table) == before, "a refused replaceScd2Keys must roll its partition back")
+  }
+
   test("compactScd2Table: every as-of >= horizon is exact after compaction; reads below refuse; horizon only advances; the stream continues") {
     import java.nio.file.Files
     import graft.cdc.{Envelope, Fixture}
