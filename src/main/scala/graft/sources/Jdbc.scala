@@ -281,6 +281,28 @@ object Jdbc {
         }
     }
 
+  /** [[ensureTableOn]] for an SCD2 history ([[applyScd2]],
+    * [[replaceScd2Keys]]): no primary key — a history is many rows per
+    * key — and, when this call CREATES the table, a non-unique index
+    * `<table>_graft_key` on the key column in the same DDL step, so
+    * the high-water probe, the close and the unordered path's per-key
+    * DELETE are index lookups instead of history scans. An existing
+    * table gets no index: its indexes are its owner's business. A
+    * crash between the two statements leaves the history unindexed,
+    * which costs speed, never rows. */
+  private[graft] def ensureScd2TableOn(c: java.sql.Connection, table: String,
+      schema: StructType, keyCol: String, probe: TableProbe): Unit = {
+    // no column matches the empty key name → no PRIMARY KEY
+    ensureTableOn(c, table, schema, "", probe)
+    if (probe.stored.isEmpty) {
+      // the column as CREATE TABLE spelled it: quoted names are exact
+      val key = schema.fieldNames.find(_.equalsIgnoreCase(keyCol)).getOrElse(keyCol)
+      val st = c.createStatement()
+      try st.executeUpdate(s"CREATE INDEX ${table}_graft_key ON $table (${quoted(key)})")
+      finally st.close()
+    }
+  }
+
   /** One remote column's metadata, for the drift guard: JDBC type
     * plus whether an INSERT may omit it (nullable or defaulted). */
   final case class ColumnMeta(jdbcType: Int, nullable: Boolean, hasDefault: Boolean)
@@ -563,9 +585,9 @@ object Jdbc {
     * must be repartitioned by key and sorted by (key, valid_from) so
     * one key's events apply in LSN order inside one transaction
     * ([[graft.streaming.Streams.materializeScd2Jdbc]] guarantees
-    * both). The history table carries no index, so each probe and
-    * close scans it; production indexes (key, is_current) to make
-    * them point lookups. */
+    * both). On a history the engine created ([[ensureScd2TableOn]])
+    * the probe and the close are lookups on its `<table>_graft_key`
+    * index; without an index on the key each one scans the table. */
   def applyScd2(events: DataFrame, url: String, table: String,
       keyCol: String, tagCol: String, props: Map[String, String] = Map.empty): Unit = {
     val schema = events.schema
@@ -697,8 +719,8 @@ object Jdbc {
     * fails loudly ([[applyScd2]]'s discipline).
     * Idempotent under replay: the rebuild regenerates the identical
     * interval set from the table's own rows, so delete+insert re-lands
-    * the same rows. At scale each delete is a per-key point lookup —
-    * production indexes (key). */
+    * the same rows. Each delete is a lookup on the `<table>_graft_key`
+    * index of a history the engine created ([[ensureScd2TableOn]]). */
   def replaceScd2Keys(rows: DataFrame, url: String, table: String,
       keyCol: String, props: Map[String, String] = Map.empty): Unit = {
     val schema = rows.schema

@@ -578,12 +578,13 @@ object Streams {
     *
     *  1. bind the checkpoint to `identity` ([[requireSinkBinding]]);
     *  2. on the run's first batch, run `onStart`;
-    *  3. persist the batch: the guard's one action materializes the
-    *     cache and every apply reads it, where unpersisted each would
-    *     re-read the micro-batch source;
-    *  4. guard: [[requireSingleTable]] + [[requireTableBinding]] with
-    *     [[Envelope.project]], or one [[tableCensus]] with
-    *     [[Envelope.projectRelation]] per relation;
+    *  3. persist the batch: the guard's one job, a map-side tally with
+    *     no shuffle ([[tallyTables]]), fills the cache and every apply
+    *     reads it, where unpersisted each would re-read the micro-batch
+    *     source;
+    *  4. guard, before any apply: [[requireSingleTable]] +
+    *     [[requireTableBinding]] with [[Envelope.project]], or one
+    *     [[tableCensus]] with [[Envelope.projectRelation]] per relation;
     *  5. apply the targets with row events, plus the quiet ones when
     *     `applyQuiet(firstBatch)` — quiet targets are otherwise skipped
     *     outright, with no probe job, because the guard's count already
@@ -1359,25 +1360,46 @@ object Streams {
 
   /** A single-table materializer fed a multi-table stream would merge
     * keys ACROSS relations (student 7 and status 7 collapse to one
-    * row) — fail the batch instead. Table names are a tiny set, so a
-    * map-side collect_set per batch is one cheap global agg, not a
-    * shuffle of the data. Returns the observed table name (when the
-    * envelope carries one) and the batch's row-change event count —
-    * the one action doubles as the persist materialization AND the
-    * caller's empty-batch probe, so no second pass re-asks either
-    * question. */
+    * row) — fail the batch instead. One [[tallyTables]] pass answers
+    * it: a NULL name is ignored, but its events still count. Returns
+    * the observed table name (when the envelope carries one) and the
+    * batch's row-change event count — the pass doubles as the persist
+    * materialization AND the caller's empty-batch probe, so no second
+    * job re-asks either question. */
   private def requireSingleTable(batch: DataFrame, op: String,
-      alt: String): (Option[String], Long) =
-    if (batch.columns.contains("table")) {
-      val row = batch.filter(Envelope.tagFilter)
-        .agg(collect_set(col("table")), count(lit(1))).head()
-      val tbls = row.getSeq[String](0)
-      require(tbls.size <= 1,
-        s"[graft] $op materializes ONE relation but this batch carries tables " +
-          tbls.sorted.mkString("'", "', '", "'") +
-          s" — a FOR ALL TABLES publication must go through $alt, which demuxes per relation")
-      (tbls.headOption, row.getLong(1))
-    } else (None, batch.filter(Envelope.tagFilter).count())
+      alt: String): (Option[String], Long) = {
+    val tally = tallyTables(batch, Some(_))
+    val tbls = tally.keys.flatten.toSeq.sorted
+    require(tbls.size <= 1,
+      s"[graft] $op materializes ONE relation but this batch carries tables " +
+        tbls.mkString("'", "', '", "'") +
+        s" — a FOR ALL TABLES publication must go through $alt, which demuxes per relation")
+    (tbls.headOption, tally.values.sum)
+  }
+
+  /** Row-change events of a persisted micro-batch per `bucket(table)`
+    * (None for a NULL name, or for a batch without a `table` column),
+    * in ONE job: each partition tallies its own events and the driver
+    * merges the tallies. No Exchange means AQE stages nothing apart,
+    * so that job also fills the cache; a global aggregate would run as
+    * three (cache stage, shuffle map, result). The driver pulls one
+    * entry per bucket per partition. */
+  private def tallyTables(batch: DataFrame,
+      bucket: String => Option[String]): Map[Option[String], Long] = {
+    val name = if (batch.columns.contains("table")) col("table") else lit(null).cast("string")
+    batch.filter(Envelope.tagFilter).select(name).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val tally = scala.collection.mutable.HashMap.empty[Option[String], Long]
+        rows.foreach { r =>
+          val k = if (r.isNullAt(0)) None else bucket(r.getUTF8String(0).toString)
+          tally(k) = tally.getOrElse(k, 0L) + 1L
+        }
+        Iterator.single(tally.toMap)
+      }
+      .collect().foldLeft(Map.empty[Option[String], Long]) { (all, part) =>
+        part.foldLeft(all) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+      }
+  }
 
   /** The cross-BATCH twin of [[requireSingleTable]]: with per-table
     * chunk files and `maxFilesPerTrigger = 1`, every batch is
@@ -1496,10 +1518,10 @@ object Streams {
   }
 
   /** One census per demuxed micro-batch: row-change event count per
-    * REGISTERED table name, from a single tiny aggregation job. The
-    * job doubles as the persist materialization — the first action
-    * over the cached batch — and its result answers BOTH guard
-    * questions with zero further passes on the happy path:
+    * REGISTERED table name, from one [[tallyTables]] pass. The pass
+    * doubles as the persist materialization — the first action over
+    * the cached batch — and its result answers BOTH guard questions
+    * with zero further jobs on the happy path:
     *
     *  - events for tables absent from the registry fail the batch
     *    loudly (data loss if dropped, cross-relation corruption if
@@ -1511,21 +1533,18 @@ object Streams {
     *    scales with the relations the batch TOUCHES, not the catalog.
     *
     * Every unregistered (or NULL) table name folds into ONE overflow
-    * group before the collect, so the driver pulls at most catalog+1
-    * rows even from a misbound feed whose 'table' field carries
-    * per-row garbage — an unbounded `groupBy(table).collect()` there
+    * key inside the partition, so the driver pulls at most catalog+1
+    * entries per partition even from a misbound feed whose 'table'
+    * field carries per-row garbage — an unbounded per-name tally there
     * would stall the driver before the guard could fire. Stray NAMES
     * for the error message come from a second bounded sample job that
     * runs only on the already-fatal path. */
   private def tableCensus(batch: DataFrame, known: Seq[String]): Map[String, Long] = {
-    val knownAny = known.map(x => x: Any)
-    val evts = batch.filter(Envelope.tagFilter)
-    val rows = evts
-      .groupBy(when(col("table").isin(knownAny: _*), col("table")).as("table"))
-      .count().collect()
-    val strays = rows.exists(r => r.isNullAt(0) && r.getLong(1) > 0L)
-    if (strays) {
-      val sample = evts
+    val registered = known.toSet
+    val tally = tallyTables(batch, name => Some(name).filter(registered))
+    if (tally.getOrElse(None, 0L) > 0L) {
+      val knownAny = known.map(x => x: Any)
+      val sample = batch.filter(Envelope.tagFilter)
         .filter(col("table").isNull || !col("table").isin(knownAny: _*))
         .select("table").distinct().limit(5).collect()
         .map(r => Option(r.getString(0)).getOrElse("<null>")).sorted
@@ -1534,7 +1553,7 @@ object Streams {
           s"register every relation the publication ships (FOR ALL TABLES means exactly that) " +
           s"or filter the stream upstream; silently ignoring a relation's changes is data loss")
     }
-    rows.iterator.filterNot(_.isNullAt(0)).map(r => r.getString(0) -> r.getLong(1)).toMap
+    tally.collect { case (Some(t), n) => t -> n }
   }
 
   /** Bind a CDC checkpoint to the ONE sink it materializes. The
@@ -1703,9 +1722,11 @@ object Streams {
     * identity — switching it on a live checkpoint refuses loudly.
     * Additive schema drift widens the remote table exactly as in
     * [[materializeCdcJdbc]] (nullable ALTER; pre-drift history reads
-    * NULL). The table carries NO single-column primary key — an SCD2
-    * history is many rows per key; production indexes
-    * (key, is_current) for the open-row update and the hwm probe. */
+    * NULL). The table carries NO primary key — an SCD2 history is many
+    * rows per key. A table this sink creates gets a non-unique index
+    * `<table>_graft_key` on the key, which turns the hwm probe, the
+    * open-row close and the unordered path's per-key DELETE into index
+    * lookups; a table that already exists is left as its owner made it. */
   def materializeScd2Jdbc(envelopes: DataFrame, checkpoint: String,
       url: String, table: String, props: Map[String, String] = Map.empty,
       allowSinkOnlyColumns: Boolean = false,
@@ -1749,9 +1770,7 @@ object Streams {
     graft.sources.Jdbc.withConnection(url, props) { c =>
       val probe = graft.sources.Jdbc.probeTable(c, table)
       requireCompatibleDriftJdbc(probe.columns, url, table, histSchema, allowSinkOnlyColumns)
-      // no column matches the empty key name → no PRIMARY KEY:
-      // an SCD2 history is many rows per key by design
-      graft.sources.Jdbc.ensureTableOn(c, table, histSchema, "", probe)
+      graft.sources.Jdbc.ensureScd2TableOn(c, table, histSchema, keyCol, probe)
     }
     if (orderedTransport)
       // one key never spans two transactions, and its events apply

@@ -191,6 +191,112 @@ class JdbcSpec extends SparkSuite {
       "replaying a batch whose commit was lost must be a no-op on the history")
   }
 
+  test("materializeScd2Jdbc: a busy batch runs 3 jobs; a history it creates gets a key index, a pre-existing one gets none and still lands the q50 fold") {
+    import java.nio.file.Files
+    import graft.cdc.{Envelope, Fixture}
+    import graft.streaming.Streams
+    val sinkUrl = "jdbc:derby:memory:graft_scd2_jobs;create=true"
+    def quiesce(): Unit = {
+      var waited = 0
+      while (spark.streams.active.nonEmpty && waited < 10000) {
+        Thread.sleep(100); waited += 100
+      }
+    }
+    /** (index name, column) of every index whose first column is `key`. */
+    def keyIndexes(table: String, key: String): Seq[(String, String)] = {
+      val c = DriverManager.getConnection(sinkUrl)
+      try {
+        val rs = c.getMetaData.getIndexInfo(null, null, table, false, false)
+        try Iterator.continually(rs).takeWhile(_.next())
+          .filter(r => r.getShort("ORDINAL_POSITION") == 1 &&
+            key.equalsIgnoreCase(r.getString("COLUMN_NAME")))
+          .map(r => (r.getString("INDEX_NAME"), r.getString("COLUMN_NAME"))).toList
+        finally rs.close()
+      } finally c.close()
+    }
+    val src = Files.createTempDirectory("graft_scd2jobs_in")
+    val ckpt = Files.createTempDirectory("graft_scd2jobs_ckpt").toString
+    val now = System.currentTimeMillis()
+    def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
+      val f = src.resolve(name)
+      Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      f.toFile.setLastModified(mtime)
+    }
+    def student(lsn: String, tag: String, id: Long, fn: String) =
+      s"""{"lsn": "$lsn", "tag": "$tag", "table": "students", "new": {"id": $id, "first_name": "$fn", "last_name": "ln$id", "date_of_birth": "1990-01-01", "status_id": 1}}"""
+    def run() = Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, src.toString),
+      ckpt, sinkUrl, "students_hist_jobs").awaitTermination()
+    writeChunk("chunk_0000.jsonl", now - 60000L,
+      student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
+      student("0/00000030", "insert", 3L, "three"))
+    run(); quiesce()
+    assert(keyIndexes("STUDENTS_HIST_JOBS", "id") == Seq(("STUDENTS_HIST_JOBS_GRAFT_KEY", "id")),
+      "the history the sink creates carries a non-unique index led by the key")
+    // the busy batch: repeated updates of one key, a delete, an insert
+    writeChunk("chunk_0001.jsonl", now - 30000L,
+      student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
+      s"""{"lsn": "0/00000060", "tag": "delete", "table": "students", "old": {"id": 2}}""",
+      student("0/00000070", "insert", 4L, "four"))
+    val marker = "graft-scd2-batch-flush"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+        else if (flushed.getCount > 0) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run(); quiesce()
+      // every event of the run precedes the marker job's on the bus
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 3,
+      s"a busy SCD2 JDBC micro-batch ran ${jobs.get()} jobs; the one-job guard plus the " +
+        "repartitioned apply (shuffle map, result) runs 3 (an aggregating guard ran 3 jobs, for 5)")
+    assert(Jdbc.snapshot(spark, sinkUrl, "students_hist_jobs")
+      .filter(col("is_current") === 1).select("id", "firstName").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "eins", 3L -> "three", 4L -> "four"))
+
+    // a history created beforehand with no index (the DDL the sink
+    // itself used before it indexed the key) stays as its owner made it
+    val in = Fixture.materializeChunks(4)
+    val events = Envelope.project(spark.read.schema(Envelope.schema).json(in))
+      .filter(col("tag").isin("insert", "update", "delete"))
+      .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
+      .drop("lsn")
+    val histSchema = org.apache.spark.sql.types.StructType(
+      events.drop("tag").schema.fields ++ Seq(
+        org.apache.spark.sql.types.StructField("valid_to",
+          org.apache.spark.sql.types.LongType, nullable = true),
+        org.apache.spark.sql.types.StructField("is_current",
+          org.apache.spark.sql.types.IntegerType, nullable = false)))
+    Jdbc.ensureTable(sinkUrl, "students_hist_owned", histSchema, "")
+    Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, in),
+      Files.createTempDirectory("graft_scd2owned_ckpt").toString, sinkUrl,
+      "students_hist_owned").awaitTermination()
+    quiesce()
+    assert(keyIndexes("STUDENTS_HIST_OWNED", "id").isEmpty,
+      "a pre-existing history gets no DDL from the sink")
+    def asTuples(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("id"), col("firstName"), col("lastName"),
+        col("dateOfBirth").cast("string"), col("status"),
+        col("valid_from"), col("valid_to"), col("is_current"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getInt(4), r.getLong(5), if (r.isNullAt(6)) -1L else r.getLong(6), r.getInt(7)))
+      .toSeq.sorted
+    val expected = asTuples(Envelope.scd2Fold(events))
+    assert(expected.nonEmpty &&
+      asTuples(Jdbc.snapshot(spark, sinkUrl, "students_hist_owned")) == expected,
+      "the history landed into the pre-existing table must equal the q50 batch fold")
+  }
+
   test("materializeScd2Jdbc orderedTransport=false: reverse delivery converges to the q50 fold; orphan deletes survive; redelivery is a no-op") {
     import java.nio.file.Files
     import graft.cdc.{Envelope, Fixture}

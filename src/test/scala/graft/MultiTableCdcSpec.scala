@@ -253,6 +253,55 @@ class MultiTableCdcSpec extends SparkSuite {
       msgs(failed).contains("status"), msgs(failed))
   }
 
+  test("negative pin: a row event whose table is NULL fails the demux loudly and is named '<null>'") {
+    import java.nio.file.Files
+    val src = Files.createTempDirectory("graft_mtnull_in")
+    val ckpt = Files.createTempDirectory("graft_mtnull_ckpt").toString
+    val root = Files.createTempDirectory("graft_mtnull_state").toString
+    Files.write(src.resolve("chunk_0000.jsonl"), Seq(
+      """{"lsn": "0/00000010", "tag": "insert", "table": "students", "new": {"id": 1, "first_name": "a", "last_name": "b", "date_of_birth": "1990-01-01", "status_id": 1}}""",
+      """{"lsn": "0/00000018", "tag": "insert", "table": null, "new": {"id": 2, "value": "active"}}""")
+      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.materializeCdcTables(
+        Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
+        .awaitTermination()
+    }
+    def msgs(t: Throwable): String = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).mkString("\n")
+    assert(msgs(failed).contains("unregistered table(s) '<null>'"), msgs(failed))
+    quiesce()
+  }
+
+  test("a single-table materializer ignores a NULL table name but counts its row events") {
+    // the NULL-named event neither names a second relation nor goes
+    // uncounted: a batch holding only such events still applies
+    import java.nio.file.Files
+    val src = Files.createTempDirectory("graft_stnull_in")
+    val ckpt = Files.createTempDirectory("graft_stnull_ckpt").toString
+    val state = Files.createTempDirectory("graft_stnull_state").toString + "/students"
+    val now = System.currentTimeMillis()
+    def student(lsn: String, table: String, id: Long) =
+      s"""{"lsn": "$lsn", "tag": "insert", "table": $table, "new": {"id": $id, "first_name": "fn$id", "last_name": "ln$id", "date_of_birth": "1990-01-01", "status_id": 1}}"""
+    def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
+      val f = src.resolve(name)
+      Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      f.toFile.setLastModified(mtime)
+    }
+    writeChunk("chunk_0000.jsonl", now - 60000L,
+      student("0/00000010", "\"students\"", 1L), student("0/00000020", "null", 2L))
+    writeChunk("chunk_0001.jsonl", now - 30000L, student("0/00000030", "null", 3L))
+    Streams.materializeCdc(
+      Streams.envelopeStream(spark, src.toString, schema = union), ckpt, state)
+      .awaitTermination()
+    quiesce()
+    assert(spark.read.parquet(state).select("id").collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L, 3L), "every row event lands, NULL-named ones included")
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(ckpt, "graft_source_table")),
+      java.nio.charset.StandardCharsets.UTF_8).trim == "students",
+      "the checkpoint binds the one non-NULL table name")
+  }
+
   test("materializeCdcJdbcTables (ordered): the mixed stream lands one queryable Derby table per relation") {
     val sinkUrl = "jdbc:derby:memory:graft_mtjdbc;create=true"
     val in = Fixture.materializeMultiTableChunks(4)
@@ -639,11 +688,15 @@ class MultiTableCdcSpec extends SparkSuite {
     writeChunk("chunk_0001.jsonl", now - 30000L,
       """{"lsn": "0/00000020", "tag": "begin", "table": null}""",
       """{"lsn": "0/00000028", "tag": "commit", "table": null}""")
+    val marker = "graft-quiet-batch-flush"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+        else if (flushed.getCount > 0) jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -651,10 +704,16 @@ class MultiTableCdcSpec extends SparkSuite {
         Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
         .awaitTermination()
       quiesce()
+      // every event of the run precedes the marker job's on the bus
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 2,
-      s"a control-only micro-batch must cost only the census aggregation " +
-        s"(got ${jobs.get()} jobs — per-relation probes or a dedicated stray job are back)")
+    assert(jobs.get() == 1,
+      s"a control-only micro-batch must cost only the census, one job " +
+        s"(got ${jobs.get()} jobs — per-relation probes, a dedicated stray job or an " +
+        "aggregating census are back)")
     // and the states are untouched by the quiet batch
     assert(spark.read.parquet(s"$root/students").count() == 1L)
     assert(spark.read.parquet(s"$root/status").count() == 1L)
@@ -741,9 +800,10 @@ class MultiTableCdcSpec extends SparkSuite {
       spark.sparkContext.removeSparkListener(listener)
       spark.listenerManager.unregister(qel)
     }
-    assert(jobs.get() == 11,
-      s"a busy two-relation micro-batch ran ${jobs.get()} jobs; the full-image apply runs 11 " +
-        "(the matched-join apply ran 23: three state scans and four broadcasts per relation)")
+    assert(jobs.get() == 9,
+      s"a busy two-relation micro-batch ran ${jobs.get()} jobs; the one-job census plus the " +
+        "full-image apply runs 9 (an aggregating census ran 3 jobs, for 11; the matched-join " +
+        "apply ran 23: three state scans and four broadcasts per relation)")
     val byRel = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
     assert(byRel.map(_._1).sorted == Seq("status", "students"),
       s"expected one state write per relation: ${byRel.map(_._1)}")
