@@ -184,6 +184,7 @@ object ScaleSmoke {
         q.awaitTermination(); quiesce()
         val ms = batchMs(q.runId).drop(1) // batch 0 = warmup
         val mean = if (ms.isEmpty) 0.0 else ms.sum.toDouble / ms.size
+        // an append log of every batch: plain inference, not Tables.readParquet
         val nDec = spark.read.parquet(s"$root/decisions").count()
         println(s"""{"metric":"dedup_maintain","factor":$f,"index_docs":$nSeed,""" +
           s""""batches":${ms.size + 1},"decided":$nDec,"mean_batch_ms":${fx(mean, 0)}}""")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Tables.readParquet
 
 /** Deflation-trained two-axis whitening transform (the p50/p51
   * conditioner): per-dim means, the two dominant unit directions, and
@@ -97,7 +98,7 @@ object IndexStore {
       s"[graft] maintenance write to $path, but no committed index there (missing meta) — " +
         "seed the artifact with save() first, or run recoverMaintenance if a " +
         "maintenance write crashed here")
-    val m = spark.read.parquet(s"$path/meta").collect()
+    val m = readParquet(spark, s"$path/meta").collect()
     require(m.length == 1, s"[graft] corrupt index meta at $path/meta: ${m.length} rows")
     require(m(0).getString(1) == kind,
       s"[graft] index at $path holds a '${m(0).getString(1)}' artifact, maintenance expected '$kind'")
@@ -128,7 +129,7 @@ object IndexStore {
     // to the aside, and deleting the aside then would destroy the only
     // good copy
     val metaValid = fs.exists(metaPath) &&
-      (try spark.read.parquet(s"$path/meta").collect().length == 1
+      (try readParquet(spark, s"$path/meta").collect().length == 1
        catch { case scala.util.control.NonFatal(_) => false })
     if (metaValid) fs.delete(asidePath, true)
     else {
@@ -149,7 +150,7 @@ object IndexStore {
     require(fs.exists(metaPath),
       s"[graft] no index meta at $path/meta — either nothing was saved here or a " +
         "save crashed before its commit marker; rebuild the index")
-    val m = spark.read.parquet(s"$path/meta").collect()
+    val m = readParquet(spark, s"$path/meta").collect()
     require(m.length == 1, s"[graft] corrupt index meta at $path/meta: ${m.length} rows")
     val ver = m(0).getInt(0)
     val k = m(0).getString(1)
@@ -157,7 +158,7 @@ object IndexStore {
       s"[graft] index at $path has format version $ver, this engine reads $formatVersion — rebuild or migrate")
     require(k == kind,
       s"[graft] index at $path holds a '$k' artifact, caller asked for '$kind'")
-    (spark.read.parquet(s"$path/data"), m(0).getMap[String, String](2).toMap)
+    (readParquet(spark, s"$path/data"), m(0).getMap[String, String](2).toMap)
   }
 
   // ---- k-means / IVF coarse quantizer ----------------------------------

@@ -169,7 +169,7 @@ object Layout {
     val bytes = statuses
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val files = math.max(1, ((bytes + targetFileBytes - 1) / targetFileBytes).toInt)
-    spark.read.parquet(path).coalesce(files)
+    graft.sources.Tables.readParquet(spark, path).coalesce(files)
       .write.mode("overwrite").parquet(out)
   }
 

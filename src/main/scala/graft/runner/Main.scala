@@ -52,6 +52,8 @@ object Main {
 
   /** Compact the appended image log to current state (delete-aware). */
   def readFinalState(spark: SparkSession, out: String): DataFrame =
+    // plain inference, not Tables.readParquet: the log's files come from
+    // many appends whose schemas may differ
     Envelope.lastImageByKey(spark.read.parquet(out))
 
   def main(args: Array[String]): Unit = {
@@ -66,6 +68,7 @@ object Main {
 
       case "batch" =>
         require(args.length == 3, "batch <snapshotParquet> <outDir>")
+        // any writer's snapshot: plain inference, not Tables.readParquet
         spark.read.parquet(args(1)).write.mode("overwrite").parquet(args(2))
 
       case "sql" =>

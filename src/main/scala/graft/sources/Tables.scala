@@ -1,7 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch table loaders over the harness parquet layout (TESTDATA.md).
   *
@@ -16,6 +22,12 @@ import org.apache.spark.sql.functions._
   * footer schema — no driver-side materialization. On a real cluster the
   * same call reads a partitioned directory; nothing here assumes
   * single-file input.
+  *
+  * Per-read cost: every loader goes through [[readParquet]]: Spark's
+  * listing of the path, plus the directories down to the first data
+  * file and ONE footer read on the driver — no Spark job. A bare
+  * `spark.read.parquet(path)` costs the listing plus a one-task
+  * schema-inference job (`mergeSchemasInParallel`), even for one file.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -26,7 +38,88 @@ object Tables {
   val broadcastable: Set[String] = Set("region", "nation", "supplier")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job. With
+    * `mergeSchema` off, Spark infers a parquet schema from ONE footer —
+    * the first data file by path — but reads it in a one-task job. This
+    * reads that same footer on the driver and converts it exactly as
+    * the job does (the row-metadata JSON Spark writes, else the parquet
+    * type conversion under the session's conf), then hands the schema
+    * to the reader. Partition columns are still discovered from the
+    * directory names, and the relation's data schema is made nullable
+    * either way, so the DataFrame is the one inference would give.
+    *
+    * Falls back to plain inference when there is no visible data file,
+    * when a summary file (`_metadata`, `_common_metadata`) would take
+    * precedence, when the session merges schemas, when `path` is a
+    * file-sink output (its `_spark_metadata` log lists the files), or
+    * when the footer cannot be read (Spark then raises its own error).
+    * A footer type Spark refuses (PARQUET_TYPE_ILLEGAL) is rethrown as
+    * is: callers key on that condition (see [[loadEventsRaw]]). */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val source =
+      try {
+        val fs = root.getFileSystem(hadoopConf)
+        val st = fs.getFileStatus(root)
+        // a file-sink output is read through its log, not a listing
+        if (st.isDirectory && fs.exists(new Path(root, "_spark_metadata"))) None
+        else schemaSource(fs, st)
+      } catch { case _: java.io.IOException => None }
+    source.filterNot(f => isSummary(f.getPath.getName)).flatMap { first =>
+      try {
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(first, hadoopConf), SKIP_ROW_GROUPS)
+        // the converter Spark's inference job builds: these five confs,
+        // the constructor's defaults for the rest
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        Some(ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, meta), converter))
+      } catch {
+        case e: Exception if parquetTypeCondition(e).isEmpty => None
+      }
+    }
+  }
+
+  private def isSummary(name: String): Boolean =
+    name == ParquetFileWriter.PARQUET_METADATA_FILE ||
+      name == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE
+
+  /** The file whose footer inference reads under `st`: a summary file
+    * in a listed directory, else the first data file in full-path
+    * order. Lists only the directories on the way to it, entering
+    * partition directories (`k=v`) only. Names Spark's file index hides
+    * are skipped: `_*` and `.*`, bar summary files, and `*._COPYING_`. */
+  private def schemaSource(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+    if (st.isFile) Some(st)
+    else {
+      val children = fs.listStatus(st.getPath).filter { c =>
+        val n = c.getPath.getName
+        val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+        val shown = !hidden || n.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) ||
+          n.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
+        shown && (c.isFile || n.contains("="))
+      }
+      children.find(c => c.isFile && isSummary(c.getPath.getName)).orElse(
+        // a directory's files sort as `name/...`: full-path order
+        children.sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+          .iterator.flatMap(schemaSource(fs, _)).nextOption())
+    }
 
   /** The one loader dispatch: routes tables that need adaptive
     * handling (`events`) through their dedicated loader, everything
@@ -69,11 +162,11 @@ object Tables {
   /** Vintage-aware raw read of an events parquet path (batch). Sets the
     * legacy nanos conf ONLY when the footer demands it. */
   def loadEventsRaw(s: SparkSession, path: String): DataFrame =
-    try s.read.parquet(path)
+    try readParquet(s, path)
     catch {
       case e: Exception if parquetTypeCondition(e).isDefined =>
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.read.parquet(path)
+        readParquet(s, path)
     }
 
   /** The condition (Spark's stable error-class API, `SparkThrowable

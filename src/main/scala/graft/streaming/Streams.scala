@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.cdc.Envelope
+import graft.sources.Tables.readParquet
 
 /** Structured-Streaming surface (SURVEY §2 B.6), mirroring the
   * reference's CDC pipeline lifecycle (`/root/reference/src/main.ts:
@@ -804,7 +805,7 @@ object Streams {
     val stateExists = fs.exists(state)
     // ONE read of the state per batch (shared file index — the
     // applyBatchParquet rationale)
-    val onDisk = if (stateExists) Some(spark.read.parquet(statePath)) else None
+    val onDisk = if (stateExists) Some(readParquet(spark, statePath)) else None
     val onDiskPartitioned = statePartitions > 0 &&
       onDisk.exists(_.columns.contains(bucketCol))
     // history schema this batch's events fold to (analysis only, no job)
@@ -1026,11 +1027,12 @@ object Streams {
     //    immediately coherent" argument below, preserved by scoping
     //    it to drift batches only). Goes through the rename-aside
     //    swap like the legacy path.
-    // ONE read of the state per batch: every spark.read.parquet call
-    // re-runs partition discovery (a listing of every bucket dir —
-    // a driver job at large bucket counts), so the layout probe, the
-    // drift probe, and the base all share this DataFrame's file index
-    val onDisk = if (stateExists) Some(spark.read.parquet(statePath)) else None
+    // ONE read of the state per batch: every read re-lists the state
+    // (every bucket dir; a driver job only past Spark's 32-path
+    // parallel-discovery threshold) and reads one footer on the driver
+    // (readParquet: no inference job), so the layout probe, the drift
+    // probe, and the base all share this DataFrame's file index
+    val onDisk = if (stateExists) Some(readParquet(spark, statePath)) else None
     val onDiskPartitioned = statePartitions > 0 &&
       onDisk.exists(_.columns.contains(bucketCol))
     val driftTarget =
@@ -2166,7 +2168,7 @@ object Streams {
     * that name at every batch: an ordered-mode state can never carry a
     * payload column named 'op'. */
   def cdcLiveState(spark: SparkSession, statePath: String): DataFrame = {
-    val df0 = spark.read.parquet(statePath)
+    val df0 = readParquet(spark, statePath)
     val df = df0.drop(bucketCol) // layout detail of the partitioned state, not payload
     if (df.columns.contains("op"))
       df.filter(col("op") =!= "D").drop("op", "lsn", casBatchCol)
@@ -2279,7 +2281,7 @@ object Streams {
     val marker = horizonPath(statePath)
     if (fs.exists(marker)) checkedFs(fs.delete(marker, false), s"delete $marker")
     checkedFs(fs.rename(markerTmp, marker), s"rename $markerTmp -> $marker")
-    val df = spark.read.parquet(statePath)
+    val df = readParquet(spark, statePath)
     val kept = df.filter(col("valid_to").isNull || col("valid_to") > horizon)
     val partitioned = df.columns.contains(bucketCol)
     val tmp = new org.apache.hadoop.fs.Path(s"${statePath}__swap_${System.currentTimeMillis()}")
@@ -2302,7 +2304,7 @@ object Streams {
     scd2CompactHorizon(spark, statePath).foreach(h => require(lsn >= h,
       s"[graft] as-of $lsn reads below the compacted horizon $h of $statePath — " +
         "that history was dropped by compaction; refuse instead of returning a partial table"))
-    val df = spark.read.parquet(statePath)
+    val df = readParquet(spark, statePath)
     Envelope.scd2AsOf(
       if (df.columns.contains(bucketCol)) df.drop(bucketCol) else df, lsn)
   }

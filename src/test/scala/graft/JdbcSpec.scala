@@ -237,26 +237,9 @@ class JdbcSpec extends SparkSuite {
       student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
       s"""{"lsn": "0/00000060", "tag": "delete", "table": "students", "old": {"id": 2}}""",
       student("0/00000070", "insert", 4L, "four"))
-    val marker = "graft-scd2-batch-flush"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
-          flushed.countDown()
-        else if (flushed.getCount > 0) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      run(); quiesce()
-      // every event of the run precedes the marker job's on the bus
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 3,
-      s"a busy SCD2 JDBC micro-batch ran ${jobs.get()} jobs; the one-job guard plus the " +
+    val jobs = jobsDuring { run(); quiesce() }
+    assert(jobs == 3,
+      s"a busy SCD2 JDBC micro-batch ran $jobs jobs; the one-job guard plus the " +
         "repartitioned apply (shuffle map, result) runs 3 (an aggregating guard ran 3 jobs, for 5)")
     assert(Jdbc.snapshot(spark, sinkUrl, "students_hist_jobs")
       .filter(col("is_current") === 1).select("id", "firstName").collect()

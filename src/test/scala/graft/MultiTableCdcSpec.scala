@@ -688,31 +688,15 @@ class MultiTableCdcSpec extends SparkSuite {
     writeChunk("chunk_0001.jsonl", now - 30000L,
       """{"lsn": "0/00000020", "tag": "begin", "table": null}""",
       """{"lsn": "0/00000028", "tag": "commit", "table": null}""")
-    val marker = "graft-quiet-batch-flush"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
-          flushed.countDown()
-        else if (flushed.getCount > 0) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       Streams.materializeCdcTables(
         Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
         .awaitTermination()
       quiesce()
-      // every event of the run precedes the marker job's on the bus
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 1,
+    }
+    assert(jobs == 1,
       s"a control-only micro-batch must cost only the census, one job " +
-        s"(got ${jobs.get()} jobs — per-relation probes, a dedicated stray job or an " +
+        s"(got $jobs jobs — per-relation probes, a dedicated stray job or an " +
         "aggregating census are back)")
     // and the states are untouched by the quiet batch
     assert(spark.read.parquet(s"$root/students").count() == 1L)
@@ -761,15 +745,6 @@ class MultiTableCdcSpec extends SparkSuite {
       student("0/00000080", "insert", 4L, "four"),
       status("0/00000048", "update", 1L, "busy"), delete("0/00000058", "status", 3L),
       status("0/00000068", "insert", 4L, "new"))
-    val marker = "graft-busy-batch-flush"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
-          flushed.countDown()
-        else if (flushed.getCount > 0) jobs.incrementAndGet()
-    }
     // AQE wraps the write command itself: the helper walks into the
     // final plan and its query stages
     val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
@@ -784,26 +759,20 @@ class MultiTableCdcSpec extends SparkSuite {
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
-    spark.sparkContext.addSparkListener(listener)
     spark.listenerManager.register(qel)
-    try {
-      Streams.materializeCdcTables(
-        Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
-        .awaitTermination()
-      quiesce()
-      // every event of the run precedes the marker job's on the bus
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.listenerManager.unregister(qel)
-    }
-    assert(jobs.get() == 9,
-      s"a busy two-relation micro-batch ran ${jobs.get()} jobs; the one-job census plus the " +
-        "full-image apply runs 9 (an aggregating census ran 3 jobs, for 11; the matched-join " +
-        "apply ran 23: three state scans and four broadcasts per relation)")
+    val jobs =
+      try jobsDuring {
+        Streams.materializeCdcTables(
+          Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
+          .awaitTermination()
+        quiesce()
+      } finally spark.listenerManager.unregister(qel)
+    assert(jobs == 7,
+      s"a busy two-relation micro-batch ran $jobs jobs; the one-job census plus the " +
+        "full-image apply runs 7, since state reads take their schema from a driver-side " +
+        "footer read and no longer run an inference job (that job made 9; an aggregating " +
+        "census ran 3 jobs, for 11; the matched-join apply ran 23: three state scans and " +
+        "four broadcasts per relation)")
     val byRel = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
     assert(byRel.map(_._1).sorted == Seq("status", "students"),
       s"expected one state write per relation: ${byRel.map(_._1)}")
@@ -821,6 +790,48 @@ class MultiTableCdcSpec extends SparkSuite {
       4L -> (("four", "ln4", "1990-01-01", 1))))
     assert(collectStatus(spark.read.parquet(s"$root/status")) ==
       Map(1L -> "busy", 2L -> "idle", 4L -> "new"))
+  }
+
+  test("a busy parquet materializeScd2 micro-batch: pinned job count") {
+    import java.nio.file.Files
+    // The SCD2 twin of the busy two-relation pin, on one relation. The
+    // history read takes its schema from a driver-side footer read, so
+    // every job counted here is the batch's own work.
+    val src = Files.createTempDirectory("graft_scd2busy_in")
+    val ckpt = Files.createTempDirectory("graft_scd2busy_ckpt").toString
+    val state = Files.createTempDirectory("graft_scd2busy_state").toString + "/students"
+    val now = System.currentTimeMillis()
+    def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
+      val f = src.resolve(name)
+      Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      f.toFile.setLastModified(mtime)
+    }
+    def student(lsn: String, tag: String, id: Long, fn: String) =
+      s"""{"lsn": "$lsn", "tag": "$tag", "table": "students", "new": {"id": $id, "first_name": "$fn", "last_name": "ln$id", "date_of_birth": "1990-01-01", "status_id": 1}}"""
+    def delete(lsn: String, id: Long) =
+      s"""{"lsn": "$lsn", "tag": "delete", "table": "students", "old": {"id": $id}}"""
+    def run(): Unit = {
+      Streams.materializeScd2(Streams.envelopeStream(spark, src.toString), ckpt, state)
+        .awaitTermination()
+      quiesce()
+    }
+    writeChunk("chunk_0000.jsonl", now - 60000L,
+      student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
+      student("0/00000030", "insert", 3L, "three"))
+    run()
+    writeChunk("chunk_0001.jsonl", now - 30000L,
+      student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
+      delete("0/00000060", 2L), delete("0/00000070", 9L),
+      student("0/00000080", "insert", 4L, "four"))
+    val jobs = jobsDuring(run())
+    assert(jobs == 12,
+      s"a busy materializeScd2 micro-batch ran $jobs jobs; with the history's schema read " +
+        "from a footer on the driver it runs 12 (the history read's inference job made 13)")
+    val live = Streams.scd2AsOfState(spark, state, Long.MaxValue).collect()
+      .map(r => r.getLong(r.fieldIndex("id")) -> r.getString(r.fieldIndex("firstName"))).toMap
+    assert(live == Map(1L -> "eins", 3L -> "three", 4L -> "four"))
+    assert(spark.read.parquet(state).count() == 6L,
+      "history: one, uno, eins for key 1; two (closed); three; four")
   }
 
   test("a batch with no events for a relation skips that relation's state rewrite entirely") {

@@ -19,6 +19,29 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Spark jobs `body` launches. A marker job flushes the listener bus
+    * first, so every job of `body` is counted before this returns. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val marker = "graft-jobs-during-flush"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+        else if (flushed.getCount > 0) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never flushed")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")
