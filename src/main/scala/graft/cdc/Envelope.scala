@@ -297,8 +297,11 @@ object Envelope {
       StructField("old", StructType(oldStruct))))
   }
 
-  /** Wider numeric type WITHIN a family (the same lattice the
-    * materializer's state widening uses) — shared by [[unionSchema]]. */
+  /** Wider numeric type WITHIN a family (integral byte<short<int<long;
+    * fractional float<double): the safe ALTER COLUMN widenings a CDC
+    * producer performs, shared by [[unionSchema]] and the materializers'
+    * state widening. Cross-family and non-numeric pairs return None, so
+    * the caller's own analysis decides — no silent lossy cast here. */
   private[graft] def widerNumericType(a: DataType, b: DataType): Option[DataType] = {
     val integral = Map[DataType, Int](ByteType -> 1, ShortType -> 2, IntegerType -> 3, LongType -> 4)
     val fractional = Map[DataType, Int](FloatType -> 1, DoubleType -> 2)

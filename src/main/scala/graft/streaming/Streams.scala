@@ -636,21 +636,17 @@ object Streams {
     *
     * Each micro-batch: project (A4/A5), reduce to the latest image per
     * key (deletes become op 'D'), full-outer MERGE against the current
-    * state, write-new-then-swap. The swap is rename-aside: the current
-    * state is renamed to `__prev` (never deleted) before the freshly
-    * written `__swap_<batchId>` dir is renamed into place, so EVERY
-    * crash point leaves either the old state or a completed swap dir on
-    * disk. [[recoverCdcState]] runs at each batch start and promotes a
-    * completed swap (or a stranded `__prev`) back to `state` before
-    * merging, then sweeps stale swap/prev dirs — without it, a crash
-    * between the two renames would make the replayed batch merge into
-    * an EMPTY base and silently truncate the state to that batch's
-    * keys. A production deployment points the same foreachBatch at a
-    * transactional table format and drops the swap entirely. Restart
-    * safety then comes from the checkpoint: a replayed batch re-MERGEs
-    * the same reduced change set, which is idempotent (same keys, same
-    * winning images) whether it lands on the pre-batch state or on a
-    * recovered post-batch swap.
+    * state, and commit through [[ParquetState]]: crash recovery at
+    * open, then a rename-aside swap of the whole state (or, on the
+    * partitioned layout, an overwrite of the touched buckets). Without
+    * the recovery, a crash between the swap's two renames would make
+    * the replayed batch merge into an EMPTY base and silently truncate
+    * the state to that batch's keys. A production deployment points
+    * the same foreachBatch at a transactional table format and drops
+    * the swap entirely. Restart safety then comes from the checkpoint:
+    * a replayed batch re-MERGEs the same reduced change set, which is
+    * idempotent (same keys, same winning images) whether it lands on
+    * the pre-batch state or on a recovered post-batch swap.
     *
     * Batches apply in ARRIVAL order when `orderedTransport` is true —
     * the in-order delivery a CDC transport guarantees per partition
@@ -685,9 +681,8 @@ object Streams {
     * the difference between flat and linear ms/batch as accumulated
     * state grows (SCALE.md records the curve). The bucket count is
     * pinned by the checkpoint's sink binding (a count flip would
-    * re-route keys across dirs); pre-partitioned state migrates
-    * in one full-rewrite batch, and schema-drift batches fall back to
-    * a full rewrite so every partition widens coherently. Bounded-
+    * re-route keys across dirs); which batches write whole instead
+    * (migration, drift) is [[ParquetState]]'s classification. Bounded-
     * retention tombstones in a bucket compact when that bucket is next
     * touched — GC is lazier than the unpartitioned layout, never
     * sooner. Size buckets so one bucket ≈ a few HDFS blocks: at 100 TB
@@ -748,11 +743,10 @@ object Streams {
     * split already rebuilds whole keys); duplicates inside one batch
     * collapse by (key, LSN) since distinct events never share an LSN.
     *
-    * The write is the same rename-aside swap + [[recoverCdcState]]
-    * crash recovery as materializeCdc; at production state sizes the
-    * untouched-majority carry-through maps onto the bucket-partitioned
-    * layout exactly as there (touched buckets only), or onto a
-    * transactional table format's row-level MERGE. */
+    * The write is materializeCdc's [[ParquetState]] commit (crash
+    * recovery, rename-aside swap, or touched buckets only on the
+    * partitioned layout); at production state sizes a transactional
+    * table format's row-level MERGE takes its place. */
   def materializeScd2(envelopes: DataFrame, checkpoint: String,
       statePath: String, statePartitions: Int = 0,
       orderedTransport: Boolean = true): StreamingQuery =
@@ -771,48 +765,24 @@ object Streams {
     * [[materializeScd2Tables]]; see [[materializeScd2]] for the contract.
     *
     * `statePartitions > 0` gives the history the SAME bucket layout as
-    * [[materializeCdc]]'s state (`graft_bucket = pmod(xxhash64(id), n)`,
-    * count pinned by the sink binding): the steady-state batch then
-    * READS only the buckets its keys hash into (partition-pruned scan)
-    * and dynamic-partition-overwrites only those buckets — per-batch
-    * cost O(touched buckets), not O(state). SCD2 makes this layout
-    * especially safe: rows are never removed (a delete CLOSES an
-    * interval, it doesn't drop the row), so a touched bucket can never
-    * empty out from under the dynamic overwrite. First write, layout
-    * migration, and additive-drift batches (a widened envelope) fall
-    * back to one full rename-aside rewrite, after which batches are
-    * incremental again — exactly the materializeCdc classification. */
+    * [[materializeCdc]]'s state, committed by the same [[ParquetState]]
+    * classification: the steady-state batch reads and overwrites only
+    * the buckets its keys hash into — per-batch cost O(touched
+    * buckets), not O(state). SCD2 makes this layout especially safe:
+    * rows are never removed (a delete CLOSES an interval, it doesn't
+    * drop the row), so a touched bucket can never empty out from under
+    * the dynamic overwrite. */
   private def applyBatchScd2(projected: DataFrame, statePath: String,
-      batchId: Long, statePartitions: Int = 0, keyCol: String = "id",
-      orderedTransport: Boolean = true): Unit = {
-    val spark = projected.sparkSession
-    val events0 = projected
-      .filter(col("tag").isin("insert", "update", "delete"))
-      .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
-      .drop("lsn")
-    // unordered transports redeliver: two envelopes with one LSN are
-    // the same event twice (distinct events never share an LSN) — keep
-    // one. The ordered path relies on the high-water screen instead.
-    val events =
-      if (orderedTransport) events0
-      else events0.dropDuplicates(keyCol, "valid_from")
+      batchId: Long, statePartitions: Int, keyCol: String,
+      orderedTransport: Boolean): Unit = {
+    val events = scd2Events(projected, keyCol, orderedTransport)
     if (statePartitions > 0)
       require(!events.columns.exists(_.equalsIgnoreCase(bucketCol)),
         s"[graft] partitioned materializeScd2 reserves column '$bucketCol' — rename it in the source schema")
-    val state = new org.apache.hadoop.fs.Path(statePath)
-    val fs = state.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCdcState(fs, statePath)
-    val stateExists = fs.exists(state)
-    // ONE read of the state per batch (shared file index — the
-    // applyBatchParquet rationale)
-    val onDisk = if (stateExists) Some(readParquet(spark, statePath)) else None
-    val onDiskPartitioned = statePartitions > 0 &&
-      onDisk.exists(_.columns.contains(bucketCol))
-    // history schema this batch's events fold to (analysis only, no job)
-    val foldSchema = Envelope.scd2Fold(events.limit(0), keyCol).schema
-    val incremental = onDiskPartitioned &&
-      !needsWiden(org.apache.spark.sql.types.StructType(
-        onDisk.get.schema.filterNot(_.name == bucketCol)), foldSchema)
+    val st = new ParquetState(projected.sparkSession, statePath)
+    // the history schema this batch's events fold to (analysis only, no job)
+    val incremental = statePartitions > 0 &&
+      st.incremental(Envelope.scd2Fold(events.limit(0), keyCol).schema)
     var cachedMine: Option[DataFrame] = None
     try {
       /** The per-key incremental re-fold. Ordered transport: open
@@ -847,68 +817,53 @@ object Streams {
             Envelope.scd2Fold(open.unionByName(fresh, allowMissingColumns = true), keyCol),
             allowMissingColumns = true)
         } else scd2RebuildUnordered(mine, events, keyCol)
-      if (incremental) {
-        // batch-sized collect, bounded by statePartitions (the CDC
-        // touched-bucket discipline)
-        val touched = events.select(bucketExpr(keyCol, statePartitions).as(bucketCol))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val baseT = onDisk.get.filter(col(bucketCol).isin(touched: _*)).drop(bucketCol)
-        val keys = events.select(col(keyCol)).distinct()
-        val mine = baseT.join(broadcast(keys), Seq(keyCol), "left_semi")
-          .persist() // read three ways: high-water, open, closed
-        cachedMine = Some(mine)
-        // keys sharing a touched bucket but absent from the batch must
-        // be REWRITTEN with it (the overwrite replaces whole buckets)
-        val others = baseT.join(broadcast(keys), Seq(keyCol), "left_anti")
-        val content = others.unionByName(refold(mine), allowMissingColumns = true)
-          .withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
-        // one file per bucket + dynamic overwrite of ONLY the touched
-        // dirs; crash before the checkpoint commit replays the batch,
-        // and the high-water screen makes the re-fold a no-op
-        content.repartition(col(bucketCol))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(bucketCol)
-          .parquet(statePath)
-      } else {
-        val merged =
-          if (!stateExists)
-            (if (orderedTransport) Envelope.scd2Fold(events, keyCol)
-             else scd2FoldUnordered(events, keyCol))
-          else {
-            // full path: unpartitioned steady state, one-shot layout
-            // migration, or a drift batch (every bucket must widen
-            // coherently). The touched-key split still bounds the
-            // RE-FOLD to the batch's keys; only the write is whole.
-            val base = onDisk.get.drop(bucketCol)
-            val keys = events.select(col(keyCol)).distinct()
-            val mine = base.join(broadcast(keys), Seq(keyCol), "left_semi")
-              .persist()
-            cachedMine = Some(mine)
-            val untouched = base.join(broadcast(keys), Seq(keyCol), "left_anti")
-            untouched.unionByName(refold(mine), allowMissingColumns = true)
-          }
-        val out =
-          if (statePartitions > 0)
-            merged.withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
-              .repartition(col(bucketCol))
-          else merged
-        // rename-aside swap (the materializeCdc discipline): state is
-        // moved, never deleted, before its replacement lands;
-        // recoverCdcState at the next batch start promotes whichever
-        // side a crash left behind
-        val tmp = new org.apache.hadoop.fs.Path(s"${statePath}__swap_$batchId")
-        val w = out.write.mode("overwrite")
-        (if (statePartitions > 0) w.partitionBy(bucketCol) else w).parquet(tmp.toString)
-        val prev = new org.apache.hadoop.fs.Path(s"${statePath}__prev")
-        if (fs.exists(state)) {
-          if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
-          checkedFs(fs.rename(state, prev), s"rename $state -> $prev")
-        }
-        checkedFs(fs.rename(tmp, state), s"rename $tmp -> $state")
-        if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
+      val merged = st.onDisk match {
+        case None =>
+          if (orderedTransport) Envelope.scd2Fold(events, keyCol)
+          else scd2FoldUnordered(events, keyCol)
+        case Some(full) =>
+          // incremental: only the touched buckets (a batch-sized collect,
+          // bounded by statePartitions), whose untouched keys must be
+          // REWRITTEN with them because the overwrite replaces whole
+          // buckets. Full rewrite (unpartitioned steady state, one-shot
+          // layout migration, or a drift batch): the whole state. Either
+          // way the touched-key split bounds the RE-FOLD to the batch's
+          // keys.
+          val base =
+            if (incremental) {
+              val touched = events.select(bucketExpr(keyCol, statePartitions).as(bucketCol))
+                .distinct().collect().map(_.getInt(0)).toSeq
+              full.filter(col(bucketCol).isin(touched: _*)).drop(bucketCol)
+            } else full.drop(bucketCol)
+          val keys = events.select(col(keyCol)).distinct()
+          val mine = base.join(broadcast(keys), Seq(keyCol), "left_semi")
+            .persist() // read three ways: high-water, open, closed
+          cachedMine = Some(mine)
+          base.join(broadcast(keys), Seq(keyCol), "left_anti")
+            .unionByName(refold(mine), allowMissingColumns = true)
       }
+      // a crash before the checkpoint commit replays the batch, and the
+      // high-water screen makes the re-fold a no-op
+      st.write(
+        if (statePartitions > 0) merged.withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
+        else merged,
+        batchId, incremental)
     } finally cachedMine.foreach(_.unpersist())
+  }
+
+  /** A relation's row events as SCD2 fold input: control events
+    * dropped, the LSN turned into the numeric `valid_from`. Unordered
+    * transports redeliver: two envelopes with one LSN are the same
+    * event twice (distinct events never share an LSN), so keep one; the
+    * ordered path relies on the high-water screen instead. Shared by
+    * the parquet and JDBC SCD2 applies. */
+  private def scd2Events(projected: DataFrame, keyCol: String,
+      orderedTransport: Boolean): DataFrame = {
+    val events = projected
+      .filter(col("tag").isin("insert", "update", "delete"))
+      .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
+      .drop("lsn")
+    if (orderedTransport) events else events.dropDuplicates(keyCol, "valid_from")
   }
 
   /** The unordered fold: the SHARED [[Envelope.scd2Fold]] plus a
@@ -1010,42 +965,21 @@ object Streams {
     val changes =
       if (statePartitions > 0) changes0.withColumn(bucketCol, bucketExpr(keyCol, statePartitions))
       else changes0
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val state = new org.apache.hadoop.fs.Path(statePath)
-    val fs = state.getFileSystem(hconf)
-    recoverCdcState(fs, statePath)
-    val stateExists = fs.exists(state)
-    // Partitioned-mode batch classification:
-    //  - incremental (the steady state): on-disk layout is already
-    //    bucket-partitioned and the batch brings no schema drift →
-    //    read ONLY the touched buckets (partition-pruned scan) and
-    //    dynamic-overwrite ONLY those buckets. Per-batch write cost
-    //    is O(touched state), not O(state).
-    //  - full rewrite: first write, layout migration (state predates
-    //    partitioning), or additive/widening drift (EVERY partition's
-    //    schema must widen coherently — exactly the "rewrites whole →
-    //    immediately coherent" argument below, preserved by scoping
-    //    it to drift batches only). Goes through the rename-aside
-    //    swap like the legacy path.
-    // ONE read of the state per batch: every read re-lists the state
-    // (every bucket dir; a driver job only past Spark's 32-path
-    // parallel-discovery threshold) and reads one footer on the driver
-    // (readParquet: no inference job), so the layout probe, the drift
-    // probe, and the base all share this DataFrame's file index
-    val onDisk = if (stateExists) Some(readParquet(spark, statePath)) else None
-    val onDiskPartitioned = statePartitions > 0 &&
-      onDisk.exists(_.columns.contains(bucketCol))
+    // Partitioned-mode batch classification (see ParquetState): the
+    // steady state reads ONLY the touched buckets (partition-pruned
+    // scan) and overwrites only those; first write, layout migration
+    // and additive/widening drift rewrite the state whole
+    val st = new ParquetState(spark, statePath)
     val driftTarget =
       if (orderedTransport) changes.drop("op").schema else changes.schema
-    val incremental = onDiskPartitioned &&
-      !needsWiden(onDisk.get.schema, driftTarget)
+    val incremental = statePartitions > 0 && st.incremental(driftTarget)
     val touched: Seq[Int] =
       if (incremental)
         changes.select(col(bucketCol)).distinct().collect().map(_.getInt(0)).toSeq
       else Seq.empty // bounded by statePartitions, like the census collect
-    val base0 = onDisk match {
+    val base0 = st.onDisk match {
       case Some(full) if incremental => full.filter(col(bucketCol).isin(touched: _*))
-      case Some(full) if statePartitions > 0 && !onDiskPartitioned =>
+      case Some(full) if statePartitions > 0 && !st.partitioned =>
         // one-time layout migration: derive each state row's bucket
         // from its key; this batch rewrites the state whole, after
         // which every batch is incremental
@@ -1055,7 +989,7 @@ object Streams {
         if (orderedTransport) changes.drop("op").limit(0)
         else changes.limit(0) // first batch: empty state, same schema
     }
-    if (stateExists) requireCompatibleDrift(base0.schema, changes.schema, statePath)
+    if (st.onDisk.isDefined) requireCompatibleDrift(base0.schema, changes.schema, statePath)
     // ADDITIVE SCHEMA DRIFT: after a drift restart the change batch
     // carries columns the accumulated state predates — null-fill the
     // base so history widens in place (each batch rewrites the state
@@ -1081,7 +1015,7 @@ object Streams {
         d.columns.find(_.equalsIgnoreCase(f.name)) match {
           case Some(own) =>
             val ownType = d.schema(own).dataType
-            widerNumeric(ownType, f.dataType) match {
+            Envelope.widerNumericType(ownType, f.dataType) match {
               case Some(w) if w != ownType => d.withColumn(own, col(own).cast(w))
               case _ => d
             }
@@ -1148,58 +1082,7 @@ object Streams {
           !(col("op") === "D" &&
             lit(batchId) - col(casBatchCol) > lit(casTombstoneRetention)))
       }
-    // ONE FILE PER BUCKET: partitionBy alone lets every write task
-    // emit a file into every bucket dir it holds rows for — at 32
-    // tasks × n buckets that is an n×32 small-file explosion whose
-    // per-file open cost then dominates every later read. Clustering
-    // rows by bucket first makes each bucket dir exactly one file
-    // (a bucket's rows hash to one shuffle partition).
-    def clustered(df: DataFrame): DataFrame = df.repartition(col(bucketCol))
-    if (incremental) {
-      // In-place dynamic partition overwrite: only the bucket dirs
-      // present in `merged` (= the touched buckets) are replaced;
-      // untouched buckets' files are not read, written, or moved.
-      // Crash safety WITHOUT the rename-aside swap: in-flight task
-      // output stages under dot-prefixed dirs readers ignore, and a
-      // crash anywhere before the checkpoint commit replays the
-      // batch — re-merging the same reduced changes into a bucket is
-      // idempotent whether that bucket was already replaced (same
-      // winning images / CAS keeps newer) or not. The swap's
-      // all-or-nothing guarantee is only needed when the WHOLE state
-      // is replaced, because there the danger is merging into an
-      // empty base; here every bucket always has a live dir.
-      clustered(merged).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucketCol)
-        .parquet(statePath)
-    } else if (statePartitions > 0 && !stateExists) {
-      clustered(merged).write.mode("overwrite").partitionBy(bucketCol).parquet(statePath)
-    } else {
-      val tmp = new org.apache.hadoop.fs.Path(s"${statePath}__swap_$batchId")
-      val w0 = (if (statePartitions > 0) clustered(merged) else merged)
-        .write.mode("overwrite")
-      val w = if (statePartitions > 0) w0.partitionBy(bucketCol) else w0
-      w.parquet(tmp.toString)
-      // Rename-aside swap: `state` is moved, never deleted, before its
-      // replacement lands — each individual rename is atomic on a local
-      // FS / HDFS, so a crash at any point leaves a recoverable dir for
-      // recoverCdcState (old state at __prev, or the completed tmp).
-      // Hadoop FileSystems report many failures by RETURNING FALSE, not
-      // throwing — an unchecked false would let foreachBatch return
-      // normally, the checkpoint COMMIT the batch, and the next batch's
-      // recovery sweep the completed swap dir: that batch's changes gone
-      // with no replay. Throw on false so a failed swap aborts the batch
-      // BEFORE its checkpoint commit and the replayed MERGE lands it.
-      val prev = new org.apache.hadoop.fs.Path(s"${statePath}__prev")
-      if (fs.exists(state)) {
-        if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
-        checkedFs(fs.rename(state, prev), s"rename $state -> $prev")
-      }
-      checkedFs(fs.rename(tmp, state), s"rename $tmp -> $state")
-      // Failing the cleanup delete also aborts+replays; that replay is
-      // idempotent (state already swapped; recovery just sweeps prev).
-      if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
-    }
+    st.write(merged, batchId, incremental)
   }
 
   /** Partition-bucket of a state key: deterministic, version-stable,
@@ -1209,20 +1092,93 @@ object Streams {
   private[graft] def bucketExpr(keyCol: String, statePartitions: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(col(keyCol)), lit(statePartitions.toLong)).cast("int")
 
-  /** Would writing `want` over a base of schema `have` require widening
-    * the base (new columns, or numeric upcasts of shared ones)? Mirrors
-    * what widen() would do, decided from footers alone so the
-    * partitioned path can pick incremental vs full-rewrite BEFORE
-    * reading any data. */
-  private def needsWiden(have: org.apache.spark.sql.types.StructType,
-      want: org.apache.spark.sql.types.StructType): Boolean =
-    want.fields.exists { f =>
-      have.fields.find(_.name.equalsIgnoreCase(f.name)) match {
-        case None => true
-        case Some(own) =>
-          widerNumeric(own.dataType, f.dataType).exists(_ != own.dataType)
+  /** The parquet state commit: the one open-classify-write step behind
+    * [[applyBatchParquet]], [[applyBatchScd2]] and [[compactScd2]], so
+    * every parquet sink's exactly-once argument rests on one code path.
+    *
+    * Constructing one OPENS the state: [[recoverCdcState]] first, then
+    * ONE read of it. Every read re-lists the state (every bucket dir; a
+    * driver job only past Spark's 32-path parallel-discovery threshold)
+    * and reads one footer on the driver (readParquet: no inference
+    * job), so the layout probe, the drift probe and the caller's base
+    * all share this DataFrame's file index.
+    *
+    * [[write]] lands the caller's output one of two ways:
+    *
+    *  - INCREMENTAL, only the touched buckets: a dynamic partition
+    *    overwrite replaces just the bucket dirs present in the output;
+    *    untouched buckets' files are not read, written or moved. No
+    *    swap is needed: in-flight task output stages under dot-prefixed
+    *    dirs readers ignore, a crash anywhere before the checkpoint
+    *    commit replays the batch, and re-applying it to a bucket is
+    *    idempotent whether that bucket was already replaced or not.
+    *    Every bucket always has a live dir, so there is no empty base
+    *    to merge into.
+    *  - WHOLE: the first write, an unpartitioned state, a layout
+    *    migration (state that predates partitioning), or additive/
+    *    widening drift (EVERY bucket's schema must widen coherently).
+    *    The output lands complete in `<state>__swap_<id>`, then the
+    *    rename-aside swap: `state` is moved to `__prev`, never deleted,
+    *    before the swap dir is renamed into place. Each rename is
+    *    atomic on a local FS / HDFS, so every crash point leaves either
+    *    the old state or a completed swap dir, which [[recoverCdcState]]
+    *    promotes at the next open.
+    *
+    * A partitioned output (one carrying [[bucketCol]]) is written ONE
+    * FILE PER BUCKET: partitionBy alone lets every write task emit a
+    * file into every bucket dir it holds rows for — at 32 tasks × n
+    * buckets an n×32 small-file explosion whose per-file open cost then
+    * dominates every later read. Clustering rows by bucket first makes
+    * each bucket dir exactly one file. */
+  private final class ParquetState(spark: SparkSession, statePath: String) {
+    private val state = new org.apache.hadoop.fs.Path(statePath)
+    val fs: org.apache.hadoop.fs.FileSystem =
+      state.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverCdcState(fs, statePath)
+
+    /** The state as it stands, or None before the first write. */
+    val onDisk: Option[DataFrame] =
+      if (fs.exists(state)) Some(readParquet(spark, statePath)) else None
+
+    /** Is the on-disk layout already bucket-partitioned? */
+    val partitioned: Boolean = onDisk.exists(_.columns.contains(bucketCol))
+
+    /** Can an output of schema `target` overwrite just its touched
+      * buckets? Only over a partitioned layout, and only when writing
+      * `target` needs no widening of the state (new columns, or numeric
+      * upcasts of shared ones) — decided from the footer alone, before
+      * any data is read. */
+    def incremental(target: org.apache.spark.sql.types.StructType): Boolean =
+      partitioned && !target.fields.exists { f =>
+        onDisk.get.schema.fields.find(_.name.equalsIgnoreCase(f.name)) match {
+          case None => true
+          case Some(own) =>
+            Envelope.widerNumericType(own.dataType, f.dataType).exists(_ != own.dataType)
+        }
+      }
+
+    /** Land `out` as the new state: its touched buckets only when
+      * `incremental`, else whole through `<state>__swap_<swapId>`. */
+    def write(out: DataFrame, swapId: Long, incremental: Boolean): Unit = {
+      val bucketed = out.columns.contains(bucketCol)
+      val w0 = (if (bucketed) out.repartition(col(bucketCol)) else out).write.mode("overwrite")
+      val w = if (bucketed) w0.partitionBy(bucketCol) else w0
+      if (incremental) w.option("partitionOverwriteMode", "dynamic").parquet(statePath)
+      else {
+        val tmp = new org.apache.hadoop.fs.Path(s"${statePath}__swap_$swapId")
+        w.parquet(tmp.toString)
+        val prev = new org.apache.hadoop.fs.Path(s"${statePath}__prev")
+        if (fs.exists(state)) {
+          if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
+          checkedFs(fs.rename(state, prev), s"rename $state -> $prev")
+        }
+        checkedFs(fs.rename(tmp, state), s"rename $tmp -> $state")
+        // failing the cleanup delete also aborts and replays; that replay
+        // is idempotent (the state already swapped; recovery sweeps prev)
+        if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
       }
     }
+  }
 
   /** Bucket partition column of the PARTITIONED state layout
     * ([[materializeCdc]] `statePartitions`), reserved like 'op'. NOT
@@ -1590,14 +1546,8 @@ object Streams {
   private def bindCheckpointFile(hconf: org.apache.hadoop.conf.Configuration,
       p: org.apache.hadoop.fs.Path, value: String): String = {
     val fs = p.getFileSystem(hconf)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    } else {
+    if (fs.exists(p)) readUtf8(fs, p)
+    else {
       val tmp = p.suffix(".tmp")
       val out = fs.create(tmp, true)
       try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1605,6 +1555,17 @@ object Streams {
       checkedFs(fs.rename(tmp, p), s"bind $tmp -> $p")
       value
     }
+  }
+
+  /** The whole content of the small UTF-8 file `p`. */
+  private def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
+      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+    } finally in.close()
   }
 
   /** The transport-mode component of a sink identity. */
@@ -1631,7 +1592,7 @@ object Streams {
     * (Merge.presentCol style) instead of silently corrupting the state
     * schema. ('lsn'/'tag' are the envelope's own bookkeeping —
     * Envelope.project already owns those names.) */
-  private def reduceBatch(projected: DataFrame, keyCol: String = "id"): DataFrame = {
+  private def reduceBatch(projected: DataFrame, keyCol: String): DataFrame = {
     require(!projected.columns.exists(_.equalsIgnoreCase("op")),
       s"[graft] CDC materialization reserves column 'op' for the change-op marker — " +
         s"rename it in the source schema: ${projected.columns.mkString("[", ", ", "]")}")
@@ -1752,16 +1713,8 @@ object Streams {
     * SCD2-shaped). */
   private def applyBatchScd2Jdbc(projected: DataFrame, url: String,
       table: String, keyCol: String, props: Map[String, String],
-      allowSinkOnlyColumns: Boolean, orderedTransport: Boolean = true): Unit = {
-    val events0 = projected
-      .filter(col("tag").isin("insert", "update", "delete"))
-      .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
-      .drop("lsn")
-    // unordered transports redeliver: two envelopes with one LSN are
-    // the same event twice — keep one (the parquet path's rule)
-    val events =
-      if (orderedTransport) events0
-      else events0.dropDuplicates(keyCol, "valid_from")
+      allowSinkOnlyColumns: Boolean, orderedTransport: Boolean): Unit = {
+    val events = scd2Events(projected, keyCol, orderedTransport)
     // the table's full shape: event payload + the interval columns
     val histSchema = org.apache.spark.sql.types.StructType(
       events.schema.fields.filterNot(_.name.equalsIgnoreCase("tag")) ++ Seq(
@@ -1861,7 +1814,7 @@ object Streams {
   private def applyBatchJdbc(projected: DataFrame, url: String, table: String,
       batchId: Long, keyCol: String, props: Map[String, String],
       orderedTransport: Boolean, casTombstoneRetention: Long,
-      allowSinkOnlyColumns: Boolean, backfillStamps: Boolean = false): Unit = {
+      allowSinkOnlyColumns: Boolean, backfillStamps: Boolean): Unit = {
     val reduced = reduceBatch(projected, keyCol)
     // ONE connection, ONE metadata probe per batch for the drift guard
     // AND ensureTable — previously each opened its own connection and
@@ -2179,35 +2132,12 @@ object Streams {
     * tombstone GC, reserved like 'op'. */
   private[graft] val casBatchCol = "__graft_arrival_batch"
 
-  /** Wider of two numeric types WITHIN a family (integral byte<short<
-    * int<long; fractional float<double) — the safe ALTER COLUMN
-    * widenings a CDC producer performs. Cross-family and non-numeric
-    * pairs return None: the merge's own analysis decides (union/when
-    * coercion for compatible pairs, a loud analysis error otherwise) —
-    * no silent lossy cast here. */
-  private def widerNumeric(a: org.apache.spark.sql.types.DataType,
-      b: org.apache.spark.sql.types.DataType): Option[org.apache.spark.sql.types.DataType] =
-    Envelope.widerNumericType(a, b)
-
-  /** Fail loudly on Hadoop's boolean-false error reporting (see the
-    * swap commentary in [[materializeCdc]]). */
   // ---- SCD2 history compaction (retention dial) ------------------------
 
   private def horizonPath(statePath: String) =
     new org.apache.hadoop.fs.Path(s"${statePath}__compact_horizon")
   private def horizonTmpPath(statePath: String) =
     new org.apache.hadoop.fs.Path(s"${statePath}__compact_horizon.tmp")
-
-  private def readLongFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[Long] = {
-    val in = fs.open(p)
-    val s = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim
-    } finally in.close()
-    scala.util.Try(s.toLong).toOption
-  }
 
   /** The compaction horizon recorded for an SCD2 history, if any.
     * Marker writes go temp-then-swap (the [[requireSinkBinding]]
@@ -2225,13 +2155,17 @@ object Streams {
   def scd2CompactHorizon(spark: SparkSession, statePath: String): Option[Long] = {
     val p = horizonPath(statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def readLong(f: org.apache.hadoop.fs.Path): Option[Long] = {
+      val s = readUtf8(fs, f).trim
+      scala.util.Try(s.toLong).toOption
+    }
     if (fs.exists(p))
-      Some(readLongFile(fs, p).getOrElse(throw new IllegalStateException(
+      Some(readLong(p).getOrElse(throw new IllegalStateException(
         s"[graft] corrupt compaction marker at $p — refuse rather than read past a " +
           "compacted horizon; delete it and re-run compactScd2 at or above the last horizon")))
     else {
       val tmp = horizonTmpPath(statePath)
-      if (fs.exists(tmp)) readLongFile(fs, tmp) else None
+      if (fs.exists(tmp)) readLong(tmp) else None
     }
   }
 
@@ -2252,10 +2186,11 @@ object Streams {
     * Ordering/crash discipline: the marker writes FIRST — a crash
     * between marker and rewrite over-refuses (reads below the marker
     * fail although rows still exist), never under-refuses; the rewrite
-    * itself is the materializers' rename-aside swap, so
-    * [[recoverCdcState]] at the next batch start promotes whichever
-    * side a crash left. The horizon only advances — lowering it would
-    * promise history that was already dropped.
+    * itself is the materializers' [[ParquetState]] commit (a whole
+    * rename-aside swap that keeps the bucket layout), so the next
+    * batch's open promotes whichever side a crash left. The horizon
+    * only advances — lowering it would promise history that was
+    * already dropped.
     *
     * CONTRACT (the caller's to keep, as with tombstone retention):
     * compact only below any LSN the transport can still deliver or
@@ -2264,16 +2199,15 @@ object Streams {
     * batches (it takes the state file lock implicitly by the swap), at
     * whatever cadence bounds the history size. */
   def compactScd2(spark: SparkSession, statePath: String, horizon: Long): Unit = {
-    val state = new org.apache.hadoop.fs.Path(statePath)
-    val fs = state.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCdcState(fs, statePath)
-    require(fs.exists(state), s"[graft] no SCD2 history at $statePath — nothing to compact")
+    val st = new ParquetState(spark, statePath)
+    require(st.onDisk.isDefined, s"[graft] no SCD2 history at $statePath — nothing to compact")
     scd2CompactHorizon(spark, statePath).foreach(h => require(horizon >= h,
       s"[graft] compaction horizon can only advance: stored $h, asked $horizon — " +
         "history below the stored horizon is already gone"))
     // temp-then-swap: the tmp is COMPLETE before the old marker goes
     // away, so no crash window can lose an already-recorded horizon
     // (see scd2CompactHorizon's resolution table)
+    val fs = st.fs
     val markerTmp = horizonTmpPath(statePath)
     val out = fs.create(markerTmp, true)
     try out.write(horizon.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -2281,18 +2215,8 @@ object Streams {
     val marker = horizonPath(statePath)
     if (fs.exists(marker)) checkedFs(fs.delete(marker, false), s"delete $marker")
     checkedFs(fs.rename(markerTmp, marker), s"rename $markerTmp -> $marker")
-    val df = readParquet(spark, statePath)
-    val kept = df.filter(col("valid_to").isNull || col("valid_to") > horizon)
-    val partitioned = df.columns.contains(bucketCol)
-    val tmp = new org.apache.hadoop.fs.Path(s"${statePath}__swap_${System.currentTimeMillis()}")
-    val w = (if (partitioned) kept.repartition(col(bucketCol)) else kept)
-      .write.mode("overwrite")
-    (if (partitioned) w.partitionBy(bucketCol) else w).parquet(tmp.toString)
-    val prev = new org.apache.hadoop.fs.Path(s"${statePath}__prev")
-    if (fs.exists(prev)) checkedFs(fs.delete(prev, true), s"delete $prev")
-    checkedFs(fs.rename(state, prev), s"rename $state -> $prev")
-    checkedFs(fs.rename(tmp, state), s"rename $tmp -> $state")
-    checkedFs(fs.delete(prev, true), s"delete $prev")
+    st.write(st.onDisk.get.filter(col("valid_to").isNull || col("valid_to") > horizon),
+      System.currentTimeMillis(), incremental = false)
   }
 
   /** Point-in-time read over a (possibly compacted) SCD2 state table —
@@ -2309,11 +2233,18 @@ object Streams {
       if (df.columns.contains(bucketCol)) df.drop(bucketCol) else df, lsn)
   }
 
+  /** Fail loudly on Hadoop's boolean-false error reporting. Hadoop
+    * FileSystems report many failures by RETURNING FALSE, not throwing:
+    * an unchecked false in the state swap would let foreachBatch return
+    * normally, the checkpoint COMMIT the batch, and the next batch's
+    * recovery sweep the completed swap dir — that batch's changes gone
+    * with no replay. Throwing aborts the batch BEFORE its checkpoint
+    * commit, and the replay lands it. */
   private def checkedFs(ok: Boolean, what: String): Unit =
     if (!ok) throw new java.io.IOException(s"[graft] CDC state swap: $what returned false")
 
-  /** Crash recovery for [[materializeCdc]]'s state swap, run at the
-    * start of every micro-batch. If `state` is missing (a crash hit
+  /** Crash recovery for the [[ParquetState]] swap, run each time the
+    * state is opened (every micro-batch). If `state` is missing (a crash hit
     * between the swap's two renames), promote the newest COMPLETED
     * `__swap_<batchId>` dir — one whose parquet commit wrote
     * `_SUCCESS` — or, failing that, the renamed-aside `__prev` dir.

@@ -550,56 +550,84 @@ class StreamsExtraSpec extends SparkSuite {
     // completed swap: that batch's changes gone with no replay. This
     // pins the guard's FALSE path end-to-end through a fail-injecting
     // FS — the happy path alone doesn't prove the no-data-loss claim.
+    // Inputs: every caller of the one parquet state commit — the
+    // last-image apply, the SCD2 apply, and an SCD2 compaction run
+    // between two batches, whose swap fails instead of batch 1's.
     spark.sparkContext.hadoopConfiguration
       .set("fs.failfs.impl", classOf[FailOnceFs].getName)
-    val src = Files.createTempDirectory("graft_failfs_in")
-    val lines = Fixture.jsonLines
-    val (phase1, phase2) = lines.splitAt(lines.size / 2)
-    val now = System.currentTimeMillis()
-    def writeChunk(name: String, ls: Seq[String], mtime: Long): Unit = {
-      val f = src.resolve(name)
-      Files.write(f, ls.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      f.toFile.setLastModified(mtime)
-    }
-    writeChunk("chunk_0000.jsonl", phase1, now - 60000L)
-    val ckpt = Files.createTempDirectory("graft_failfs_ckpt").toString
-    val stateDir = Files.createTempDirectory("graft_failfs_state").toString
-    val state = s"failfs://$stateDir/students"
-    def commits: Seq[String] =
-      Option(new java.io.File(ckpt, "commits").list()).map(_.toSeq).getOrElse(Seq.empty)
-        .filterNot(_.startsWith(".")).sorted
-    // batch 0 lands cleanly on the failfs state path
-    Streams.materializeCdc(Streams.envelopeStream(spark, src.toString), ckpt, state)
-      .awaitTermination()
-    assert(commits == Seq("0"), s"batch 0 must commit cleanly, got $commits")
-    // batch 1: the final tmp -> state rename reports false
-    writeChunk("chunk_0001.jsonl", phase2, now - 30000L)
-    FailOnceFs.armedDstName.set("students")
-    try {
-      val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        Streams.materializeCdc(Streams.envelopeStream(spark, src.toString), ckpt, state)
-          .awaitTermination()
+    val scdCols = Seq("id", "valid_from", "valid_to", "firstName",
+      "lastName", "dateOfBirth", "status", "is_current")
+    for ((sink, compact) <- Seq(("materializeCdc", false), ("materializeScd2", false),
+        ("materializeScd2", true))) {
+      val src = Files.createTempDirectory("graft_failfs_in")
+      val lines = Fixture.jsonLines
+      val (phase1, phase2) = lines.splitAt(lines.size / 2)
+      val now = System.currentTimeMillis()
+      def writeChunk(name: String, ls: Seq[String], mtime: Long): Unit = {
+        val f = src.resolve(name)
+        Files.write(f, ls.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        f.toFile.setLastModified(mtime)
       }
-      assert(failed.getMessage.contains("returned false"), failed.getMessage)
-    } finally FailOnceFs.armedDstName.set(null)
-    assert(commits == Seq("0"),
-      s"the failed batch must NOT reach its checkpoint commit, got $commits")
-    val fs = new Path(state).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new Path(state)),
-      "crash point: old state renamed aside, replacement rename failed")
-    // restart with the fault cleared: recovery promotes a recoverable
-    // dir, the uncommitted batch replays, the MERGE lands idempotently
-    Streams.materializeCdc(Streams.envelopeStream(spark, src.toString), ckpt, state)
-      .awaitTermination()
-    assert(commits == Seq("0", "1"), s"replayed batch must now commit, got $commits")
-    val got = spark.read.parquet(state)
-    val expected = Envelope.lastImageByKey(Envelope.project(
-      spark.read.schema(Envelope.schema).json(src.toString)))
-    assert(got.count() == expected.count())
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
-      "state after fault + replay must equal the exactly-once result")
-    assert(new java.io.File(stateDir).list().toSeq == Seq("students"),
-      "recovery must sweep swap/prev artifacts")
+      writeChunk("chunk_0000.jsonl", phase1, now - 60000L)
+      val ckpt = Files.createTempDirectory("graft_failfs_ckpt").toString
+      val stateDir = Files.createTempDirectory("graft_failfs_state").toString
+      val state = s"failfs://$stateDir/students"
+      def commits: Seq[String] =
+        Option(new java.io.File(ckpt, "commits").list()).map(_.toSeq).getOrElse(Seq.empty)
+          .filterNot(_.startsWith(".")).sorted
+      def run(): Unit = {
+        val stream = Streams.envelopeStream(spark, src.toString)
+        (if (sink == "materializeCdc") Streams.materializeCdc(stream, ckpt, state)
+         else Streams.materializeScd2(stream, ckpt, state)).awaitTermination()
+        var waited = 0 // let the manager release the checkpoint
+        while (spark.streams.active.nonEmpty && waited < 10000) {
+          Thread.sleep(100); waited += 100
+        }
+      }
+      // batch 0 lands cleanly on the failfs state path
+      run()
+      assert(commits == Seq("0"), s"$sink: batch 0 must commit cleanly, got $commits")
+      // compaction between batches: the median closed-interval bound
+      val horizon = if (!compact) None else {
+        val tos = spark.read.parquet(state).filter(col("valid_to").isNotNull)
+          .select(col("valid_to")).collect().map(_.getLong(0)).sorted
+        assert(tos.nonEmpty, "batch 0 must close some intervals")
+        Some(tos(tos.length / 2))
+      }
+      // the final tmp -> state rename reports false: batch 1's own
+      // swap, or the compaction's
+      writeChunk("chunk_0001.jsonl", phase2, now - 30000L)
+      FailOnceFs.armedDstName.set("students")
+      try {
+        val failed = intercept[Exception] {
+          horizon.fold(run())(Streams.compactScd2(spark, state, _))
+        }
+        assert(failed.getMessage.contains("returned false"), failed.getMessage)
+      } finally FailOnceFs.armedDstName.set(null)
+      assert(commits == Seq("0"),
+        s"$sink: the failed batch must NOT reach its checkpoint commit, got $commits")
+      val fs = new Path(state).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(!fs.exists(new Path(state)),
+        "crash point: old state renamed aside, replacement rename failed")
+      // restart with the fault cleared: recovery promotes a recoverable
+      // dir, the uncommitted batch replays, the apply lands idempotently
+      run()
+      assert(commits == Seq("0", "1"), s"$sink: replayed batch must now commit, got $commits")
+      val (got, expected) =
+        if (sink == "materializeCdc")
+          (spark.read.parquet(state), Envelope.lastImageByKey(Envelope.project(
+            spark.read.schema(Envelope.schema).json(src.toString))))
+        else
+          (spark.read.parquet(state).select(scdCols.map(col): _*),
+            horizon.fold(batchScd2(src.toString))(h =>
+              batchScd2(src.toString).filter(col("valid_to").isNull || col("valid_to") > h)))
+      assert(got.count() == expected.count(), s"$sink (compact=$compact)")
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"$sink (compact=$compact): state after fault + replay must equal the exactly-once result")
+      assert(new java.io.File(stateDir).list().toSeq.sorted ==
+        ("students" +: horizon.map(_ => "students__compact_horizon").toSeq),
+        "recovery must sweep swap/prev artifacts")
+    }
   }
 
   test("a cleanup delete returning false also aborts and replays idempotently (swap already landed)") {
