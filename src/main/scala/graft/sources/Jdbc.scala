@@ -105,14 +105,88 @@ object Jdbc {
     java.sql.DriverManager.getConnection(url, p)
   }
 
-  /** Create `table` (key PRIMARY KEY + payload columns) if it doesn't
-    * exist; if it does, WIDEN it additively — any schema column the
-    * remote table lacks is added via `ALTER TABLE ADD COLUMN`
-    * (nullable, so pre-drift rows read back as NULL: the JDBC half of
-    * the CDC schema-drift contract, mirroring the parquet state's
-    * null-fill). Existing columns are never altered or dropped —
-    * narrowing and type changes stay a DBA decision. Driver-side, once
-    * per micro-batch (a metadata read when nothing changed). */
+  /** One open connection for a sequence of driver-side metadata/DDL
+    * steps, or for one partition's apply ([[perPartition]]) — the only
+    * opener of a connection. The per-batch guard+ensure path opens ONE
+    * connection and probes the table ONCE instead of re-resolving
+    * identifier and columns per step over fresh connections. The
+    * connection keeps autocommit unless [[transaction]] turns it off. */
+  private[graft] def withConnection[T](url: String,
+      props: Map[String, String] = Map.empty)(f: java.sql.Connection => T): T = {
+    val c = connect(url, props)
+    try f(c) finally c.close()
+  }
+
+  /** The one JDBC transaction policy: autocommit off, run `body`,
+    * commit; on any throwable a best-effort rollback, then rethrow.
+    * Every multi-statement write commits through here, so a failure
+    * anywhere in `body` leaves the table as the last commit left it.
+    * The single-statement driver writes ([[backfillNullStamps]],
+    * [[deleteExpiredTombstones]]) and the DDL keep autocommit. */
+  private def transaction[T](c: java.sql.Connection)(body: => T): T =
+    try {
+      c.setAutoCommit(false)
+      val out = body
+      c.commit()
+      out
+    } catch {
+      case t: Throwable => try c.rollback() catch { case _: Throwable => () }; throw t
+    }
+
+  /** The executor-side apply shape of [[applyChanges]],
+    * [[applyChangesVersioned]], [[applyScd2]] and [[replaceScd2Keys]]:
+    * each non-empty partition runs `body` over its own connection as
+    * one [[transaction]]. Atomicity is therefore per partition, not per
+    * batch: a crash mid-batch can leave some partitions applied, and
+    * exactly-once-EQUIVALENCE comes from each apply's replay being
+    * idempotent. Callers partition by key, so no key spans two
+    * transactions. */
+  private def perPartition(rows: DataFrame, url: String, props: Map[String, String])(
+      body: (java.sql.Connection, Iterator[Row]) => Unit): Unit =
+    rows.foreachPartition { (it: Iterator[Row]) =>
+      if (it.hasNext) withConnection(url, props)(c => transaction(c)(body(c, it)))
+    }
+
+  /** One statement's update count, the statement closed after it. */
+  private def update(c: java.sql.Connection, sql: String): Int = {
+    val st = c.createStatement()
+    try st.executeUpdate(sql) finally st.close()
+  }
+
+  /** `f` over one query's result set, result set and statement closed after it. */
+  private def query[T](c: java.sql.Connection, sql: String)(f: java.sql.ResultSet => T): T = {
+    val st = c.createStatement()
+    try {
+      val rs = st.executeQuery(sql)
+      try f(rs) finally rs.close()
+    } finally st.close()
+  }
+
+  /** The one statement-batch bound: at most this many queued statements
+    * per `executeBatch` before a flush. [[applyChanges]],
+    * [[applyChangesVersioned]] and [[canonicalizeLsns]] count it in
+    * ROWS; [[applyScd2]] and [[replaceScd2Keys]] count it in KEY
+    * CLUSTERS, so their flushes always end at a key boundary. */
+  private val statementBatch = 1000
+
+  /** Index of `name` in `schema`, matched case-insensitively; a missing
+    * column is refused naming its role (`what`). */
+  private def fieldIdx(schema: StructType, name: String, what: String): Int =
+    schema.fieldIndex(schema.fields.map(_.name).find(_.equalsIgnoreCase(name)).getOrElse(
+      throw new IllegalArgumentException(
+        s"[graft] $what '$name' not in ${schema.fieldNames.mkString(",")}")))
+
+  /** (dataType, source row index, 1-based statement position) per
+    * column of `cols`, resolved once — not a fieldIndex lookup per row;
+    * [[bind]] sets them. */
+  private def slotsOf(schema: StructType,
+      cols: Seq[StructField]): Array[(DataType, Int, Int)] =
+    cols.zipWithIndex.map { case (f, i) => (f.dataType, schema.fieldIndex(f.name), i + 1) }.toArray
+
+  private def bind(ps: java.sql.PreparedStatement, slots: Array[(DataType, Int, Int)],
+      row: Row): Unit =
+    slots.foreach { case (dt, srcIdx, pos) => setParam(ps, pos, dt, row, srcIdx) }
+
   /** Connection's current schema as a metadata pattern — scopes
     * getTables/getColumns to where unqualified DDL/DML resolves, so a
     * same-named table in ANOTHER schema can't contaminate results.
@@ -181,20 +255,6 @@ object Jdbc {
           s"(quoted DDL) — the engine's unquoted SQL cannot address it; rename the " +
           s"table to an unquoted-addressable form or pass the exact stored name")
 
-  /** (lower-cased column name → [[ColumnMeta]]) over an open
-    * connection — existence via [[findStoredTable]], then ONE exact
-    * `getColumns` on the stored identifier; empty when the table
-    * doesn't exist in the connection's current schema. Fails loudly
-    * (rather than returning metadata the engine's SQL can't use) when
-    * the only match is a mixed-case identifier. */
-  private def columnMetaOn(c: java.sql.Connection, table: String): Map[String, ColumnMeta] =
-    findStoredTable(c, table) match {
-      case None => Map.empty
-      case Some((stored, _)) =>
-        requireAddressable(stored, table)
-        columnsOfStored(c, stored)
-    }
-
   /** `getColumns` on an already-resolved STORED identifier. `_` in the
     * name is a pattern wildcard: screen rows on the EXACT stored
     * identifier, not case-insensitively — a sibling differing only by
@@ -212,19 +272,13 @@ object Jdbc {
     finally rs.close()
   }
 
-  /** One open connection for a sequence of driver-side metadata/DDL
-    * steps — the per-batch guard+ensure path opens ONE connection and
-    * probes the table ONCE instead of re-resolving identifier and
-    * columns per step over fresh connections. */
-  private[graft] def withConnection[T](url: String,
-      props: Map[String, String] = Map.empty)(f: java.sql.Connection => T): T = {
-    val c = connect(url, props)
-    try f(c) finally c.close()
-  }
-
   /** One resolution of a table's existence, stored identifier, type,
     * and columns — shared by the drift guard and [[ensureTable]] so a
-    * micro-batch pays ONE metadata probe, not one per consumer. */
+    * micro-batch pays ONE metadata probe, not one per consumer. Existence
+    * via [[findStoredTable]], then ONE exact `getColumns` on the stored
+    * identifier; fails loudly (rather than returning metadata the
+    * engine's SQL can't use) when the only match is a mixed-case
+    * identifier. */
   private[graft] final case class TableProbe(
       stored: Option[(String, String)], columns: Map[String, ColumnMeta])
 
@@ -236,6 +290,14 @@ object Jdbc {
         TableProbe(hit, columnsOfStored(c, stored))
     }
 
+  /** Create `table` (key PRIMARY KEY + payload columns) if it doesn't
+    * exist; if it does, WIDEN it additively — any schema column the
+    * remote table lacks is added via `ALTER TABLE ADD COLUMN`
+    * (nullable, so pre-drift rows read back as NULL: the JDBC half of
+    * the CDC schema-drift contract, mirroring the parquet state's
+    * null-fill). Existing columns are never altered or dropped —
+    * narrowing and type changes stay a DBA decision. Driver-side, once
+    * per micro-batch (a metadata read when nothing changed). */
   def ensureTable(url: String, table: String, schema: StructType, keyCol: String,
       props: Map[String, String] = Map.empty): Unit =
     withConnection(url, props)(c => ensureTableOn(c, table, schema, keyCol, probeTable(c, table)))
@@ -266,19 +328,12 @@ object Jdbc {
           val pk = if (f.name.equalsIgnoreCase(keyCol)) " NOT NULL PRIMARY KEY" else ""
           s"${quoted(f.name)} ${ddlType(f.dataType)}$pk"
         }.mkString(", ")
-        val st = c.createStatement()
-        try st.executeUpdate(s"CREATE TABLE $table ($cols)") finally st.close()
+        update(c, s"CREATE TABLE $table ($cols)")
       case Some(_) =>
         val have = probe.columns.keySet
-        val missing = schema.fields.filterNot(f =>
-          have(f.name.toLowerCase(java.util.Locale.ROOT)))
-        if (missing.nonEmpty) {
-          val st = c.createStatement()
-          try missing.foreach { f =>
-            st.executeUpdate(
-              s"ALTER TABLE $table ADD COLUMN ${quoted(f.name)} ${ddlType(f.dataType)}")
-          } finally st.close()
-        }
+        schema.fields.filterNot(f => have(f.name.toLowerCase(java.util.Locale.ROOT)))
+          .foreach(f =>
+            update(c, s"ALTER TABLE $table ADD COLUMN ${quoted(f.name)} ${ddlType(f.dataType)}"))
     }
 
   /** [[ensureTableOn]] for an SCD2 history ([[applyScd2]],
@@ -297,9 +352,7 @@ object Jdbc {
     if (probe.stored.isEmpty) {
       // the column as CREATE TABLE spelled it: quoted names are exact
       val key = schema.fieldNames.find(_.equalsIgnoreCase(keyCol)).getOrElse(keyCol)
-      val st = c.createStatement()
-      try st.executeUpdate(s"CREATE INDEX ${table}_graft_key ON $table (${quoted(key)})")
-      finally st.close()
+      update(c, s"CREATE INDEX ${table}_graft_key ON $table (${quoted(key)})")
     }
   }
 
@@ -315,15 +368,8 @@ object Jdbc {
     * address). Used by the CDC materializer's non-additive-drift
     * guard. */
   def columnMeta(url: String, table: String,
-      props: Map[String, String] = Map.empty): Map[String, ColumnMeta] = {
-    val c = connect(url, props)
-    try columnMetaOn(c, table) finally c.close()
-  }
-
-  /** (lower-cased column name → java.sql.Types code); see [[columnMeta]]. */
-  def columnTypes(url: String, table: String,
-      props: Map[String, String] = Map.empty): Map[String, Int] =
-    columnMeta(url, table, props).view.mapValues(_.jdbcType).toMap
+      props: Map[String, String] = Map.empty): Map[String, ColumnMeta] =
+    withConnection(url, props)(probeTable(_, table).columns)
 
   /** SQL predicate matching every `versionCol` value OFF the exact
     * canonical `%08X/%08X` shape, shared by [[requireCanonicalVersions]]
@@ -357,24 +403,18 @@ object Jdbc {
     * one-time [[canonicalizeLsns]] migration. */
   def requireCanonicalVersions(url: String, table: String, versionCol: String,
       props: Map[String, String] = Map.empty): Unit =
-    if (columnMeta(url, table, props).nonEmpty) {
-      val c = connect(url, props)
-      try {
-        val st = c.createStatement()
-        try {
-          val v = quoted(versionCol)
-          val rs = st.executeQuery(
-            s"SELECT $v FROM $table WHERE ${nonCanonicalPredicate(v)}")
-          try {
-            if (rs.next()) throw new IllegalStateException(
-              s"[graft] $table holds non-canonical version string " +
-                s"'${Option(rs.getString(1)).getOrElse("NULL")}' " +
-                s"(expected 17-char %08X/%08X) — a pre-canonicalization CAS table must get " +
-                s"the one-time LSN migration (Jdbc.canonicalizeLsns) before streaming " +
-                s"resumes, or stale changes can overwrite newer rows")
-          } finally rs.close()
-        } finally st.close()
-      } finally c.close()
+    withConnection(url, props) { c =>
+      if (probeTable(c, table).columns.nonEmpty) {
+        val v = quoted(versionCol)
+        query(c, s"SELECT $v FROM $table WHERE ${nonCanonicalPredicate(v)}") { rs =>
+          if (rs.next()) throw new IllegalStateException(
+            s"[graft] $table holds non-canonical version string " +
+              s"'${Option(rs.getString(1)).getOrElse("NULL")}' " +
+              s"(expected 17-char %08X/%08X) — a pre-canonicalization CAS table must get " +
+              s"the one-time LSN migration (Jdbc.canonicalizeLsns) before streaming " +
+              s"resumes, or stale changes can overwrite newer rows")
+        }
+      }
     }
 
   /** One-time LSN canonicalization migration for a CAS table written
@@ -385,9 +425,8 @@ object Jdbc {
     *  - IDEMPOTENT: already-canonical rows don't match the probe
     *    predicate, so a re-run (including after a crash — the commit
     *    is all-or-nothing) touches zero rows;
-    *  - TRANSACTIONAL: one connection, autocommit off, one commit
-    *    after every update — a failure mid-way rolls back to the
-    *    untouched table;
+    *  - TRANSACTIONAL: one [[transaction]], one commit after every
+    *    update — a failure mid-way rolls back to the untouched table;
     *  - DIALECT-PORTABLE: the predicate is the probe's
     *    [[nonCanonicalPredicate]]; the canonical form is computed
     *    CLIENT-SIDE per DISTINCT raw value (no string-format SQL
@@ -416,42 +455,29 @@ object Jdbc {
         s"[graft] $table.$versionCol holds '$raw' — not a <hex32>/<hex32> wire LSN; " +
           s"canonicalizeLsns migrates wire LSNs only (no rows were touched)")
     }
-    val c = connect(url, props)
-    try {
-      c.setAutoCommit(false)
+    withConnection(url, props)(c => transaction(c) {
       val v = quoted(versionCol)
-      val raws = scala.collection.mutable.ArrayBuffer[String]()
-      val st = c.createStatement()
-      try {
-        // the probe's exact predicate ([[nonCanonicalPredicate]]): the
-        // migration selects precisely what the guard refuses, so a
-        // value the guard flags can never slip past the migration's
-        // fail-loud validation below
-        val rs = st.executeQuery(
-          s"SELECT DISTINCT $v FROM $table WHERE ${nonCanonicalPredicate(v)}")
-        try while (rs.next()) raws += rs.getString(1) finally rs.close()
-      } finally st.close()
+      // the probe's exact predicate ([[nonCanonicalPredicate]]): the
+      // migration selects precisely what the guard refuses, so a
+      // value the guard flags can never slip past the migration's
+      // fail-loud validation below
+      val raws = query(c, s"SELECT DISTINCT $v FROM $table WHERE ${nonCanonicalPredicate(v)}") {
+        rs => Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+      }
       // validate ALL before updating ANY — see FAIL-LOUD above
       val mapping = raws.map(r => r -> canonical(r))
       var total = 0L
       val upd = c.prepareStatement(s"UPDATE $table SET $v = ? WHERE $v = ?")
-      try {
-        mapping.grouped(1000).foreach { chunk =>
-          chunk.foreach { case (raw, canon) =>
-            upd.setString(1, canon); upd.setString(2, raw); upd.addBatch()
-          }
-          // SUCCESS_NO_INFO (-2) drivers don't report per-statement
-          // counts — the migration still applied; the total is best-effort
-          total += upd.executeBatch().filter(_ > 0).map(_.toLong).sum
+      try mapping.grouped(statementBatch).foreach { chunk =>
+        chunk.foreach { case (raw, canon) =>
+          upd.setString(1, canon); upd.setString(2, raw); upd.addBatch()
         }
-        c.commit()
+        // SUCCESS_NO_INFO (-2) drivers don't report per-statement
+        // counts — the migration still applied; the total is best-effort
+        total += upd.executeBatch().filter(_ > 0).map(_.toLong).sum
       } finally upd.close()
       total
-    } catch {
-      case t: Throwable =>
-        try c.rollback() catch { case _: Throwable => () }
-        throw t
-    } finally c.close()
+    })
   }
 
   /** Coarse type family of a JDBC type code / Spark type — for the
@@ -496,64 +522,41 @@ object Jdbc {
     *
     * Precondition: one row per `keyCol` (a reduced micro-batch — what
     * [[graft.streaming.Streams.materializeCdcJdbc]] feeds). Atomicity
-    * is per partition, not per batch: a crash mid-batch can leave some
-    * partitions applied — exactly-once-EQUIVALENCE comes from the
-    * replay being idempotent, the same contract as the parquet swap
-    * path. At scale each partition streams its slice over its own
-    * connection — the reduced set is shuffle-partitioned by key, so no
-    * key spans two transactions. */
+    * is per partition ([[perPartition]]), the same
+    * exactly-once-equivalence contract as the parquet swap path; the
+    * reduced set is shuffle-partitioned by key. */
   def applyChanges(changes: DataFrame, url: String, table: String,
       keyCol: String, opCol: String, props: Map[String, String] = Map.empty): Unit = {
     val schema = changes.schema
     val payload = schema.fields.filterNot(_.name.equalsIgnoreCase(opCol))
-    val keyIdx = schema.fieldIndex(
-      schema.fields.map(_.name).find(_.equalsIgnoreCase(keyCol)).getOrElse(
-        throw new IllegalArgumentException(s"[graft] key '$keyCol' not in ${schema.fieldNames.mkString(",")}")))
-    val opIdx = schema.fieldIndex(
-      schema.fields.map(_.name).find(_.equalsIgnoreCase(opCol)).getOrElse(
-        throw new IllegalArgumentException(s"[graft] op '$opCol' not in ${schema.fieldNames.mkString(",")}")))
+    val keyIdx = fieldIdx(schema, keyCol, "key")
+    val opIdx = fieldIdx(schema, opCol, "op")
     val insertSql = s"INSERT INTO $table (${payload.map(f => quoted(f.name)).mkString(", ")}) " +
       s"VALUES (${payload.map(_ => "?").mkString(", ")})"
     val deleteSql = s"DELETE FROM $table WHERE ${quoted(schema.fields(keyIdx).name)} = ?"
     val keyType = schema.fields(keyIdx).dataType
-    // (dataType, source row index, 1-based statement position) per
-    // payload column, resolved once — not a fieldIndex lookup per row
-    val slots = payload.zipWithIndex.map { case (f, i) =>
-      (f.dataType, schema.fieldIndex(f.name), i + 1)
-    }
-    changes.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val c = connect(url, props)
-        try {
-          c.setAutoCommit(false)
-          val del = c.prepareStatement(deleteSql)
-          val ins = c.prepareStatement(insertSql)
-          try {
-            // bounded 1000-row statement batches (keys are unique
-            // within a reduced batch, so each chunk's deletes can run
-            // ahead of its inserts and chunk order is immaterial);
-            // one commit per partition either way
-            it.grouped(1000).foreach { chunk =>
-              var nIns = 0
-              chunk.foreach { row =>
-                setParam(del, 1, keyType, row, keyIdx)
-                del.addBatch()
-                if (row.getString(opIdx) != "D") {
-                  slots.foreach { case (dt, srcIdx, pos) =>
-                    setParam(ins, pos, dt, row, srcIdx)
-                  }
-                  ins.addBatch(); nIns += 1
-                }
-              }
-              del.executeBatch()
-              if (nIns > 0) ins.executeBatch()
+    val slots = slotsOf(schema, payload)
+    perPartition(changes, url, props) { (c, it) =>
+      val del = c.prepareStatement(deleteSql)
+      val ins = c.prepareStatement(insertSql)
+      try {
+        // bounded row batches (keys are unique within a reduced batch,
+        // so each chunk's deletes can run ahead of its inserts and
+        // chunk order is immaterial); one commit per partition either way
+        it.grouped(statementBatch).foreach { chunk =>
+          var nIns = 0
+          chunk.foreach { row =>
+            setParam(del, 1, keyType, row, keyIdx)
+            del.addBatch()
+            if (row.getString(opIdx) != "D") {
+              bind(ins, slots, row)
+              ins.addBatch(); nIns += 1
             }
-            c.commit()
-          } finally { del.close(); ins.close() }
-        } catch {
-          case t: Throwable => try c.rollback() catch { case _: Throwable => }; throw t
-        } finally c.close()
-      }
+          }
+          del.executeBatch()
+          if (nIns > 0) ins.executeBatch()
+        }
+      } finally { del.close(); ins.close() }
     }
   }
 
@@ -573,7 +576,7 @@ object Jdbc {
     * That is [[graft.cdc.Envelope.scd2Fold]]'s interval rule, so the
     * rows are exactly those of closing and inserting event by event.
     * Closes and inserts are JDBC statement batches, flushed at a key
-    * boundary after at most [[keysPerFlush]] keys: all closes, then
+    * boundary after at most [[statementBatch]] keys: all closes, then
     * all inserts (keys are unique per partition, so no close reaches
     * a pending insert). Closed history rows are append-only — only the
     * stored open row ever updates, the warehouse-friendly write shape.
@@ -581,9 +584,9 @@ object Jdbc {
     * Replay is a no-op row-for-row: a replayed event's valid_from is
     * ≤ the key's high water and is screened out, so at-least-once
     * delivery + this apply = exactly-once-equivalent history, the
-    * [[applyChanges]] contract. Atomicity is per partition; the input
-    * must be repartitioned by key and sorted by (key, valid_from) so
-    * one key's events apply in LSN order inside one transaction
+    * [[applyChanges]] contract. Atomicity is per partition
+    * ([[perPartition]]); the input must be repartitioned by key and
+    * sorted by (key, valid_from) so one key's events apply in LSN order
     * ([[graft.streaming.Streams.materializeScd2Jdbc]] guarantees
     * both). On a history the engine created ([[ensureScd2TableOn]])
     * the probe and the close are lookups on its `<table>_graft_key`
@@ -591,13 +594,9 @@ object Jdbc {
   def applyScd2(events: DataFrame, url: String, table: String,
       keyCol: String, tagCol: String, props: Map[String, String] = Map.empty): Unit = {
     val schema = events.schema
-    def idxOf(name: String, what: String): Int = schema.fieldIndex(
-      schema.fields.map(_.name).find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(
-          s"[graft] $what '$name' not in ${schema.fieldNames.mkString(",")}")))
-    val keyIdx = idxOf(keyCol, "key")
-    val tagIdx = idxOf(tagCol, "tag")
-    val vfIdx = idxOf("valid_from", "valid_from")
+    val keyIdx = fieldIdx(schema, keyCol, "key")
+    val tagIdx = fieldIdx(schema, tagCol, "tag")
+    val vfIdx = fieldIdx(schema, "valid_from", "valid_from")
     val keyName = schema.fields(keyIdx).name
     val keyType = schema.fields(keyIdx).dataType
     val payload = schema.fields.filterNot(_.name.equalsIgnoreCase(tagCol))
@@ -610,109 +609,93 @@ object Jdbc {
       s"WHERE ${quoted(keyName)} = ? AND ${quoted("is_current")} = 1"
     val hwmSql = s"SELECT MAX(${quoted("valid_from")}), MAX(${quoted("valid_to")}) " +
       s"FROM $table WHERE ${quoted(keyName)} = ?"
-    val slots = payload.zipWithIndex.map { case (f, i) =>
-      (f.dataType, schema.fieldIndex(f.name), i + 1)
-    }
-    events.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val c = connect(url, props)
-        try {
-          c.setAutoCommit(false)
-          val hwmSt = c.prepareStatement(hwmSql)
-          val close = c.prepareStatement(closeSql)
-          val ins = c.prepareStatement(insertSql)
-          try {
-            var curKey: Any = null
-            var haveKey = false
-            var hwm = Long.MinValue
-            var closed = false // the key's one close is queued
-            // the key's latest fresh non-delete event: its INSERT waits
-            // until the next fresh event (or the key's end) fixes valid_to
-            var pending: Row = null
-            var keys = 0; var nClose = 0; var nIns = 0
-            def insert(validTo: Option[Long]): Unit = if (pending != null) {
-              slots.foreach { case (dt, srcIdx, pos) => setParam(ins, pos, dt, pending, srcIdx) }
-              validTo match {
-                case Some(vt) => ins.setLong(vtPos, vt); ins.setInt(vtPos + 1, 0)
-                case None => ins.setNull(vtPos, sqlType(LongType)); ins.setInt(vtPos + 1, 1)
-              }
-              ins.addBatch(); nIns += 1
-              pending = null
+    val slots = slotsOf(schema, payload)
+    perPartition(events, url, props) { (c, it) =>
+      val hwmSt = c.prepareStatement(hwmSql)
+      val close = c.prepareStatement(closeSql)
+      val ins = c.prepareStatement(insertSql)
+      try {
+        var curKey: Any = null
+        var haveKey = false
+        var hwm = Long.MinValue
+        var closed = false // the key's one close is queued
+        // the key's latest fresh non-delete event: its INSERT waits
+        // until the next fresh event (or the key's end) fixes valid_to
+        var pending: Row = null
+        var keys = 0; var nClose = 0; var nIns = 0
+        def insert(validTo: Option[Long]): Unit = if (pending != null) {
+          bind(ins, slots, pending)
+          validTo match {
+            case Some(vt) => ins.setLong(vtPos, vt); ins.setInt(vtPos + 1, 0)
+            case None => ins.setNull(vtPos, sqlType(LongType)); ins.setInt(vtPos + 1, 1)
+          }
+          ins.addBatch(); nIns += 1
+          pending = null
+        }
+        def flush(): Unit = {
+          if (nClose > 0) close.executeBatch()
+          if (nIns > 0) ins.executeBatch()
+          keys = 0; nClose = 0; nIns = 0
+        }
+        // the per-key hwm cache is only sound on key-clustered,
+        // (key, valid_from)-sorted input; this is public API, so a
+        // mis-partitioned caller must fail LOUDLY, not silently
+        // write duplicate open rows. Re-appearing key → cluster
+        // violated; decreasing valid_from → sort violated. Equal
+        // valid_from stays legal: distinct events never share an
+        // LSN, so an adjacent duplicate is the same event twice and
+        // the hwm screen below already no-ops it.
+        val seenKeys = new scala.collection.mutable.HashSet[Any]
+        var prevVf = Long.MinValue
+        it.foreach { row =>
+          val k = row.get(keyIdx)
+          if (!haveKey || k != curKey) {
+            require(seenKeys.add(k),
+              s"[graft] applyScd2 input is not key-clustered: key '$k' re-appears " +
+                s"after its cluster ended — repartition by '$keyName' and " +
+                "sortWithinPartitions(key, valid_from) before calling")
+            insert(None) // the previous key's last row stays open
+            if (keys == statementBatch) flush()
+            keys += 1
+            curKey = k; haveKey = true; prevVf = Long.MinValue; closed = false
+            setParam(hwmSt, 1, keyType, row, keyIdx)
+            val rs = hwmSt.executeQuery()
+            hwm = Long.MinValue
+            if (rs.next()) {
+              val a = rs.getLong(1); if (!rs.wasNull() && a > hwm) hwm = a
+              val b = rs.getLong(2); if (!rs.wasNull() && b > hwm) hwm = b
             }
-            def flush(): Unit = {
-              if (nClose > 0) close.executeBatch()
-              if (nIns > 0) ins.executeBatch()
-              keys = 0; nClose = 0; nIns = 0
+            rs.close()
+          }
+          val vf = row.getLong(vfIdx)
+          require(vf >= prevVf,
+            s"[graft] applyScd2 input is not sorted by (key, valid_from): key '$k' " +
+              s"delivered valid_from=$vf after $prevVf")
+          prevVf = vf
+          if (vf > hwm) { // the high-water replay screen
+            hwm = vf
+            if (!closed) {
+              close.setLong(1, vf)
+              setParam(close, 2, keyType, row, keyIdx)
+              close.addBatch(); nClose += 1
+              closed = true
             }
-            // the per-key hwm cache is only sound on key-clustered,
-            // (key, valid_from)-sorted input; this is public API, so a
-            // mis-partitioned caller must fail LOUDLY, not silently
-            // write duplicate open rows. Re-appearing key → cluster
-            // violated; decreasing valid_from → sort violated. Equal
-            // valid_from stays legal: distinct events never share an
-            // LSN, so an adjacent duplicate is the same event twice and
-            // the hwm screen below already no-ops it.
-            val seenKeys = new scala.collection.mutable.HashSet[Any]
-            var prevVf = Long.MinValue
-            it.foreach { row =>
-              val k = row.get(keyIdx)
-              if (!haveKey || k != curKey) {
-                require(seenKeys.add(k),
-                  s"[graft] applyScd2 input is not key-clustered: key '$k' re-appears " +
-                    s"after its cluster ended — repartition by '$keyName' and " +
-                    "sortWithinPartitions(key, valid_from) before calling")
-                insert(None) // the previous key's last row stays open
-                if (keys == keysPerFlush) flush()
-                keys += 1
-                curKey = k; haveKey = true; prevVf = Long.MinValue; closed = false
-                setParam(hwmSt, 1, keyType, row, keyIdx)
-                val rs = hwmSt.executeQuery()
-                hwm = Long.MinValue
-                if (rs.next()) {
-                  val a = rs.getLong(1); if (!rs.wasNull() && a > hwm) hwm = a
-                  val b = rs.getLong(2); if (!rs.wasNull() && b > hwm) hwm = b
-                }
-                rs.close()
-              }
-              val vf = row.getLong(vfIdx)
-              require(vf >= prevVf,
-                s"[graft] applyScd2 input is not sorted by (key, valid_from): key '$k' " +
-                  s"delivered valid_from=$vf after $prevVf")
-              prevVf = vf
-              if (vf > hwm) { // the high-water replay screen
-                hwm = vf
-                if (!closed) {
-                  close.setLong(1, vf)
-                  setParam(close, 2, keyType, row, keyIdx)
-                  close.addBatch(); nClose += 1
-                  closed = true
-                }
-                insert(Some(vf)) // this event closes the one before it
-                if (row.getString(tagIdx) != "delete") pending = row
-              }
-            }
-            insert(None)
-            flush()
-            c.commit()
-          } finally { hwmSt.close(); close.close(); ins.close() }
-        } catch {
-          case t: Throwable => try c.rollback() catch { case _: Throwable => }; throw t
-        } finally c.close()
-      }
+            insert(Some(vf)) // this event closes the one before it
+            if (row.getString(tagIdx) != "delete") pending = row
+          }
+        }
+        insert(None)
+        flush()
+      } finally { hwmSt.close(); close.close(); ins.close() }
     }
   }
-
-  /** Key clusters per statement-batch flush in [[applyScd2]] and
-    * [[replaceScd2Keys]] — the 1,000-row bound of [[applyChanges]],
-    * counted in keys so a flush always ends at a key boundary. */
-  private val keysPerFlush = 1000
 
   /** Key-replacement write for the UNORDERED SCD2 sink
     * ([[graft.streaming.Streams.materializeScd2Jdbc]] with
     * `orderedTransport = false`): each touched key's WHOLE rebuilt
     * interval set replaces its stored rows — per partition, one
-    * transaction: DELETE the key's rows, then INSERT the rebuilt set,
-    * as statement batches flushed every ≤ [[keysPerFlush]] key
+    * transaction ([[perPartition]]): DELETE the key's rows, then INSERT
+    * the rebuilt set, as statement batches flushed every ≤ [[statementBatch]] key
     * clusters (all deletes, then all inserts — keys are unique per
     * partition). Input must be repartitioned by key (one key never
     * spans two transactions) and key-clustered; a violating caller
@@ -724,54 +707,42 @@ object Jdbc {
   def replaceScd2Keys(rows: DataFrame, url: String, table: String,
       keyCol: String, props: Map[String, String] = Map.empty): Unit = {
     val schema = rows.schema
-    val keyIdx = schema.fieldIndex(
-      schema.fields.map(_.name).find(_.equalsIgnoreCase(keyCol)).getOrElse(
-        throw new IllegalArgumentException(
-          s"[graft] key '$keyCol' not in ${schema.fieldNames.mkString(",")}")))
+    val keyIdx = fieldIdx(schema, keyCol, "key")
     val keyName = schema.fields(keyIdx).name
     val keyType = schema.fields(keyIdx).dataType
     val cols = schema.fields
     val insertSql = s"INSERT INTO $table (${cols.map(f => quoted(f.name)).mkString(", ")}) " +
       s"VALUES (${cols.map(_ => "?").mkString(", ")})"
     val deleteSql = s"DELETE FROM $table WHERE ${quoted(keyName)} = ?"
-    val slots = cols.zipWithIndex.map { case (f, i) => (f.dataType, i, i + 1) }
-    rows.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val c = connect(url, props)
-        try {
-          c.setAutoCommit(false)
-          val del = c.prepareStatement(deleteSql)
-          val ins = c.prepareStatement(insertSql)
-          try {
-            var curKey: Any = null
-            var haveKey = false
-            var keys = 0 // every queued key has ≥ 1 queued insert
-            def flush(): Unit = if (keys > 0) {
-              del.executeBatch(); ins.executeBatch(); keys = 0
-            }
-            val seenKeys = new scala.collection.mutable.HashSet[Any]
-            it.foreach { row =>
-              val k = row.get(keyIdx)
-              if (!haveKey || k != curKey) {
-                require(seenKeys.add(k),
-                  s"[graft] replaceScd2Keys input is not key-clustered: key '$k' re-appears " +
-                    s"after its cluster ended — repartition by '$keyName' before calling")
-                if (keys == keysPerFlush) flush()
-                keys += 1
-                curKey = k; haveKey = true
-                setParam(del, 1, keyType, row, keyIdx)
-                del.addBatch()
-              }
-              slots.foreach { case (dt, srcIdx, pos) => setParam(ins, pos, dt, row, srcIdx) }
-              ins.addBatch()
-            }
-            flush()
-            c.commit()
-          } finally { del.close(); ins.close() }
-        } catch {
-          case t: Throwable => try c.rollback() catch { case _: Throwable => }; throw t
-        } finally c.close()
-      }
+    val slots = slotsOf(schema, cols)
+    perPartition(rows, url, props) { (c, it) =>
+      val del = c.prepareStatement(deleteSql)
+      val ins = c.prepareStatement(insertSql)
+      try {
+        var curKey: Any = null
+        var haveKey = false
+        var keys = 0 // every queued key has ≥ 1 queued insert
+        def flush(): Unit = if (keys > 0) {
+          del.executeBatch(); ins.executeBatch(); keys = 0
+        }
+        val seenKeys = new scala.collection.mutable.HashSet[Any]
+        it.foreach { row =>
+          val k = row.get(keyIdx)
+          if (!haveKey || k != curKey) {
+            require(seenKeys.add(k),
+              s"[graft] replaceScd2Keys input is not key-clustered: key '$k' re-appears " +
+                s"after its cluster ended — repartition by '$keyName' before calling")
+            if (keys == statementBatch) flush()
+            keys += 1
+            curKey = k; haveKey = true
+            setParam(del, 1, keyType, row, keyIdx)
+            del.addBatch()
+          }
+          bind(ins, slots, row)
+          ins.addBatch()
+        }
+        flush()
+      } finally { del.close(); ins.close() }
     }
   }
 
@@ -784,12 +755,8 @@ object Jdbc {
       props: Map[String, String] = Map.empty): Option[Long] =
     withConnection(url, props) { c =>
       if (probeTable(c, horizonTable(table)).stored.isEmpty) None
-      else {
-        val st = c.createStatement()
-        try {
-          val rs = st.executeQuery(s"SELECT ${quoted("hz")} FROM ${horizonTable(table)}")
-          try { if (rs.next()) Some(rs.getLong(1)) else None } finally rs.close()
-        } finally st.close()
+      else query(c, s"SELECT ${quoted("hz")} FROM ${horizonTable(table)}") { rs =>
+        if (rs.next()) Some(rs.getLong(1)) else None
       }
     }
 
@@ -799,7 +766,7 @@ object Jdbc {
     * below any `as-of ≥ horizon` read), with the horizon recorded in a
     * one-row sidecar table `<table>_graft_horizon` that
     * [[scd2AsOfJdbc]] enforces. Marker commits FIRST in its own
-    * transaction — a crash between marker and DELETE over-refuses
+    * [[transaction]], then the DELETE in a second — a crash between marker and DELETE over-refuses
     * (reads below the marker fail although rows still exist), never
     * under-refuses. The horizon only advances. Same caller contract as
     * the parquet dial: compact only below any LSN the transport can
@@ -810,21 +777,15 @@ object Jdbc {
       s"[graft] compaction horizon can only advance: stored $h, asked $horizon — " +
         "history below the stored horizon is already gone"))
     withConnection(url, props) { c =>
-      c.setAutoCommit(false)
       val ht = horizonTable(table)
-      val st = c.createStatement()
-      try {
+      transaction(c) {
         if (probeTable(c, ht).stored.isEmpty)
-          st.executeUpdate(s"CREATE TABLE $ht (${quoted("hz")} BIGINT NOT NULL)")
-        val n = st.executeUpdate(s"UPDATE $ht SET ${quoted("hz")} = $horizon")
-        if (n == 0) st.executeUpdate(s"INSERT INTO $ht VALUES ($horizon)")
-        c.commit()
-        st.executeUpdate(s"DELETE FROM $table WHERE ${quoted("valid_to")} IS NOT NULL " +
-          s"AND ${quoted("valid_to")} <= $horizon")
-        c.commit()
-      } catch {
-        case t: Throwable => try c.rollback() catch { case _: Throwable => }; throw t
-      } finally st.close()
+          update(c, s"CREATE TABLE $ht (${quoted("hz")} BIGINT NOT NULL)")
+        if (update(c, s"UPDATE $ht SET ${quoted("hz")} = $horizon") == 0)
+          update(c, s"INSERT INTO $ht VALUES ($horizon)")
+      }
+      transaction(c)(update(c, s"DELETE FROM $table WHERE ${quoted("valid_to")} IS NOT NULL " +
+        s"AND ${quoted("valid_to")} <= $horizon"))
     }
   }
 
@@ -846,9 +807,8 @@ object Jdbc {
     * lower keeps the stored row, unseen keys insert. Deletes are
     * TOMBSTONE rows (`opCol`='D') kept in the table so a late older
     * update cannot resurrect a deleted key — read live rows with
-    * `WHERE op <> 'D'`. Per partition and per key (keys are unique in
-    * a reduced batch and shuffle-partitioned, so no key spans two
-    * transactions):
+    * `WHERE op <> 'D'`. Per partition ([[perPartition]]; keys are
+    * unique in a reduced batch) and per key:
     *
     *  1. batched `UPDATE … WHERE key = ? AND version < ?` — the CAS;
     *     the returned update counts say which rows matched nothing;
@@ -865,12 +825,9 @@ object Jdbc {
       keyCol: String, versionCol: String, opCol: String,
       props: Map[String, String] = Map.empty): Unit = {
     val schema = changes.schema
-    def idx(name: String, what: String): Int = schema.fieldIndex(
-      schema.fields.map(_.name).find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"[graft] $what '$name' not in ${schema.fieldNames.mkString(",")}")))
-    val keyIdx = idx(keyCol, "key")
-    val verIdx = idx(versionCol, "version")
-    idx(opCol, "op") // presence check; tombstones are stored, not filtered
+    val keyIdx = fieldIdx(schema, keyCol, "key")
+    val verIdx = fieldIdx(schema, versionCol, "version")
+    fieldIdx(schema, opCol, "op") // presence check; tombstones are stored, not filtered
     val keyName = schema.fields(keyIdx).name
     val nonKey = schema.fields.filterNot(_.name.equalsIgnoreCase(keyCol))
     val updateSql = s"UPDATE $table SET " +
@@ -891,47 +848,34 @@ object Jdbc {
     val insertSql = s"INSERT INTO $table (${schema.fields.map(f => quoted(f.name)).mkString(", ")}) " +
       s"SELECT ${schema.fields.map(_ => "?").mkString(", ")} $oneRowFrom " +
       s"WHERE NOT EXISTS (SELECT 1 FROM $table WHERE ${quoted(keyName)} = ?)"
-    val updSlots = nonKey.zipWithIndex.map { case (f, i) =>
-      (f.dataType, schema.fieldIndex(f.name), i + 1)
-    }
-    val insSlots = schema.fields.zipWithIndex.map { case (f, i) =>
-      (f.dataType, schema.fieldIndex(f.name), i + 1)
-    }
+    val updSlots = slotsOf(schema, nonKey)
+    val insSlots = slotsOf(schema, schema.fields)
     val keyType = schema.fields(keyIdx).dataType
     val verType = schema.fields(verIdx).dataType
-    changes.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val c = connect(url, props)
-        try {
-          c.setAutoCommit(false)
-          val upd = c.prepareStatement(updateSql)
-          val ins = c.prepareStatement(insertSql)
-          try {
-            // bounded chunks: the update-count ↔ row correlation only
-            // needs one chunk in memory, not the whole partition
-            it.grouped(1000).foreach { chunk =>
-              chunk.foreach { row =>
-                updSlots.foreach { case (dt, srcIdx, pos) => setParam(upd, pos, dt, row, srcIdx) }
-                setParam(upd, updSlots.length + 1, keyType, row, keyIdx)
-                setParam(upd, updSlots.length + 2, verType, row, verIdx)
-                upd.addBatch()
-              }
-              val counts = upd.executeBatch()
-              var nIns = 0
-              chunk.indices.filter(i => needsInsertAttempt(counts(i))).foreach { i =>
-                val row = chunk(i)
-                insSlots.foreach { case (dt, srcIdx, pos) => setParam(ins, pos, dt, row, srcIdx) }
-                setParam(ins, insSlots.length + 1, keyType, row, keyIdx)
-                ins.addBatch(); nIns += 1
-              }
-              if (nIns > 0) ins.executeBatch()
-            }
-            c.commit()
-          } finally { upd.close(); ins.close() }
-        } catch {
-          case t: Throwable => try c.rollback() catch { case _: Throwable => }; throw t
-        } finally c.close()
-      }
+    perPartition(changes, url, props) { (c, it) =>
+      val upd = c.prepareStatement(updateSql)
+      val ins = c.prepareStatement(insertSql)
+      try {
+        // bounded row batches: the update-count ↔ row correlation only
+        // needs one chunk in memory, not the whole partition
+        it.grouped(statementBatch).foreach { chunk =>
+          chunk.foreach { row =>
+            bind(upd, updSlots, row)
+            setParam(upd, updSlots.length + 1, keyType, row, keyIdx)
+            setParam(upd, updSlots.length + 2, verType, row, verIdx)
+            upd.addBatch()
+          }
+          val counts = upd.executeBatch()
+          var nIns = 0
+          chunk.indices.filter(i => needsInsertAttempt(counts(i))).foreach { i =>
+            val row = chunk(i)
+            bind(ins, insSlots, row)
+            setParam(ins, insSlots.length + 1, keyType, row, keyIdx)
+            ins.addBatch(); nIns += 1
+          }
+          if (nIns > 0) ins.executeBatch()
+        }
+      } finally { upd.close(); ins.close() }
     }
   }
 
@@ -954,14 +898,12 @@ object Jdbc {
     * parquet state's backfill. One driver-side statement; a replayed
     * batch recomputes the same id → idempotent. */
   def backfillNullStamps(url: String, table: String, stampCol: String,
-      batchId: Long, props: Map[String, String] = Map.empty): Unit = {
-    val c = connect(url, props)
-    try {
+      batchId: Long, props: Map[String, String] = Map.empty): Unit =
+    withConnection(url, props) { c =>
       val st = c.prepareStatement(
         s"UPDATE $table SET ${quoted(stampCol)} = ? WHERE ${quoted(stampCol)} IS NULL")
       try { st.setLong(1, batchId); st.executeUpdate() } finally st.close()
-    } finally c.close()
-  }
+    }
 
   /** Tombstone GC for CAS-mode tables ([[applyChangesVersioned]]):
     * delete tombstone rows whose arrival-batch stamp predates the
@@ -970,14 +912,12 @@ object Jdbc {
     * issues the identical DELETE — idempotent like the apply. */
   def deleteExpiredTombstones(url: String, table: String, opCol: String,
       batchStampCol: String, olderThan: Long,
-      props: Map[String, String] = Map.empty): Unit = {
-    val c = connect(url, props)
-    try {
+      props: Map[String, String] = Map.empty): Unit =
+    withConnection(url, props) { c =>
       val st = c.prepareStatement(
         s"DELETE FROM $table WHERE ${quoted(opCol)} = 'D' AND ${quoted(batchStampCol)} < ?")
       try { st.setLong(1, olderThan); st.executeUpdate() } finally st.close()
-    } finally c.close()
-  }
+    }
 
   private def setParam(ps: java.sql.PreparedStatement, pos: Int,
       dt: DataType, row: Row, idx: Int): Unit =

@@ -1707,6 +1707,21 @@ object Streams {
     * this, so the dial is conservative). */
   private[streaming] val scd2JdbcInChunk = 1000
 
+  /** The driver-side step before every JDBC apply ([[applyBatchJdbc]],
+    * [[applyBatchScd2Jdbc]]): ONE connection and ONE metadata probe per
+    * batch for both the drift guard and `ensure` (`Jdbc.ensureTableOn`,
+    * or `Jdbc.ensureScd2TableOn` for a history), instead of a
+    * connection and a re-resolved identifier + columns per step. */
+  private def guardAndEnsureJdbc(url: String, table: String, props: Map[String, String],
+      schema: org.apache.spark.sql.types.StructType, keyCol: String,
+      allowSinkOnlyColumns: Boolean)(ensure: (java.sql.Connection, String,
+        org.apache.spark.sql.types.StructType, String, graft.sources.Jdbc.TableProbe) => Unit): Unit =
+    graft.sources.Jdbc.withConnection(url, props) { c =>
+      val probe = graft.sources.Jdbc.probeTable(c, table)
+      requireCompatibleDriftJdbc(probe.columns, url, table, schema, allowSinkOnlyColumns)
+      ensure(c, table, schema, keyCol, probe)
+    }
+
   /** One relation's micro-batch folded into its JDBC SCD2 history —
     * the per-target apply [[materialize]] runs for [[materializeScd2Jdbc]]
     * and [[materializeScd2JdbcTables]] (the [[applyBatchJdbc]] split,
@@ -1722,11 +1737,8 @@ object Streams {
           org.apache.spark.sql.types.LongType, nullable = true),
         org.apache.spark.sql.types.StructField("is_current",
           org.apache.spark.sql.types.IntegerType, nullable = false)))
-    graft.sources.Jdbc.withConnection(url, props) { c =>
-      val probe = graft.sources.Jdbc.probeTable(c, table)
-      requireCompatibleDriftJdbc(probe.columns, url, table, histSchema, allowSinkOnlyColumns)
-      graft.sources.Jdbc.ensureScd2TableOn(c, table, histSchema, keyCol, probe)
-    }
+    guardAndEnsureJdbc(url, table, props, histSchema, keyCol, allowSinkOnlyColumns)(
+      graft.sources.Jdbc.ensureScd2TableOn)
     if (orderedTransport)
       // one key never spans two transactions, and its events apply
       // in LSN order inside the partition. Per key: one hwm probe,
@@ -1816,21 +1828,12 @@ object Streams {
       orderedTransport: Boolean, casTombstoneRetention: Long,
       allowSinkOnlyColumns: Boolean, backfillStamps: Boolean): Unit = {
     val reduced = reduceBatch(projected, keyCol)
-    // ONE connection, ONE metadata probe per batch for the drift guard
-    // AND ensureTable — previously each opened its own connection and
-    // re-resolved the identifier + columns, doubling the driver-side
-    // metadata round-trips on every touched relation
-    def guardAndEnsure(schema: org.apache.spark.sql.types.StructType): Unit =
-      graft.sources.Jdbc.withConnection(url, props) { c =>
-        val probe = graft.sources.Jdbc.probeTable(c, table)
-        requireCompatibleDriftJdbc(probe.columns, url, table, schema, allowSinkOnlyColumns)
-        graft.sources.Jdbc.ensureTableOn(c, table, schema, keyCol, probe)
-      }
     if (orderedTransport) {
       val changes = reduced.drop("lsn")
       val payload = org.apache.spark.sql.types.StructType(
         changes.schema.fields.filterNot(_.name.equalsIgnoreCase("op")))
-      guardAndEnsure(payload)
+      guardAndEnsureJdbc(url, table, props, payload, keyCol, allowSinkOnlyColumns)(
+        graft.sources.Jdbc.ensureTableOn)
       graft.sources.Jdbc.applyChanges(changes, url, table, keyCol, "op", props)
     } else {
       // arrival-batch stamp ages tombstones, as in the parquet CAS
@@ -1839,7 +1842,8 @@ object Streams {
       require(!reduced.columns.exists(_.equalsIgnoreCase(casBatchCol)),
         s"[graft] materializeCdcJdbc reserves column '$casBatchCol' — rename it in the source schema")
       val stamped = reduced.withColumn(casBatchCol, lit(batchId))
-      guardAndEnsure(stamped.schema)
+      guardAndEnsureJdbc(url, table, props, stamped.schema, keyCol, allowSinkOnlyColumns)(
+        graft.sources.Jdbc.ensureTableOn)
       // tombstone GC, same horizon contract as materializeCdc: one
       // driver-side DELETE per batch; replay recomputes the same
       // batchId → the same compaction decision (idempotent). Rows from

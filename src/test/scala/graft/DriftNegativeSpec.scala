@@ -113,7 +113,7 @@ class DriftNegativeSpec extends SparkSuite {
       Streams.envelopeStream(spark, feed.dir.toString, schema = widened), ckpt, url, "students_neg")
       .awaitTermination()
     quiesce()
-    assert(graft.sources.Jdbc.columnTypes(url, "students_neg").contains("email"), "precondition")
+    assert(graft.sources.Jdbc.columnMeta(url, "students_neg").contains("email"), "precondition")
     feed.deliver(s"""{"lsn": "0/00000020", "tag": "insert", "table": "students", ${img(2L)}}""")
     val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       Streams.materializeCdcJdbc(

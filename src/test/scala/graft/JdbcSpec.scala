@@ -1099,4 +1099,38 @@ class JdbcSpec extends SparkSuite {
     assert(survivors.count() == (0 until 40).count(i => !streamKeys.contains(i.toLong)))
     assert(survivors.filter(col("firstName").startsWith("fn_")).count() == survivors.count())
   }
+
+  test("applyChanges and applyChangesVersioned roll their partition back when a statement fails after the first 1,000-statement batch") {
+    val u = "jdbc:derby:memory:graft_lastimage_rollback;create=true"
+    def rows(table: String) = Jdbc.snapshot(spark, u, table).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    def onePartition(rows: Seq[(Long, String, Long, String)]) =
+      spark.sparkContext.parallelize(rows, 1).toDF("id", "fn", "lsn", "op")
+    // 1,100 rows: keys 1..40 exist (updates, every tenth a delete), the
+    // rest are new; the last row's 513-char value overflows the
+    // VARCHAR(512) ensureTable creates, so the database refuses it in
+    // the second statement batch, after the first 1,000 rows have run
+    val failing = (1L to 1100L).map(k =>
+      (k, if (k == 1100L) "x" * 513 else s"new$k", 100L + k, if (k % 10 == 0 && k <= 40) "D" else "U"))
+    val seed = (1L to 40L).map(k => (k, s"old$k", k, "U"))
+    def sqlState(t: Throwable): Option[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+        case e: java.sql.SQLException => e.getSQLState
+      }
+    Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit, Boolean)](
+      ("lastimage_rb", (df, t) => Jdbc.applyChanges(df, u, t, "id", "op"), false),
+      ("cas_rb", (df, t) => Jdbc.applyChangesVersioned(df, u, t, "id", "lsn", "op"), true)
+    ).foreach { case (table, apply, storesOp) =>
+      val shape = onePartition(seed)
+      Jdbc.ensureTable(u, table, (if (storesOp) shape else shape.drop("op")).schema, "id")
+      apply(onePartition(seed), table)
+      val before = rows(table)
+      assert(before.size == 40 && before.contains((7L, "old7", 7L)), s"$table: seeded")
+      val failed = intercept[Throwable](apply(onePartition(failing), table))
+      assert(sqlState(failed).contains("22001"),
+        s"$table: the 513-char value must fail in the database: $failed")
+      assert(rows(table) == before,
+        s"$table: a failed partition must roll back to the table as it was before the call")
+    }
+  }
 }
