@@ -180,9 +180,8 @@ object Fixture {
 
   /** Write the multi-table fixture as one file (idempotent), for batch
     * replay — the multi-table twin of [[materialize]]. Its OWN
-    * directory: consumers of the single-table fixture stream its
-    * parent dir whole (runner.Main), so the mixed file must not live
-    * next to it. */
+    * directory: RunnerSpec streams each fixture's parent dir whole, and
+    * its students-only case must not pick up the mixed file. */
   def materializeMultiTable(): String = {
     val dir = Paths.get(System.getProperty("java.io.tmpdir"), "graft_cdc_fixture_multi")
     Files.createDirectories(dir)

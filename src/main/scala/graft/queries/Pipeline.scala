@@ -1318,23 +1318,7 @@ object Pipeline {
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"),
         expr(VectorFns.fastNormExpr("embedding")).as("nrm")).persist()
       val cb = pqCodebook(e)
-      // encode through the PqEncode KERNEL (O(1) plan nodes; the
-      // ~1,000-node literal expansion dominated this entry's fixed
-      // cost, and production K'=256 would make it ~16,000 — see the
-      // PqEncode scaladoc). Unique-name registration dropped once the
-      // frame below is built, same hygiene as the k-means kernel.
-      val fnName = graft.expressions.VectorExpressions.registerPqEncode(s, cb)
-      // reconstruction: codebook as a foldable literal array-of-arrays,
-      // indexed by the code — constant-folded, so rv is a cheap lookup
-      def reconSub(m: Int): org.apache.spark.sql.Column =
-        element_at(
-          array((0 until pqK).map(j => array((0 until pqSub).map(t => lit(cb(m)(j)(t))): _*)): _*),
-          col("codes").getItem(m) + lit(1))
-      val enc = try {
-        e.withColumn("codes", expr(s"$fnName(embedding)"))
-          .withColumn("rv", flatten(array((0 until pqM).map(reconSub): _*)))
-          .withColumn("rnrm", sqrt(expr("aggregate(zip_with(rv, rv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")))
-      } finally graft.expressions.VectorExpressions.dropTempFunction(s, fnName)
+      val enc = pqEncodeReconstruct(s, e, cb)
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
       // ADC: exact query against reconstructed corpus
@@ -2356,16 +2340,7 @@ object Pipeline {
     // PQ encode of the corpus (p24's kernel + reconstruction literals)
     val cb = scala.concurrent.Await.result(
       cbP.future, scala.concurrent.duration.Duration.Inf)
-    val fnName = graft.expressions.VectorExpressions.registerPqEncode(s, cb)
-    def reconSub(m: Int): org.apache.spark.sql.Column =
-      element_at(
-        array((0 until pqK).map(j => array((0 until pqSub).map(t => lit(cb(m)(j)(t))): _*)): _*),
-        col("codes").getItem(m) + lit(1))
-    val enc = try {
-      e.withColumn("codes", expr(s"$fnName(embedding)"))
-        .withColumn("rv", flatten(array((0 until pqM).map(reconSub): _*)))
-        .withColumn("rnrm", sqrt(expr("aggregate(zip_with(rv, rv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")))
-    } finally graft.expressions.VectorExpressions.dropTempFunction(s, fnName)
+    val enc = pqEncodeReconstruct(s, e, cb)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
     // probe ranking against the TRAINED centroids (p22's convention:
@@ -3733,6 +3708,31 @@ object Pipeline {
     graft.ops.Whitening(mu, v1, v2, g1, g2)
   }
 
+  /** PQ encode + reconstruction of `df`'s `embedding` column under
+    * codebook `cb`: adds `codes` (the M sub-codes), `rv` (the
+    * reconstructed vector) and `rnrm` (its norm) — shared by p24, p50
+    * and the ANN stacks. Encode runs through the PqEncode KERNEL (O(1)
+    * plan nodes; the ~1,000-node literal expansion dominated p24's
+    * fixed cost, and production K'=256 would make it ~16,000 — see the
+    * PqEncode scaladoc). Its unique-name registration is dropped once
+    * the frame is built, same hygiene as the k-means kernel.
+    * Reconstruction indexes the codebook as a foldable literal
+    * array-of-arrays by the code — constant-folded, so `rv` is a cheap
+    * lookup. */
+  private def pqEncodeReconstruct(s: SparkSession, df: DataFrame,
+      cb: Array[Array[Array[Double]]]): DataFrame = {
+    val fnName = graft.expressions.VectorExpressions.registerPqEncode(s, cb)
+    def reconSub(m: Int): org.apache.spark.sql.Column =
+      element_at(
+        array((0 until pqK).map(j => array((0 until pqSub).map(t => lit(cb(m)(j)(t))): _*)): _*),
+        col("codes").getItem(m) + lit(1))
+    try {
+      df.withColumn("codes", expr(s"$fnName(embedding)"))
+        .withColumn("rv", flatten(array((0 until pqM).map(reconSub): _*)))
+        .withColumn("rnrm", sqrt(expr("aggregate(zip_with(rv, rv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")))
+    } finally graft.expressions.VectorExpressions.dropTempFunction(s, fnName)
+  }
+
   /** The APPLY half: condition any `(vec_id, embedding)` frame under a
     * trained transform — center with the stored mu (the exact
     * pcaCenter expression), project onto v1/v2 as exact e6 integers,
@@ -3822,16 +3822,7 @@ object Pipeline {
       val wht = whitenedEmbeddings(s, d)
       // p24's PQ machinery, codebook and codes in WHITENED space
       val cb = pqCodebook(wht)
-      val fnName = graft.expressions.VectorExpressions.registerPqEncode(s, cb)
-      def reconSub(m: Int): org.apache.spark.sql.Column =
-        element_at(
-          array((0 until pqK).map(j => array((0 until pqSub).map(t => lit(cb(m)(j)(t))): _*)): _*),
-          col("codes").getItem(m) + lit(1))
-      val enc = try {
-        wht.withColumn("codes", expr(s"$fnName(embedding)"))
-          .withColumn("rv", flatten(array((0 until pqM).map(reconSub): _*)))
-          .withColumn("rnrm", sqrt(expr("aggregate(zip_with(rv, rv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")))
-      } finally graft.expressions.VectorExpressions.dropTempFunction(s, fnName)
+      val enc = pqEncodeReconstruct(s, wht, cb)
       val qs = wht.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("wnrm").as("qn"))
       val dotA = "aggregate(zip_with(qe, rv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"

@@ -1,21 +1,24 @@
 package graft.runner
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.cdc.Envelope
 import graft.streaming.Streams
 
 /** Composition root mirroring the reference's three entry points
-  * (SURVEY §3.1–3.3, `/root/reference/src/main.ts:144-189`):
+  * (SURVEY §3.1–3.3, the reference's `src/main.ts:144-189`):
   *
-  *   stream <envelopeDir> <checkpointDir> <outDir>   — the live CDC path
-  *   batch  <snapshotParquet> <outDir>               — snapshot load
-  *   sql    <tableDir> <query...>                    — DDL/query passthrough
+  *   stream <envelopeDir> <checkpointDir> <stateRoot> — the live CDC path
+  *   batch  <snapshotParquet> <outDir>                — snapshot load
+  *   sql    <tableDir> <query...>                     — DDL/query passthrough
   *
   * Lifecycle parity, upgraded where the reference is broken:
   *  - config validation at startup (`require`, vs io-ts decode) fails
   *    fast like the reference's Either short-circuit;
-  *  - the listener boundary is `foreachBatch` (A2), with the offset
-  *    commit AFTER the sink write (A9) — not the reference's 10 s
+  *  - stream mode is the engine's multi-table materializer
+  *    ([[Streams.materializeCdcTables]]) over the reference's
+  *    publication: one FOR ALL TABLES stream demuxed into one parquet
+  *    last-image state per relation at `<stateRoot>/<relation>`, with the
+  *    offset commit AFTER the sink write (A9) — not the reference's 10 s
   *    auto-ack-even-on-failure;
   *  - SIGINT-driven graceful shutdown (`main.ts:101-142`) becomes a JVM
   *    shutdown hook stopping the query, then the session.
@@ -30,31 +33,21 @@ object Main {
       .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
 
-  /** The CDC transform shared by stream and batch replay: filter
-    * control tags, project row images, apply last-image-wins. */
-  private[runner] def finalState(envelopes: DataFrame): DataFrame =
-    Envelope.lastImageByKey(Envelope.project(envelopes))
+  /** The reference's publication (`query.ts:12`): the relations one slot carries. */
+  val relations: Seq[Envelope.Relation] = Seq(Envelope.studentsRelation, Envelope.statusRelation)
 
-  /** Stream mode body: append each batch's projected row images to a
-    * log-structured parquet table; [[readFinalState]] compacts on read.
-    * A batch retried after a sink-side failure appends duplicates, and
-    * last-image-wins by LSN resolves them identically — the idempotent
-    * commit-after-sink contract Q19 tests (vs the reference's
-    * ack-on-a-timer, `PostgresOperation.ts:24-29`). */
-  def runStream(spark: SparkSession, in: String, ckpt: String,
-      out: String): Unit = {
-    val q = Streams.runForeachBatch(
-      Streams.envelopeStream(spark, in), ckpt,
-      (batch, _) => Envelope.project(batch).write.mode("append").parquet(out))
-    sys.addShutdownHook(q.stop()) // SIGINT parity (main.ts:101-142)
-    q.awaitTermination()
+  /** Stream mode body. Relation `r`'s live rows are then
+    * `Streams.cdcLiveState(spark, s"$stateRoot/${r.name}")`; a rerun
+    * over the same state converges to the same rows. */
+  def runStream(spark: SparkSession, in: String, ckpt: String, stateRoot: String): Unit = {
+    val q = Streams.materializeCdcTables(
+      Streams.envelopeStream(spark, in, schema = Envelope.unionSchema(relations)),
+      ckpt, stateRoot, relations)
+    val hook = sys.addShutdownHook(q.stop()) // SIGINT parity (main.ts:101-142)
+    // drop the hook with its query; during JVM shutdown it has already run
+    try q.awaitTermination()
+    finally try hook.remove() catch { case _: IllegalStateException => () }
   }
-
-  /** Compact the appended image log to current state (delete-aware). */
-  def readFinalState(spark: SparkSession, out: String): DataFrame =
-    // plain inference, not Tables.readParquet: the log's files come from
-    // many appends whose schemas may differ
-    Envelope.lastImageByKey(spark.read.parquet(out))
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: stream|batch|sql <args...>")
@@ -63,7 +56,7 @@ object Main {
 
     args(0) match {
       case "stream" =>
-        require(args.length == 4, "stream <envelopeDir> <checkpointDir> <outDir>")
+        require(args.length == 4, "stream <envelopeDir> <checkpointDir> <stateRoot>")
         runStream(spark, args(1), args(2), args(3))
 
       case "batch" =>

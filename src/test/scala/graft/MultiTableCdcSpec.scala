@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.cdc.{Envelope, Fixture}
 import graft.streaming.Streams
+import graft.CdcFolds._
 
 /** Multi-table CDC demux (round 10's lead item): the reference's
   * publication is `FOR ALL TABLES` (`/root/reference/src/utilities/
@@ -21,41 +22,12 @@ class MultiTableCdcSpec extends SparkSuite {
   private val relations = Seq(Envelope.studentsRelation, Envelope.statusRelation)
   private val union = Envelope.unionSchema(relations)
 
-  /** Independent oracle: sequential last-image fold of students events. */
-  private def studentsFinal: Map[Long, (String, String, String, Int)] = {
-    val m = scala.collection.mutable.LinkedHashMap[Long, (String, String, String, Int)]()
-    Fixture.rowEvents.foreach { e =>
-      if (e.tag == "delete") m -= e.id
-      else m(e.id) = (e.firstName, e.lastName, e.dateOfBirth, e.statusId)
-    }
-    m.toMap
-  }
-
-  /** Independent oracle: sequential last-image fold of status events. */
-  private def statusFinal: Map[Long, String] = {
-    val m = scala.collection.mutable.LinkedHashMap[Long, String]()
-    Fixture.statusEvents.foreach { e =>
-      if (e.tag == "delete") m -= e.id
-      else m(e.id) = e.value
-    }
-    m.toMap
-  }
-
   private def quiesce(): Unit = {
     var waited = 0
     while (spark.streams.active.nonEmpty && waited < 10000) {
       Thread.sleep(100); waited += 100
     }
   }
-
-  private def collectStudents(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => r.getLong(r.fieldIndex("id")) ->
-      ((r.getString(r.fieldIndex("firstName")), r.getString(r.fieldIndex("lastName")),
-        r.getDate(r.fieldIndex("dateOfBirth")).toString, r.getInt(r.fieldIndex("status"))))).toMap
-
-  private def collectStatus(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => r.getLong(r.fieldIndex("id")) ->
-      r.getString(r.fieldIndex("value"))).toMap
 
   test("fixture precondition: relations interleave and their key spaces overlap") {
     // the un-demuxed failure mode is cross-table key merging — it only
@@ -149,8 +121,7 @@ class MultiTableCdcSpec extends SparkSuite {
     quiesce()
     val students = spark.read.parquet(s"$root/students")
     val status = spark.read.parquet(s"$root/status")
-    assert(collectStudents(students) == studentsFinal.map { case (k, (f, l, d, s)) =>
-      k -> ((f, l, d, s)) },
+    assert(collectStudents(students) == studentsFinal,
       "students state must equal the students-only sequential fold")
     assert(collectStatus(status) == statusFinal,
       "status state must equal the status-only sequential fold")
@@ -187,7 +158,7 @@ class MultiTableCdcSpec extends SparkSuite {
       orderedTransport = false).awaitTermination()
     quiesce()
     assert(collectStudents(Streams.cdcLiveState(spark, s"$root/students")) ==
-      studentsFinal.map { case (k, (f, l, d, s)) => k -> ((f, l, d, s)) })
+      studentsFinal)
     assert(collectStatus(Streams.cdcLiveState(spark, s"$root/status")) == statusFinal,
       "per-relation LSN CAS must converge under reversed mixed delivery")
   }
@@ -312,8 +283,7 @@ class MultiTableCdcSpec extends SparkSuite {
     quiesce()
     val students = graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_students")
     val status = graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_status")
-    assert(collectStudents(students) == studentsFinal.map { case (k, (f, l, d, s)) =>
-      k -> ((f, l, d, s)) })
+    assert(collectStudents(students) == studentsFinal)
     assert(collectStatus(status) == statusFinal)
     // lost-commit replay is a per-relation no-op (idempotent applies)
     val commitsDir = new java.io.File(ckpt, "commits")
@@ -327,7 +297,7 @@ class MultiTableCdcSpec extends SparkSuite {
     quiesce()
     assert(collectStudents(
       graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_students")) ==
-      studentsFinal.map { case (k, (f, l, d, s)) => k -> ((f, l, d, s)) })
+      studentsFinal)
     assert(collectStatus(
       graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_status")) == statusFinal,
       "replaying the lost batch must be a no-op on every relation's table")
@@ -352,7 +322,7 @@ class MultiTableCdcSpec extends SparkSuite {
     quiesce()
     assert(collectStudents(
       Streams.cdcLiveStateJdbc(spark, sinkUrl, "cas_students")) ==
-      studentsFinal.map { case (k, (f, l, d, s)) => k -> ((f, l, d, s)) })
+      studentsFinal)
     assert(collectStatus(
       Streams.cdcLiveStateJdbc(spark, sinkUrl, "cas_status")) == statusFinal)
   }
@@ -387,7 +357,7 @@ class MultiTableCdcSpec extends SparkSuite {
     val states = Streams.snapshotThenStreamTables(env, relations, snaps)
     // students: stream-final images win; snapshot-only id 1000 survives
     val students = collectStudents(states("students"))
-    val expectStudents = studentsFinal.map { case (k, (f, l, d, s)) => k -> ((f, l, d, s)) } +
+    val expectStudents = studentsFinal +
       (1000L -> (("Snap", "Only", "1970-01-01", 1)))
     assert(studentsFinal.contains(0L) || !students.contains(0L),
       "fixture precondition: id 0 is stream-touched")
@@ -477,7 +447,7 @@ class MultiTableCdcSpec extends SparkSuite {
     quiesce()
     assert(commits == Seq("0", "1"))
     assert(collectStudents(spark.read.parquet(s"$root/students")) ==
-      studentsFinal.map { case (k, (f, l, d, s)) => k -> ((f, l, d, s)) },
+      studentsFinal,
       "replay onto the already-swapped students state must be idempotent")
     assert(collectStatus(spark.read.parquet(s"$root/status")) == statusFinal,
       "the failed relation must complete on replay")
@@ -656,7 +626,7 @@ class MultiTableCdcSpec extends SparkSuite {
       maxConcurrentRelations = 2).awaitTermination()
     quiesce()
     assert(collectStudents(spark.read.parquet(s"$root/students")) ==
-      studentsFinal.map { case (k, (f, l, d, s)) => k -> ((f, l, d, s)) })
+      studentsFinal)
     assert(collectStatus(spark.read.parquet(s"$root/status")) == statusFinal)
   }
 

@@ -1867,9 +1867,12 @@ class StreamsExtraSpec extends SparkSuite {
       .maxBy(_.getName.toLong)
     assert(newest.delete())
     new java.io.File(commitsDir, s".${newest.getName}.crc").delete()
-    run(); quiesce()
+    val replayJobs = jobsDuring { run(); quiesce() }
     assert(membership() == before,
       "replaying a batch whose commit was lost must be a no-op on the index")
+    // exact pin on the replayed busy batch: a change to the maintainer's
+    // job count must show here, in either direction
+    assert(replayJobs == 15, s"a busy maintainIvfMembership batch ran $replayJobs jobs; pinned at 15")
     // retargeting the model on a live checkpoint refuses: the index
     // must never mix two quantizers' assignments
     graft.ops.IndexStore.saveKMeans(spark, model, s"$root/model2")
@@ -1985,7 +1988,10 @@ class StreamsExtraSpec extends SparkSuite {
       .maxBy(_.getName.toLong)
     assert(newest.delete())
     new java.io.File(commitsDir, s".${newest.getName}.crc").delete()
-    run(); quiesce()
+    val replayJobs = jobsDuring { run(); quiesce() }
+    // exact pin on the replayed busy batch: a change to the maintainer's
+    // job count must show here, in either direction
+    assert(replayJobs == 70, s"a busy maintainDedupIndex batch ran $replayJobs jobs; pinned at 70")
     val decAfter = spark.read.parquet(s"$root/decisions")
       .select(col("inc_id"), col("decision")).collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
