@@ -197,7 +197,13 @@ object Merge {
     * need no shuffle. `touchedKeys` must carry a column named `key` and
     * exactly the keys of `changes` (duplicates are fine: it only feeds
     * the pass-through anti join). A change set that lacks a base value
-    * column takes the join shape, as in [[upsertSmallChanges]]. */
+    * column takes the join shape, as in [[upsertSmallChanges]].
+    *
+    * When `touchedKeys` is a driver-side relation (its optimized plan is
+    * a `LocalRelation`) of a key type [[graft.expressions.InKeySet]]
+    * compares exactly, the pass-through is a filter of the base by that
+    * key set instead of a broadcast anti join: no broadcast job, no
+    * shuffle, and one generated class for every key set. */
   private[graft] def upsertFullImages(base: DataFrame, changes: DataFrame, key: String,
       opCol: String, touchedKeys: DataFrame): DataFrame =
     smallChanges(base, changes, key, opCol, partialImages = false, cacheMatched = false,
@@ -212,10 +218,13 @@ object Merge {
     val inChanges = changeColMatcher(base, changes)
     val isDelete = col(op) <=> lit("D")
     val keys = touchedKeys.getOrElse(checked).select(col(k))
-    // base rows whose key has no change: pass through (scan + broadcast anti)
-    val untouched = base
-      .join(broadcast(keys), Seq(k), "left_anti")
-      .select(col(k) +: valueCols.map(col): _*)
+    // base rows whose key has no change: pass through (scan + broadcast
+    // anti, or scan + filter by a driver-side key set)
+    val passThrough = touchedKeys.flatMap(driverKeySet(_, k, base.schema(k).dataType)) match {
+      case Some(set) => notInKeySet(base, k, set)
+      case None => base.join(broadcast(keys), Seq(k), "left_anti")
+    }
+    val untouched = passThrough.select(col(k) +: valueCols.map(col): _*)
     if (!partialImages && valueCols.forall(inChanges)) {
       // full images: a touched key's row is its change image verbatim
       // (or gone, for 'D'), so no base value is needed. The filter reads
@@ -252,6 +261,43 @@ object Merge {
         }: _*)
       untouched.unionByName(applied).unionByName(inserts)
     }
+  }
+
+  /** The non-null keys in column `k` of a driver-side `keys` frame, as
+    * internal values of `dt`, or None when `keys` is not a
+    * `LocalRelation` once optimized or `dt` is not a type
+    * [[graft.expressions.InKeySet]] compares exactly. Reading the
+    * optimized plan runs no job. */
+  private def driverKeySet(keys: DataFrame, k: String,
+      dt: org.apache.spark.sql.types.DataType): Option[java.util.Set[Any]] =
+    if (!graft.expressions.InKeySet.exact(dt)) None
+    else keys.select(col(k).cast(dt)).queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val set = new java.util.HashSet[Any]()
+        l.data.foreach { r =>
+          if (!r.isNullAt(0)) set.add(r.get(0, dt) match {
+            case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
+            case v => v
+          })
+        }
+        Some(set)
+      case _ => None
+    }
+
+  private val keySetSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** `base` rows whose key `k` is not in `set`. The predicate is an
+    * [[graft.expressions.InKeySet]], reached through a temp function
+    * under a per-call unique name (Spark 4 has no public
+    * Column-from-Expression); the filter is analyzed on construction,
+    * so the name is dropped right after. */
+  private def notInKeySet(base: DataFrame, k: String, set: java.util.Set[Any]): DataFrame = {
+    val registry = base.sparkSession.sessionState.functionRegistry
+    val fn = s"graft_in_key_set_${keySetSeq.incrementAndGet()}"
+    registry.createOrReplaceTempFunction(
+      fn, exprs => graft.expressions.InKeySet(exprs.head, set), "built-in")
+    try base.filter(!call_function(fn, col(k)))
+    finally registry.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(fn))
   }
 
   /** Compare-and-swap MERGE for OUT-OF-ORDER transports: the row with

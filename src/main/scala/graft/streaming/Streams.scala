@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.cdc.Envelope
 import graft.sources.Tables.readParquet
 
@@ -579,10 +580,15 @@ object Streams {
     *
     *  1. bind the checkpoint to `identity` ([[requireSinkBinding]]);
     *  2. on the run's first batch, run `onStart`;
-    *  3. persist the batch: the guard's one job, a map-side tally with
-    *     no shuffle ([[tallyTables]]), fills the cache and every apply
-    *     reads it, where unpersisted each would re-read the micro-batch
-    *     source;
+    *  3. read the batch once ([[batchFrame]]). With `driverRows` (the
+    *     parquet last-image sinks) a batch whose plan-size estimate is
+    *     within `spark.sql.autoBroadcastJoinThreshold` is collected in
+    *     that one job and served as a driver-side relation: the guard's
+    *     tally, the census and every target's projected events then
+    *     cost no job. Otherwise the batch is persisted: the guard's one
+    *     job, a map-side tally with no shuffle ([[tallyTables]]), fills
+    *     the cache and every apply reads it, where unpersisted each
+    *     would re-read the micro-batch source;
     *  4. guard, before any apply: [[requireSingleTable]] +
     *     [[requireTableBinding]] with [[Envelope.project]], or one
     *     [[tableCensus]] with [[Envelope.projectRelation]] per relation;
@@ -591,11 +597,11 @@ object Streams {
     *     outright, with no probe job, because the guard's count already
     *     proved them empty;
     *  6. run `afterBatch(batchId, firstBatch, applied target names)`,
-    *     then unpersist.
+    *     then release the batch (unpersist; nothing for driver rows).
     *
     * The checkpoint commits only after the whole frame returns. */
   private def materialize(envelopes: DataFrame, checkpoint: String, identity: String,
-      guard: Guard, applyQuiet: Boolean => Boolean = _ => false,
+      guard: Guard, driverRows: Boolean = false, applyQuiet: Boolean => Boolean = _ => false,
       onStart: () => Unit = () => (),
       afterBatch: (Long, Boolean, Set[String]) => Unit = (_, _, _) => ())(
       apply: (Target, Long, Boolean) => Unit): StreamingQuery = {
@@ -606,25 +612,51 @@ object Streams {
       requireSinkBinding(hconf, checkpoint, identity)
       val firstBatch = started.compareAndSet(false, true)
       if (firstBatch) onStart()
-      val cached = batch.persist()
+      val (frame, release) = batchFrame(batch, driverRows)
       try {
         val (counted, parallelism) = guard match {
           case SingleTable(alias, twin) =>
-            val (tbl, n) = requireSingleTable(cached, alias, twin)
+            val (tbl, n) = requireSingleTable(frame, alias, twin)
             tbl.foreach(requireTableBinding(hconf, checkpoint, _, twin, boundTable))
-            (Seq(new Target(tbl.getOrElse(""), "id", Envelope.project(cached)) -> n), 1)
+            (Seq(new Target(tbl.getOrElse(""), "id", Envelope.project(frame)) -> n), 1)
           case Demux(relations, parallelism) =>
-            val census = tableCensus(cached, relations.map(_.name))
+            val census = tableCensus(frame, relations.map(_.name))
             (relations.map(r => new Target(r.name, r.outName(r.key),
-              Envelope.projectRelation(cached.filter(col("table") === r.name), r)) ->
+              Envelope.projectRelation(frame.filter(col("table") === r.name), r)) ->
               census.getOrElse(r.name, 0L)), parallelism)
         }
         val active = counted.collect { case (t, n) if n > 0L || applyQuiet(firstBatch) => t }
         applyRelations(active, parallelism)(apply(_, batchId, firstBatch))
         afterBatch(batchId, firstBatch, active.map(_.name).toSet)
-      } finally cached.unpersist()
+      } finally release()
     })
   }
+
+  /** The frame a micro-batch's guard and applies read, and how to
+    * release it. With `driverRows`, a batch whose plan-size estimate
+    * (`optimizedPlan.stats`, no job: a foreachBatch batch carries its
+    * source files' size) is within the session's
+    * `spark.sql.autoBroadcastJoinThreshold` — the size Spark itself
+    * will hold on the driver to broadcast — is collected once and
+    * rebuilt as a driver-side `LocalRelation`. Every plan over it folds
+    * to a `LocalRelation` on the driver ([[onDriver]]), so the later
+    * reads run no job. A batch over the bound, a threshold of -1, or
+    * `driverRows = false` gets the persisted batch. */
+  private def batchFrame(batch: DataFrame, driverRows: Boolean): (DataFrame, () => Unit) = {
+    val spark = batch.sparkSession
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (driverRows && bound >= 0 && batch.queryExecution.optimizedPlan.stats.sizeInBytes <= bound)
+      (spark.createDataFrame(java.util.Arrays.asList(batch.collect(): _*), batch.schema), () => ())
+    else {
+      val cached = batch.persist()
+      (cached, () => cached.unpersist())
+    }
+  }
+
+  /** Does `df` evaluate on the driver — is its optimized plan a
+    * `LocalRelation` (Spark folds filters and projections over one)? */
+  private def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** Streaming CDC MATERIALIZATION — the reference's whole loop as one
     * operator: envelope stream → per-batch last-image reduce → MERGE
@@ -695,7 +727,7 @@ object Streams {
       statePartitions: Int = 0): StreamingQuery =
     materialize(envelopes, checkpoint,
       s"parquet:$statePath:${modeTag(orderedTransport)}${partitionTag(statePartitions)}",
-      SingleTable("materializeCdc", "materializeCdcTables")) { (t, batchId, _) =>
+      SingleTable("materializeCdc", "materializeCdcTables"), driverRows = true) { (t, batchId, _) =>
       applyBatchParquet(t.events, statePath, batchId, t.keyCol, orderedTransport,
         casTombstoneRetention, statePartitions)
     }
@@ -945,7 +977,13 @@ object Streams {
       batchId: Long, keyCol: String, orderedTransport: Boolean,
       casTombstoneRetention: Long, statePartitions: Int): Unit = {
     val spark = projected.sparkSession
-    val reduced = reduceBatch(projected, keyCol)
+    // driver rows (materialize's small-batch frame) on the ordered path
+    // reduce on the driver: no window, no shuffle, no job
+    val reduced =
+      if (orderedTransport && onDriver(projected) &&
+          graft.expressions.InKeySet.exact(projected.schema(keyCol).dataType))
+        reduceOnDriver(projected, keyCol)
+      else reduceBatch(projected, keyCol)
     require(!reduced.columns.exists(_.equalsIgnoreCase(casBatchCol)),
       s"[graft] materializeCdc reserves column '$casBatchCol' — rename it in the source schema")
     if (statePartitions > 0)
@@ -1049,8 +1087,11 @@ object Streams {
     // flat as state grows. Ordered mode scans the state ONCE: the
     // pass-through anti join takes its touched keys from the
     // pre-reduce events (the same key set, with no shuffle), so the
-    // reduce runs once, feeding only the change images. CAS mode
-    // joins both versions and scans it twice.
+    // reduce runs once, feeding only the change images. Over driver
+    // rows those keys are a driver-side relation, and Merge filters
+    // the state scan by them instead of broadcasting: the write is the
+    // relation's only job. CAS mode joins both versions and scans it
+    // twice.
     val merged0 =
       if (orderedTransport)
         graft.ops.Merge.upsertFullImages(base, changes, keyCol, "op",
@@ -1129,7 +1170,15 @@ object Streams {
     * file into every bucket dir it holds rows for — at 32 tasks × n
     * buckets an n×32 small-file explosion whose per-file open cost then
     * dominates every later read. Clustering rows by bucket first makes
-    * each bucket dir exactly one file. */
+    * each bucket dir exactly one file.
+    *
+    * An unpartitioned output is written as ⌈state bytes /
+    * `spark.sql.files.maxPartitionBytes`⌉ files, at least one, the size
+    * taken from the listing this open made. Left alone, the write emits
+    * one file per upstream partition (state splits plus change
+    * partitions): a 25 KB state became 5 files of 2–13 KB, each with
+    * its own task, footer and open cost on every later read. The
+    * coalesce adds no shuffle. */
   private final class ParquetState(spark: SparkSession, statePath: String) {
     private val state = new org.apache.hadoop.fs.Path(statePath)
     val fs: org.apache.hadoop.fs.FileSystem =
@@ -1139,6 +1188,14 @@ object Streams {
     /** The state as it stands, or None before the first write. */
     val onDisk: Option[DataFrame] =
       if (fs.exists(state)) Some(readParquet(spark, statePath)) else None
+
+    /** Files for an unpartitioned write: ⌈bytes on disk at open /
+      * maxPartitionBytes⌉, at least 1. */
+    private def files: Int = {
+      val bytes = onDisk.map(_.queryExecution.analyzed.stats.sizeInBytes).getOrElse(BigInt(0))
+      val max = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
+      ((bytes + max - 1) / max).max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt
+    }
 
     /** Is the on-disk layout already bucket-partitioned? */
     val partitioned: Boolean = onDisk.exists(_.columns.contains(bucketCol))
@@ -1161,7 +1218,8 @@ object Streams {
       * `incremental`, else whole through `<state>__swap_<swapId>`. */
     def write(out: DataFrame, swapId: Long, incremental: Boolean): Unit = {
       val bucketed = out.columns.contains(bucketCol)
-      val w0 = (if (bucketed) out.repartition(col(bucketCol)) else out).write.mode("overwrite")
+      val w0 = (if (bucketed) out.repartition(col(bucketCol)) else out.coalesce(files))
+        .write.mode("overwrite")
       val w = if (bucketed) w0.partitionBy(bucketCol) else w0
       if (incremental) w.option("partitionOverwriteMode", "dynamic").parquet(statePath)
       else {
@@ -1199,8 +1257,9 @@ object Streams {
     * relation's state equals what a dedicated single-table stream over
     * its events alone would have produced — checkpoint offsets stay
     * shared, preserving the transport's cross-table delivery position
-    * (one slot, one ack, as in the reference). The batch is persisted
-    * across the N demux passes so the source isn't re-read per
+    * (one slot, one ack, as in the reference). The batch is read once
+    * for all N demux passes: collected to the driver when it is small
+    * ([[batchFrame]]), else persisted, so the source isn't re-read per
     * relation. Events whose `table` is not registered FAIL the batch
     * loudly: silently dropping them is data loss, silently merging
     * them (the pre-demux behavior) corrupts keys across relations.
@@ -1215,7 +1274,7 @@ object Streams {
     requireDistinctStateDirs(relations)
     materialize(envelopes, checkpoint,
       s"parquet-multi:$stateRoot:${modeTag(orderedTransport)}${partitionTag(statePartitions)}",
-      Demux(relations, maxConcurrentRelations)) { (t, batchId, _) =>
+      Demux(relations, maxConcurrentRelations), driverRows = true) { (t, batchId, _) =>
       applyBatchParquet(t.events, s"$stateRoot/${t.name}", batchId, t.keyCol,
         orderedTransport, casTombstoneRetention, statePartitions)
     }
@@ -1322,8 +1381,8 @@ object Streams {
     * it: a NULL name is ignored, but its events still count. Returns
     * the observed table name (when the envelope carries one) and the
     * batch's row-change event count — the pass doubles as the persist
-    * materialization AND the caller's empty-batch probe, so no second
-    * job re-asks either question. */
+    * materialization (over driver rows it runs no job) AND the caller's
+    * empty-batch probe, so no second job re-asks either question. */
   private def requireSingleTable(batch: DataFrame, op: String,
       alt: String): (Option[String], Long) = {
     val tally = tallyTables(batch, Some(_))
@@ -1335,28 +1394,36 @@ object Streams {
     (tbls.headOption, tally.values.sum)
   }
 
-  /** Row-change events of a persisted micro-batch per `bucket(table)`
-    * (None for a NULL name, or for a batch without a `table` column),
-    * in ONE job: each partition tallies its own events and the driver
-    * merges the tallies. No Exchange means AQE stages nothing apart,
-    * so that job also fills the cache; a global aggregate would run as
-    * three (cache stage, shuffle map, result). The driver pulls one
-    * entry per bucket per partition. */
+  /** Row-change events of a micro-batch per `bucket(table)` (None for
+    * a NULL name, or for a batch without a `table` column). Over driver
+    * rows ([[batchFrame]]) the fold runs once on the driver, with no
+    * job. Over a persisted batch it is ONE job: each partition tallies
+    * its own events and the driver merges the tallies. No Exchange
+    * means AQE stages nothing apart, so that job also fills the cache;
+    * a global aggregate would run as three (cache stage, shuffle map,
+    * result). The driver pulls one entry per bucket per partition. */
   private def tallyTables(batch: DataFrame,
       bucket: String => Option[String]): Map[Option[String], Long] = {
     val name = if (batch.columns.contains("table")) col("table") else lit(null).cast("string")
-    batch.filter(Envelope.tagFilter).select(name).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val tally = scala.collection.mutable.HashMap.empty[Option[String], Long]
-        rows.foreach { r =>
-          val k = if (r.isNullAt(0)) None else bucket(r.getUTF8String(0).toString)
-          tally(k) = tally.getOrElse(k, 0L) + 1L
-        }
-        Iterator.single(tally.toMap)
-      }
-      .collect().foldLeft(Map.empty[Option[String], Long]) { (all, part) =>
-        part.foldLeft(all) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
-      }
+    val names = batch.filter(Envelope.tagFilter).select(name)
+    val parts =
+      if (onDriver(names)) Array(tally(names.queryExecution.executedPlan.executeCollect().iterator, bucket))
+      else names.queryExecution.toRdd.mapPartitions(rows => Iterator.single(tally(rows, bucket))).collect()
+    parts.foldLeft(Map.empty[Option[String], Long]) { (all, part) =>
+      part.foldLeft(all) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+    }
+  }
+
+  /** The one tally fold, run per partition on the executors or once
+    * over driver rows: `(table name)` rows counted per bucket. */
+  private def tally(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      bucket: String => Option[String]): Map[Option[String], Long] = {
+    val counts = scala.collection.mutable.HashMap.empty[Option[String], Long]
+    rows.foreach { r =>
+      val k = if (r.isNullAt(0)) None else bucket(r.getUTF8String(0).toString)
+      counts(k) = counts.getOrElse(k, 0L) + 1L
+    }
+    counts.toMap
   }
 
   /** The cross-BATCH twin of [[requireSingleTable]]: with per-table
@@ -1476,10 +1543,11 @@ object Streams {
   }
 
   /** One census per demuxed micro-batch: row-change event count per
-    * REGISTERED table name, from one [[tallyTables]] pass. The pass
-    * doubles as the persist materialization — the first action over
-    * the cached batch — and its result answers BOTH guard questions
-    * with zero further jobs on the happy path:
+    * REGISTERED table name, from one [[tallyTables]] pass. Over a
+    * persisted batch the pass doubles as the persist materialization —
+    * the first action over the cached batch; over driver rows it runs
+    * no job. Its result answers BOTH guard questions with zero further
+    * jobs on the happy path:
     *
     *  - events for tables absent from the registry fail the batch
     *    loudly (data loss if dropped, cross-relation corruption if
@@ -1593,15 +1661,46 @@ object Streams {
     * schema. ('lsn'/'tag' are the envelope's own bookkeeping —
     * Envelope.project already owns those names.) */
   private def reduceBatch(projected: DataFrame, keyCol: String): DataFrame = {
-    require(!projected.columns.exists(_.equalsIgnoreCase("op")),
-      s"[graft] CDC materialization reserves column 'op' for the change-op marker — " +
-        s"rename it in the source schema: ${projected.columns.mkString("[", ", ", "]")}")
+    requireNoOpColumn(projected)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(keyCol)).orderBy(col("lsn").desc)
     projected
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .withColumn("op", when(col("tag") === "delete", lit("D")).otherwise(lit("U")))
       .drop("__rn", "tag")
+  }
+
+  private def requireNoOpColumn(projected: DataFrame): Unit =
+    require(!projected.columns.exists(_.equalsIgnoreCase("op")),
+      s"[graft] CDC materialization reserves column 'op' for the change-op marker — " +
+        s"rename it in the source schema: ${projected.columns.mkString("[", ", ", "]")}")
+
+  /** [[reduceBatch]] over driver rows ([[batchFrame]]), folded on the
+    * driver by `lastImageByKey`'s rule: per key the highest LSN wins and
+    * a NULL LSN loses, as `orderBy(lsn.desc)` (NULLS LAST) ranks them;
+    * LSNs compare as Spark compares strings. Same columns out (`tag`
+    * dropped, `op` appended), as a driver-side relation. The key's type
+    * must satisfy [[graft.expressions.InKeySet.exact]], so its external
+    * values group exactly as the window's partitioning does. */
+  private def reduceOnDriver(projected: DataFrame, keyCol: String): DataFrame = {
+    requireNoOpColumn(projected)
+    val schema = projected.schema
+    val (ki, li, ti) = (schema.fieldIndex(keyCol), schema.fieldIndex("lsn"), schema.fieldIndex("tag"))
+    def lsn(r: org.apache.spark.sql.Row) =
+      Option(r.getString(li)).map(org.apache.spark.unsafe.types.UTF8String.fromString)
+    val last = scala.collection.mutable.LinkedHashMap.empty[Any, org.apache.spark.sql.Row]
+    projected.collect().foreach { r =>
+      val wins = last.get(r.get(ki)).forall(w => (lsn(r), lsn(w)) match {
+        case (Some(a), Some(b)) => a.compareTo(b) > 0
+        case (a, b) => a.isDefined && b.isEmpty
+      })
+      if (wins) last(r.get(ki)) = r
+    }
+    val keep = schema.fields.indices.filter(_ != ti)
+    val images = last.values.map(r => org.apache.spark.sql.Row.fromSeq(
+      keep.map(r.get) :+ (if (r.getString(ti) == "delete") "D" else "U"))).toSeq
+    projected.sparkSession.createDataFrame(java.util.Arrays.asList(images: _*),
+      StructType(keep.map(schema.fields) :+ StructField("op", StringType, nullable = false)))
   }
 
   /** Streaming CDC materialization into a QUERYABLE JDBC TABLE — the

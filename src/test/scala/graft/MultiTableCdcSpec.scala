@@ -111,33 +111,69 @@ class MultiTableCdcSpec extends SparkSuite {
       "registry projection must reproduce the hand-written students mapping")
   }
 
+  /** Run `body` with the session's `spark.sql.autoBroadcastJoinThreshold`
+    * set to `value` (None: as configured), restored afterwards. A stream
+    * copies the session conf when it starts, so the setting covers every
+    * stream `body` starts. -1 puts every micro-batch over the parquet
+    * last-image sinks' driver-rows bound. */
+  private def withBroadcastThreshold[T](value: Option[String])(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    value.foreach(spark.conf.set(key, _))
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("materializeCdcTables (ordered): one mixed stream lands one consistent state table per relation") {
-    val in = Fixture.materializeMultiTableChunks(5)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mt_ckpt").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_mt_state").toString
-    Streams.materializeCdcTables(
-      Streams.envelopeStream(spark, in, schema = union), ckpt, root, relations)
-      .awaitTermination()
+    // one input on each side of the driver-rows bound: the fixture's
+    // small batches are collected and applied from driver rows; at a
+    // threshold of -1 every batch takes the persisted path
+    for (threshold <- Seq(None, Some("-1"))) withBroadcastThreshold(threshold) {
+      val in = Fixture.materializeMultiTableChunks(5)
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_mt_ckpt").toString
+      val root = java.nio.file.Files.createTempDirectory("graft_mt_state").toString
+      Streams.materializeCdcTables(
+        Streams.envelopeStream(spark, in, schema = union), ckpt, root, relations)
+        .awaitTermination()
+      quiesce()
+      val students = spark.read.parquet(s"$root/students")
+      val status = spark.read.parquet(s"$root/status")
+      assert(collectStudents(students) == studentsFinal,
+        s"students state must equal the students-only sequential fold (threshold $threshold)")
+      assert(collectStatus(status) == statusFinal,
+        s"status state must equal the status-only sequential fold (threshold $threshold)")
+      // no cross-contamination: status state has exactly its own columns
+      assert(status.columns.toSet == Set("id", "value"))
+      assert(students.columns.toSet ==
+        Set("id", "firstName", "lastName", "dateOfBirth", "status"))
+      // restart on the same checkpoint: no new data, both states unchanged
+      val before = (students.orderBy("id").collect().toSeq,
+        status.orderBy("id").collect().toSeq)
+      Streams.materializeCdcTables(
+        Streams.envelopeStream(spark, in, schema = union), ckpt, root, relations)
+        .awaitTermination()
+      quiesce()
+      assert((spark.read.parquet(s"$root/students").orderBy("id").collect().toSeq,
+        spark.read.parquet(s"$root/status").orderBy("id").collect().toSeq) == before)
+    }
+    // a third input: an unregistered relation, refused from driver rows
+    // (the stray-name sample reads the collected batch) and still named
+    val in = Fixture.materializeMultiTableChunks(3)
+    val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.materializeCdcTables(
+        Streams.envelopeStream(spark, in, schema = union),
+        java.nio.file.Files.createTempDirectory("graft_mt_stray_ckpt").toString,
+        java.nio.file.Files.createTempDirectory("graft_mt_stray_state").toString,
+        Seq(Envelope.statusRelation)) // students NOT registered
+        .awaitTermination()
+    }
+    def msgs(t: Throwable): String = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).mkString("\n")
+    assert(msgs(failed).contains("unregistered table(s) 'students'"), msgs(failed))
     quiesce()
-    val students = spark.read.parquet(s"$root/students")
-    val status = spark.read.parquet(s"$root/status")
-    assert(collectStudents(students) == studentsFinal,
-      "students state must equal the students-only sequential fold")
-    assert(collectStatus(status) == statusFinal,
-      "status state must equal the status-only sequential fold")
-    // no cross-contamination: status state has exactly its own columns
-    assert(status.columns.toSet == Set("id", "value"))
-    assert(students.columns.toSet ==
-      Set("id", "firstName", "lastName", "dateOfBirth", "status"))
-    // restart on the same checkpoint: no new data, both states unchanged
-    val before = (students.orderBy("id").collect().toSeq,
-      status.orderBy("id").collect().toSeq)
-    Streams.materializeCdcTables(
-      Streams.envelopeStream(spark, in, schema = union), ckpt, root, relations)
-      .awaitTermination()
-    quiesce()
-    assert((spark.read.parquet(s"$root/students").orderBy("id").collect().toSeq,
-      spark.read.parquet(s"$root/status").orderBy("id").collect().toSeq) == before)
   }
 
   test("materializeCdcTables (CAS): reverse-order delivery of the mixed stream still converges per relation") {
@@ -673,16 +709,17 @@ class MultiTableCdcSpec extends SparkSuite {
     assert(spark.read.parquet(s"$root/status").count() == 1L)
   }
 
-  test("a busy two-relation micro-batch: pinned job count, and one state scan + one broadcast per relation write") {
+  /** The busy two-relation micro-batch: batch 0 seeds three keys per
+    * relation, then batch 1 — repeated updates of one key, a delete of a
+    * live key and of an absent one, an insert, on both relations — runs
+    * alone under `jobsDuring`. Returns its job count, each relation's
+    * state-write plan, and the state root. */
+  private def busyTwoRelationBatch(orderedTransport: Boolean)
+      : (Int, Seq[(String, org.apache.spark.sql.execution.SparkPlan)], String) = {
     import java.nio.file.Files
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    // Full images make the ordered MERGE `state ⋉̸ touched keys ∪
-    // images`: per relation the write plan scans the state once, builds
-    // one broadcast (the pre-reduce touched keys) and reduces once.
-    // Both figures are plan/scheduler facts, immune to host load.
     val src = Files.createTempDirectory("graft_mtbusy_in")
     val ckpt = Files.createTempDirectory("graft_mtbusy_ckpt").toString
     val root = Files.createTempDirectory("graft_mtbusy_state").toString
@@ -698,17 +735,18 @@ class MultiTableCdcSpec extends SparkSuite {
       s"""{"lsn": "$lsn", "tag": "$tag", "table": "status", "new": {"id": $id, "value": "$v"}}"""
     def delete(lsn: String, table: String, id: Long) =
       s"""{"lsn": "$lsn", "tag": "delete", "table": "$table", "old": {"id": $id}}"""
+    def run(): Unit = {
+      Streams.materializeCdcTables(
+        Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations,
+        orderedTransport = orderedTransport).awaitTermination()
+      quiesce()
+    }
     writeChunk("chunk_0000.jsonl", now - 60000L,
       student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
       student("0/00000030", "insert", 3L, "three"),
       status("0/00000018", "insert", 1L, "active"), status("0/00000028", "insert", 2L, "idle"),
       status("0/00000038", "insert", 3L, "gone"))
-    Streams.materializeCdcTables(
-      Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
-      .awaitTermination()
-    quiesce()
-    // the busy batch: repeated updates of one key, a delete of a live
-    // key and of an absent one, an insert — on both relations
+    run()
     writeChunk("chunk_0001.jsonl", now - 30000L,
       student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
       delete("0/00000060", "students", 2L), delete("0/00000070", "students", 9L),
@@ -717,11 +755,10 @@ class MultiTableCdcSpec extends SparkSuite {
       status("0/00000068", "insert", 4L, "new"))
     // AQE wraps the write command itself: the helper walks into the
     // final plan and its query stages
-    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
     val qel = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = helper.foreach(qe.executedPlan) {
+          ns: Long): Unit = planHelper.foreach(qe.executedPlan) {
         case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
           writes.add(c.outputPath.getName.replaceAll("__swap_\\d+$", "") -> w)
         case _ =>
@@ -730,36 +767,133 @@ class MultiTableCdcSpec extends SparkSuite {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(qel)
-    val jobs =
-      try jobsDuring {
-        Streams.materializeCdcTables(
-          Streams.envelopeStream(spark, src.toString, schema = union), ckpt, root, relations)
-          .awaitTermination()
-        quiesce()
-      } finally spark.listenerManager.unregister(qel)
-    assert(jobs == 7,
-      s"a busy two-relation micro-batch ran $jobs jobs; the one-job census plus the " +
-        "full-image apply runs 7, since state reads take their schema from a driver-side " +
-        "footer read and no longer run an inference job (that job made 9; an aggregating " +
-        "census ran 3 jobs, for 11; the matched-join apply ran 23: three state scans and " +
-        "four broadcasts per relation)")
-    val byRel = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
-    assert(byRel.map(_._1).sorted == Seq("status", "students"),
-      s"expected one state write per relation: ${byRel.map(_._1)}")
-    for ((rel, plan) <- byRel) {
-      val stateScans = helper.collect(plan) {
-        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == rel) => s
+    val jobs = try jobsDuring(run()) finally spark.listenerManager.unregister(qel)
+    (jobs, writes.toArray(Array.empty[(String, SparkPlan)]).toSeq, root)
+  }
+
+  private val planHelper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  test("a busy two-relation micro-batch: pinned job count, and one state scan + one broadcast per relation write") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // Full images make the ordered MERGE `state ⋉̸ touched keys ∪
+    // images`: per relation the write plan scans the state once. Within
+    // the driver-rows bound the batch is collected once (the one job
+    // that also answers the census), each relation reduces on the
+    // driver and filters the state scan by its key set: no broadcast,
+    // and the write is its only job. Over the bound (threshold -1) the
+    // persisted shape stays: per relation one broadcast of the
+    // pre-reduce touched keys, one reduce and the write. Both figures
+    // are plan/scheduler facts, immune to host load.
+    val inputs = Seq(
+      (None, 3, 0, "the batch collect plus one write per relation"),
+      (Some("-1"), 7, 1, "the one-job census plus, per relation, the touched-key broadcast, " +
+        "the reduce's shuffle-map stage and the write"))
+    for ((threshold, wantJobs, wantBroadcasts, why) <- inputs) {
+      val (jobs, byRel, root) =
+        withBroadcastThreshold(threshold)(busyTwoRelationBatch(orderedTransport = true))
+      assert(jobs == wantJobs,
+        s"threshold $threshold: a busy two-relation micro-batch ran $jobs jobs; $why run " +
+          s"$wantJobs (the persisted shape runs 7 at any size; an inference job per state " +
+          "read made 9; an aggregating census ran 3 jobs, for 11; the matched-join apply ran " +
+          "23: three state scans and four broadcasts per relation)")
+      assert(byRel.map(_._1).sorted == Seq("status", "students"),
+        s"expected one state write per relation: ${byRel.map(_._1)}")
+      for ((rel, plan) <- byRel) {
+        val stateScans = planHelper.collect(plan) {
+          case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == rel) => s
+        }
+        val broadcasts = planHelper.collect(plan) { case b: BroadcastExchangeExec => b }
+        assert(stateScans.size == 1 && broadcasts.size == wantBroadcasts,
+          s"threshold $threshold, $rel: the write must scan the state once and build " +
+            s"$wantBroadcasts broadcast(s) (got ${stateScans.size} scans, " +
+            s"${broadcasts.size} broadcasts):\n$plan")
       }
-      val broadcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
-      assert(stateScans.size == 1 && broadcasts.size == 1,
-        s"$rel: the write must scan the state once and build one broadcast " +
-          s"(got ${stateScans.size} scans, ${broadcasts.size} broadcasts):\n$plan")
+      assert(collectStudents(spark.read.parquet(s"$root/students")) == Map(
+        1L -> (("eins", "ln1", "1990-01-01", 1)), 3L -> (("three", "ln3", "1990-01-01", 1)),
+        4L -> (("four", "ln4", "1990-01-01", 1))))
+      assert(collectStatus(spark.read.parquet(s"$root/status")) ==
+        Map(1L -> "busy", 2L -> "idle", 4L -> "new"))
     }
-    assert(collectStudents(spark.read.parquet(s"$root/students")) == Map(
-      1L -> (("eins", "ln1", "1990-01-01", 1)), 3L -> (("three", "ln3", "1990-01-01", 1)),
-      4L -> (("four", "ln4", "1990-01-01", 1))))
-    assert(collectStatus(spark.read.parquet(s"$root/status")) ==
-      Map(1L -> "busy", 2L -> "idle", 4L -> "new"))
+  }
+
+  test("a busy two-relation micro-batch under orderedTransport = false: pinned job count") {
+    // The CAS path keeps its merge shape on both sides of the bound:
+    // per relation the windowed reduce, the versioned MERGE's pre-reduce
+    // and broadcasts, and the write. Over driver rows those read the
+    // collected batch (13 jobs); over the bound, the persisted one (19).
+    for ((threshold, wantJobs) <- Seq((None, 13), (Some("-1"), 19))) {
+      val (jobs, byRel, root) =
+        withBroadcastThreshold(threshold)(busyTwoRelationBatch(orderedTransport = false))
+      assert(jobs == wantJobs,
+        s"threshold $threshold: a busy two-relation CAS micro-batch ran $jobs jobs, " +
+          s"pinned at $wantJobs")
+      assert(byRel.map(_._1).sorted == Seq("status", "students"))
+      assert(collectStudents(Streams.cdcLiveState(spark, s"$root/students")) == Map(
+        1L -> (("eins", "ln1", "1990-01-01", 1)), 3L -> (("three", "ln3", "1990-01-01", 1)),
+        4L -> (("four", "ln4", "1990-01-01", 1))))
+      assert(collectStatus(Streams.cdcLiveState(spark, s"$root/status")) ==
+        Map(1L -> "busy", 2L -> "idle", 4L -> "new"))
+    }
+  }
+
+  test("an IntegerType-keyed relation: a second busy batch with new keys compiles no new class") {
+    import java.nio.file.Files
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // An `In` over at most 400 int literals compiles a `switch` holding
+    // them, so a key filter built from literals would compile a class
+    // per micro-batch. The driver-side key set rides a reference object
+    // instead: once warm, a busy batch with different keys compiles
+    // nothing. Spark caches generated classes per class loader, and each
+    // stream start clones the session (a new loader for driver-side
+    // code), so the count compares two fresh streams over the same
+    // prefix: one that ends after the first busy batch, one that runs
+    // the second busy batch too. A first run warms the executor side.
+    val counters = Envelope.Relation("counters", StructType(Seq(
+      StructField("id", IntegerType), StructField("n", LongType))))
+    val schema = Envelope.unionSchema(Seq(counters))
+    var lsn = 0x10
+    def event(tag: String, id: Int, n: Long): String = {
+      lsn += 8
+      val image = if (tag == "delete") s""""old": {"id": $id}""" else s""""new": {"id": $id, "n": $n}"""
+      f"""{"lsn": "0/$lsn%08X", "tag": "$tag", "table": "counters", $image}"""
+    }
+    // batch 0 seeds keys 1..20; each busy batch updates, deletes and
+    // inserts a key set of its own
+    def busy(base: Int): Seq[String] =
+      Seq(event("update", base + 1, 100L), event("update", base + 1, 101L),
+        event("update", base + 2, 102L), event("delete", base + 3, 0L),
+        event("insert", 100 + base, 103L))
+    val chunks = Seq((1 to 20).map(k => event("insert", k, k.toLong)), busy(0), busy(10))
+    /** Compiles while one fresh stream drains `n` chunks; its state root. */
+    def stream(n: Int): (Long, String) = {
+      val src = Files.createTempDirectory("graft_intkey_in")
+      val ckpt = Files.createTempDirectory("graft_intkey_ckpt").toString
+      val root = Files.createTempDirectory("graft_intkey_state").toString
+      val t0 = System.currentTimeMillis() - 60000L
+      chunks.take(n).zipWithIndex.foreach { case (lines, i) =>
+        val f = src.resolve(f"chunk_$i%04d.jsonl")
+        Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        f.toFile.setLastModified(t0 + i * 2000L)
+      }
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Streams.materializeCdcTables(
+        Streams.envelopeStream(spark, src.toString, schema = schema), ckpt, root, Seq(counters))
+        .awaitTermination()
+      quiesce()
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, root)
+    }
+    stream(2)
+    val (oneBusy, _) = stream(2)
+    val (twoBusy, root) = stream(3)
+    assert(twoBusy - oneBusy == 0,
+      s"the second busy batch compiled ${twoBusy - oneBusy} new class(es) " +
+        s"($oneBusy for seed + one busy batch, $twoBusy for seed + two)")
+    val state = spark.read.parquet(s"$root/counters").collect()
+      .map(r => r.getInt(r.fieldIndex("id")) -> r.getLong(r.fieldIndex("n"))).toMap
+    val expected = (1 to 20).map(k => k -> k.toLong).toMap ++
+      Map(1 -> 101L, 2 -> 102L, 11 -> 101L, 12 -> 102L, 100 -> 103L, 110 -> 103L) -- Seq(3, 13)
+    assert(state == expected)
   }
 
   test("a busy parquet materializeScd2 micro-batch: pinned job count") {
