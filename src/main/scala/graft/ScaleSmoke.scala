@@ -1238,13 +1238,13 @@ object ScaleSmoke {
       val cb0 = Array.tabulate(m, 4, sub)((mm, j, t) => math.sin(mm * 131 + j * 31 + t) * 0.5)
       val fn0 = graft.expressions.VectorExpressions.registerPqEncode(spark, cb0)
       try timeIt(expr(s"$fn0(embedding)"))
-      finally graft.expressions.VectorExpressions.dropTempFunction(spark, fn0)
+      finally graft.expressions.TempFunctions.drop(spark, fn0)
     }
     for (k <- Seq(16, 64, 256)) {
       val cb = Array.tabulate(m, k, sub)((mm, j, t) => math.sin(mm * 131 + j * 31 + t) * 0.5)
       val fn = graft.expressions.VectorExpressions.registerPqEncode(spark, cb)
       val kernelSec = try timeIt(expr(s"$fn(embedding)"))
-        finally graft.expressions.VectorExpressions.dropTempFunction(spark, fn)
+        finally graft.expressions.TempFunctions.drop(spark, fn)
       val expandedSec = if (k <= 64) Some(timeIt(queries.Pipeline.pqCodesExpanded(cb))) else None
       println(s"""{"metric":"pq_encode","m":$m,"k":$k,"sub":$sub,"vectors":$n,""" +
         s""""kernel_sec":${fx(kernelSec, 2)},""" +

@@ -324,22 +324,9 @@ object VectorExpressions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "float_dot", exprs => FloatDotProduct(exprs.head, exprs(1)), "built-in")
 
-  private val pqSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Register a [[PqEncode]] kernel under a per-call UNIQUE temp name
-    * (same concurrency rationale as the k-means kernel: a shared name
-    * would let two concurrent callers resolve each other's codebook).
-    * Caller builds its Columns, attaches them to a frame (Dataset
-    * construction eagerly analyzes, so the registry is never consulted
-    * again), then calls [[dropTempFunction]] with the returned name. */
-  def registerPqEncode(spark: SparkSession, codebook: Array[Array[Array[Double]]]): String = {
-    val fn = s"graft_pq_encode_${pqSeq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fn, exprs => PqEncode(exprs.head, codebook), "built-in")
-    fn
-  }
-
-  def dropTempFunction(spark: SparkSession, fn: String): Unit =
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fn))
+  /** Register a [[PqEncode]] kernel for `codebook` under a fresh unique
+    * name ([[TempFunctions]]); the caller drops it with
+    * [[TempFunctions.drop]] once its frames are built. */
+  def registerPqEncode(spark: SparkSession, codebook: Array[Array[Array[Double]]]): String =
+    TempFunctions.register(spark, "graft_pq_encode", exprs => PqEncode(exprs.head, codebook))
 }

@@ -102,16 +102,6 @@ object KMeans {
       (c, cos, None)
     }
 
-  /** Deregister a kernel temp function once the Columns it backs are
-    * RESOLVED (Dataset construction is eagerly analyzed, and execution
-    * never consults the registry again) — without this every fit
-    * iteration / assign call leaks one registry entry for the life of
-    * the session. Callers drop their own unique name only, so the
-    * concurrent-calls race the unique naming exists for stays closed. */
-  private def dropKernelFn(s: org.apache.spark.sql.SparkSession, fn: String): Unit =
-    s.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fn))
-
   /** Expanded form: each cosine is built EXACTLY ONCE into
     * `array(struct(cos, -j))` and the winner is `array_max` (struct
     * ordering: cos first, then the negated id, so a cosine tie
@@ -131,22 +121,12 @@ object KMeans {
     (-best.getField("nj"), best.getField("c"))
   }
 
-  /** Monotonic suffix for kernel registrations: a per-call UNIQUE name
-    * (not one shared name) so two concurrent fit/assign calls on the
-    * same session can never resolve each other's centroid matrix —
-    * the returned Columns stay unresolved until the caller attaches
-    * them to a frame, so a shared name would be a silent race. Each
-    * registration is a few hundred bytes of registry entry; bounded by
-    * call count, never by data. */
-  private val kernelSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Kernel form: ONE expression node scoring the whole centroid
     * matrix per row ([[graft.expressions.BestCentroid]]) — the large-K
     * scale path (K in the thousands would make even the linear
-    * expansion a plan-size problem). Registered as a uniquely-named
-    * temp function because Spark 4 removed public
-    * Column-from-Expression construction; registration is driver-side
-    * and cheap. Math is pinned bit-identical to the expanded form in
+    * expansion a plan-size problem), reached through a uniquely-named
+    * temp function ([[graft.expressions.TempFunctions]]); registration
+    * is driver-side and cheap. Math is pinned bit-identical to the expanded form in
     * KMeansSpec (including the NaN-greatest ordering on degenerate
     * zero-norm rows), so the strategy switch can never change
     * results. */
@@ -158,9 +138,8 @@ object KMeans {
 
   private def bestClusterKernelNamed(s: org.apache.spark.sql.SparkSession,
       vecCol: String, cents: Array[Array[Double]]): (Column, Column, String) = {
-    val fn = s"graft_best_centroid_${kernelSeq.incrementAndGet()}"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fn, exprs => graft.expressions.BestCentroid(exprs.head, cents), "built-in")
+    val fn = graft.expressions.TempFunctions.register(s, "graft_best_centroid",
+      exprs => graft.expressions.BestCentroid(exprs.head, cents))
     val best = expr(s"$fn($vecCol)")
     (best.getField("cluster"), best.getField("cos"), fn)
   }
@@ -276,7 +255,7 @@ object KMeans {
           count(lit(1)).as("n"), sum(col("__cos")).as("obj"))
       // Dataset construction above eagerly analyzed the plan, so this
       // iteration's kernel registration (if any) is no longer needed
-      fnOpt.foreach(dropKernelFn(vectors.sparkSession, _))
+      fnOpt.foreach(graft.expressions.TempFunctions.drop(vectors.sparkSession, _))
       val updated = frame.collect()
       val next = cents.map(_.clone()) // empty cluster keeps its centroid
       sizes = Array.fill[Long](k)(0L)
@@ -303,7 +282,7 @@ object KMeans {
       bestCluster(vectors.sparkSession, vecCol, "__nrm", model.centroids, forceKernel)
     val out = withNrm.withColumn("cluster", clusterCol).withColumn("cosine", cosCol)
       .drop("__nrm")
-    fnOpt.foreach(dropKernelFn(vectors.sparkSession, _)) // out is analyzed; registration done
+    fnOpt.foreach(graft.expressions.TempFunctions.drop(vectors.sparkSession, _)) // out is analyzed; registration done
     out
   }
 }

@@ -284,21 +284,15 @@ object Merge {
       case _ => None
     }
 
-  private val keySetSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** `base` rows whose key `k` is not in `set`. The predicate is an
-    * [[graft.expressions.InKeySet]], reached through a temp function
-    * under a per-call unique name (Spark 4 has no public
-    * Column-from-Expression); the filter is analyzed on construction,
-    * so the name is dropped right after. */
-  private def notInKeySet(base: DataFrame, k: String, set: java.util.Set[Any]): DataFrame = {
-    val registry = base.sparkSession.sessionState.functionRegistry
-    val fn = s"graft_in_key_set_${keySetSeq.incrementAndGet()}"
-    registry.createOrReplaceTempFunction(
-      fn, exprs => graft.expressions.InKeySet(exprs.head, set), "built-in")
-    try base.filter(!call_function(fn, col(k)))
-    finally registry.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(fn))
-  }
+    * [[graft.expressions.InKeySet]] reached through a temp function
+    * ([[graft.expressions.TempFunctions]]); the filter is analyzed on
+    * construction, so the name is dropped right after. */
+  private def notInKeySet(base: DataFrame, k: String, set: java.util.Set[Any]): DataFrame =
+    graft.expressions.TempFunctions.using(base.sparkSession, "graft_in_key_set",
+      exprs => graft.expressions.InKeySet(exprs.head, set)) { fn =>
+      base.filter(!call_function(fn, col(k)))
+    }
 
   /** Compare-and-swap MERGE for OUT-OF-ORDER transports: the row with
     * the higher `versionCol` wins whole-row, so a replayed or late

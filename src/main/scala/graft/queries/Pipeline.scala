@@ -3730,7 +3730,7 @@ object Pipeline {
       df.withColumn("codes", expr(s"$fnName(embedding)"))
         .withColumn("rv", flatten(array((0 until pqM).map(reconSub): _*)))
         .withColumn("rnrm", sqrt(expr("aggregate(zip_with(rv, rv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")))
-    } finally graft.expressions.VectorExpressions.dropTempFunction(s, fnName)
+    } finally graft.expressions.TempFunctions.drop(s, fnName)
   }
 
   /** The APPLY half: condition any `(vec_id, embedding)` frame under a

@@ -1172,13 +1172,18 @@ object Streams {
     * dominates every later read. Clustering rows by bucket first makes
     * each bucket dir exactly one file.
     *
-    * An unpartitioned output is written as ⌈state bytes /
-    * `spark.sql.files.maxPartitionBytes`⌉ files, at least one, the size
-    * taken from the listing this open made. Left alone, the write emits
-    * one file per upstream partition (state splits plus change
-    * partitions): a 25 KB state became 5 files of 2–13 KB, each with
-    * its own task, footer and open cost on every later read. The
-    * coalesce adds no shuffle. */
+    * An unpartitioned output that reads only files and driver rows (the
+    * state and [[materialize]]'s small-batch relations) is written as
+    * ⌈its plan-size estimate / `spark.sql.files.maxPartitionBytes`⌉
+    * files, at least one. Left alone, the write emits one file per
+    * upstream partition (state splits plus change partitions): a 25 KB
+    * state became 5 files of 2–13 KB, each with its own task, footer
+    * and open cost on every later read. The coalesce adds no shuffle,
+    * and so it also sets the parallelism of everything after the
+    * output's last shuffle; an output that reads the streamed batch (a
+    * persisted batch over the bound, the SCD2 apply) keeps its
+    * upstream partitions, so a large snapshot or catch-up batch is
+    * still reduced and written by as many tasks as its shuffle has. */
   private final class ParquetState(spark: SparkSession, statePath: String) {
     private val state = new org.apache.hadoop.fs.Path(statePath)
     val fs: org.apache.hadoop.fs.FileSystem =
@@ -1189,12 +1194,21 @@ object Streams {
     val onDisk: Option[DataFrame] =
       if (fs.exists(state)) Some(readParquet(spark, statePath)) else None
 
-    /** Files for an unpartitioned write: ⌈bytes on disk at open /
-      * maxPartitionBytes⌉, at least 1. */
-    private def files: Int = {
-      val bytes = onDisk.map(_.queryExecution.analyzed.stats.sizeInBytes).getOrElse(BigInt(0))
+    /** Files for an unpartitioned write of `out`: ⌈its analyzed plan's
+      * size estimate (state scan plus changes) / maxPartitionBytes⌉, at
+      * least 1, when every leaf is a file scan or a `LocalRelation`;
+      * None, keeping `out`'s partitions, when it reads anything else. */
+    private def files(out: DataFrame): Option[Int] = {
+      import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+      import org.apache.spark.sql.execution.datasources.LogicalRelation
+      val plan = out.queryExecution.analyzed
+      val sized = plan.collectLeaves().forall {
+        case _: LocalRelation | _: LogicalRelation => true
+        case _ => false
+      }
       val max = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-      ((bytes + max - 1) / max).max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt
+      if (!sized) None
+      else Some(((plan.stats.sizeInBytes + max - 1) / max).max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt)
     }
 
     /** Is the on-disk layout already bucket-partitioned? */
@@ -1218,8 +1232,8 @@ object Streams {
       * `incremental`, else whole through `<state>__swap_<swapId>`. */
     def write(out: DataFrame, swapId: Long, incremental: Boolean): Unit = {
       val bucketed = out.columns.contains(bucketCol)
-      val w0 = (if (bucketed) out.repartition(col(bucketCol)) else out.coalesce(files))
-        .write.mode("overwrite")
+      val w0 = (if (bucketed) out.repartition(col(bucketCol))
+        else files(out).fold(out)(out.coalesce)).write.mode("overwrite")
       val w = if (bucketed) w0.partitionBy(bucketCol) else w0
       if (incremental) w.option("partitionOverwriteMode", "dynamic").parquet(statePath)
       else {

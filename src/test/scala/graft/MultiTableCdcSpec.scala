@@ -116,8 +116,12 @@ class MultiTableCdcSpec extends SparkSuite {
     * copies the session conf when it starts, so the setting covers every
     * stream `body` starts. -1 puts every micro-batch over the parquet
     * last-image sinks' driver-rows bound. */
-  private def withBroadcastThreshold[T](value: Option[String])(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
+  private def withBroadcastThreshold[T](value: Option[String])(body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", value)(body)
+
+  /** Run `body` with session conf `key` set to `value` (None: as
+    * configured), restored afterwards. */
+  private def withConf[T](key: String, value: Option[String])(body: => T): T = {
     val old = spark.conf.getOption(key)
     value.foreach(spark.conf.set(key, _))
     try body
@@ -174,6 +178,33 @@ class MultiTableCdcSpec extends SparkSuite {
       .map(x => Option(x.getMessage).getOrElse("")).mkString("\n")
     assert(msgs(failed).contains("unregistered table(s) 'students'"), msgs(failed))
     quiesce()
+  }
+
+  test("a first state write: driver rows land one file, a persisted batch keeps its reduce's partitions") {
+    // The one-file coalesce covers only outputs that read files and
+    // driver rows. Over the bound the output reads the persisted batch,
+    // and a coalesce there would collapse the reduce after its shuffle
+    // into one task; it must keep the shuffle's partitions (4 here, with
+    // AQE's partition coalescing off so the small fixture is not folded
+    // to one partition by AQE itself).
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", Some("false")) {
+      for ((threshold, oneFile) <- Seq((None, true), (Some("-1"), false)))
+        withBroadcastThreshold(threshold) {
+          val in = Fixture.materializeMultiTableChunks(1)
+          val root = java.nio.file.Files.createTempDirectory("graft_mt_first_state").toString
+          Streams.materializeCdcTables(
+            Streams.envelopeStream(spark, in, schema = union),
+            java.nio.file.Files.createTempDirectory("graft_mt_first_ckpt").toString,
+            root, relations).awaitTermination()
+          quiesce()
+          val files = new java.io.File(s"$root/students").listFiles()
+            .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+          if (oneFile) assert(files == 1, s"threshold $threshold: driver rows wrote $files files")
+          else assert(files > 1, s"threshold $threshold: the first over-bound write ran " +
+            s"$files write task(s); the reduce's 4 shuffle partitions must each write")
+          assert(collectStudents(spark.read.parquet(s"$root/students")) == studentsFinal)
+        }
+    }
   }
 
   test("materializeCdcTables (CAS): reverse-order delivery of the mixed stream still converges per relation") {

@@ -284,7 +284,7 @@ class PipelineSpec extends SparkSuite {
     val both = try {
       e.withColumn("kc", expr(s"$fn(embedding)"))
         .withColumn("xc", graft.queries.Pipeline.pqCodesExpanded(cb))
-    } finally graft.expressions.VectorExpressions.dropTempFunction(spark, fn)
+    } finally graft.expressions.TempFunctions.drop(spark, fn)
     val rows = both.collect()
     assert(rows.length == 500)
     rows.foreach { r =>
@@ -305,7 +305,7 @@ class PipelineSpec extends SparkSuite {
         Seq((1L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
           .withColumn("c", expr(s"$fn(embedding)")).collect()
       }
-    } finally graft.expressions.VectorExpressions.dropTempFunction(spark, fn)
+    } finally graft.expressions.TempFunctions.drop(spark, fn)
     val msgs = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
     assert(msgs.contains("dimension mismatch"), msgs)
@@ -324,7 +324,7 @@ class PipelineSpec extends SparkSuite {
       e.withColumn("kc", expr(s"$fn(embedding)"))
         .withColumn("xc", graft.queries.Pipeline.pqCodesExpanded(cb))
         .collect()
-    } finally graft.expressions.VectorExpressions.dropTempFunction(spark, fn)
+    } finally graft.expressions.TempFunctions.drop(spark, fn)
     assert(rows.length == 500)
     rows.foreach { r =>
       assert(r.getSeq[Int](2) == r.getSeq[Int](3),
