@@ -264,24 +264,19 @@ object Merge {
   }
 
   /** The non-null keys in column `k` of a driver-side `keys` frame, as
-    * internal values of `dt`, or None when `keys` is not a
-    * `LocalRelation` once optimized or `dt` is not a type
-    * [[graft.expressions.InKeySet]] compares exactly. Reading the
-    * optimized plan runs no job. */
+    * internal values of `dt`, or None when [[DriverRows]] does not hold
+    * them as an exactly comparable key. */
   private def driverKeySet(keys: DataFrame, k: String,
       dt: org.apache.spark.sql.types.DataType): Option[java.util.Set[Any]] =
-    if (!graft.expressions.InKeySet.exact(dt)) None
-    else keys.select(col(k).cast(dt)).queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val set = new java.util.HashSet[Any]()
-        l.data.foreach { r =>
-          if (!r.isNullAt(0)) set.add(r.get(0, dt) match {
-            case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
-            case v => v
-          })
-        }
-        Some(set)
-      case _ => None
+    DriverRows(keys.select(col(k).cast(dt).as(k)), Some(k)).map { rows =>
+      val set = new java.util.HashSet[Any]()
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) set.add(r.get(0, dt) match {
+          case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
+          case v => v
+        })
+      }
+      set
     }
 
   /** `base` rows whose key `k` is not in `set`. The predicate is an

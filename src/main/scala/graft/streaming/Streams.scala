@@ -580,15 +580,15 @@ object Streams {
     *
     *  1. bind the checkpoint to `identity` ([[requireSinkBinding]]);
     *  2. on the run's first batch, run `onStart`;
-    *  3. read the batch once ([[batchFrame]]). With `driverRows` (the
-    *     parquet last-image sinks) a batch whose plan-size estimate is
-    *     within `spark.sql.autoBroadcastJoinThreshold` is collected in
-    *     that one job and served as a driver-side relation: the guard's
-    *     tally, the census and every target's projected events then
-    *     cost no job. Otherwise the batch is persisted: the guard's one
-    *     job, a map-side tally with no shuffle ([[tallyTables]]), fills
-    *     the cache and every apply reads it, where unpersisted each
-    *     would re-read the micro-batch source;
+    *  3. read the batch once ([[batchFrame]]). A batch whose plan-size
+    *     estimate is within `spark.sql.autoBroadcastJoinThreshold` is
+    *     collected in that one job and served as a driver-side
+    *     relation: the guard's tally, the census and every target's
+    *     projected events then cost no job. A larger batch is
+    *     persisted: the guard's one job, a map-side tally with no
+    *     shuffle ([[tallyTables]]), fills the cache and every apply
+    *     reads it, where unpersisted each would re-read the micro-batch
+    *     source;
     *  4. guard, before any apply: [[requireSingleTable]] +
     *     [[requireTableBinding]] with [[Envelope.project]], or one
     *     [[tableCensus]] with [[Envelope.projectRelation]] per relation;
@@ -597,11 +597,11 @@ object Streams {
     *     outright, with no probe job, because the guard's count already
     *     proved them empty;
     *  6. run `afterBatch(batchId, firstBatch, applied target names)`,
-    *     then release the batch (unpersist; nothing for driver rows).
+    *     then release the batch (unpersist a persisted one).
     *
     * The checkpoint commits only after the whole frame returns. */
   private def materialize(envelopes: DataFrame, checkpoint: String, identity: String,
-      guard: Guard, driverRows: Boolean = false, applyQuiet: Boolean => Boolean = _ => false,
+      guard: Guard, applyQuiet: Boolean => Boolean = _ => false,
       onStart: () => Unit = () => (),
       afterBatch: (Long, Boolean, Set[String]) => Unit = (_, _, _) => ())(
       apply: (Target, Long, Boolean) => Unit): StreamingQuery = {
@@ -612,7 +612,7 @@ object Streams {
       requireSinkBinding(hconf, checkpoint, identity)
       val firstBatch = started.compareAndSet(false, true)
       if (firstBatch) onStart()
-      val (frame, release) = batchFrame(batch, driverRows)
+      val (frame, release) = batchFrame(batch)
       try {
         val (counted, parallelism) = guard match {
           case SingleTable(alias, twin) =>
@@ -632,31 +632,28 @@ object Streams {
     })
   }
 
-  /** The frame a micro-batch's guard and applies read, and how to
-    * release it. With `driverRows`, a batch whose plan-size estimate
-    * (`optimizedPlan.stats`, no job: a foreachBatch batch carries its
-    * source files' size) is within the session's
-    * `spark.sql.autoBroadcastJoinThreshold` — the size Spark itself
-    * will hold on the driver to broadcast — is collected once and
-    * rebuilt as a driver-side `LocalRelation`. Every plan over it folds
-    * to a `LocalRelation` on the driver ([[onDriver]]), so the later
-    * reads run no job. A batch over the bound, a threshold of -1, or
-    * `driverRows = false` gets the persisted batch. */
-  private def batchFrame(batch: DataFrame, driverRows: Boolean): (DataFrame, () => Unit) = {
+  /** The frame a micro-batch's sink reads, and how to release it: the
+    * one place a foreachBatch batch is read once, for the eight CDC
+    * materializers and both index maintainers. Size alone decides. A
+    * batch whose plan-size estimate (`optimizedPlan.stats`, no job: a
+    * foreachBatch batch carries its source files' size) is within the
+    * session's `spark.sql.autoBroadcastJoinThreshold` — the size Spark
+    * itself will hold on the driver to broadcast — is collected once
+    * and rebuilt as a driver-side `LocalRelation`. Every plan over it
+    * folds to a `LocalRelation` on the driver ([[graft.ops.DriverRows]]),
+    * so the later reads run no job. A batch over the bound, or any
+    * batch at a threshold of -1, is persisted: the one frame that can
+    * run a batch too large for the driver. */
+  private def batchFrame(batch: DataFrame): (DataFrame, () => Unit) = {
     val spark = batch.sparkSession
     val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (driverRows && bound >= 0 && batch.queryExecution.optimizedPlan.stats.sizeInBytes <= bound)
+    if (bound >= 0 && batch.queryExecution.optimizedPlan.stats.sizeInBytes <= bound)
       (spark.createDataFrame(java.util.Arrays.asList(batch.collect(): _*), batch.schema), () => ())
     else {
       val cached = batch.persist()
       (cached, () => cached.unpersist())
     }
   }
-
-  /** Does `df` evaluate on the driver — is its optimized plan a
-    * `LocalRelation` (Spark folds filters and projections over one)? */
-  private def onDriver(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** Streaming CDC MATERIALIZATION — the reference's whole loop as one
     * operator: envelope stream → per-batch last-image reduce → MERGE
@@ -727,7 +724,7 @@ object Streams {
       statePartitions: Int = 0): StreamingQuery =
     materialize(envelopes, checkpoint,
       s"parquet:$statePath:${modeTag(orderedTransport)}${partitionTag(statePartitions)}",
-      SingleTable("materializeCdc", "materializeCdcTables"), driverRows = true) { (t, batchId, _) =>
+      SingleTable("materializeCdc", "materializeCdcTables")) { (t, batchId, _) =>
       applyBatchParquet(t.events, statePath, batchId, t.keyCol, orderedTransport,
         casTombstoneRetention, statePartitions)
     }
@@ -977,11 +974,10 @@ object Streams {
       batchId: Long, keyCol: String, orderedTransport: Boolean,
       casTombstoneRetention: Long, statePartitions: Int): Unit = {
     val spark = projected.sparkSession
-    // driver rows (materialize's small-batch frame) on the ordered path
-    // reduce on the driver: no window, no shuffle, no job
+    // driver rows (a batch within batchFrame's bound) on the ordered
+    // path reduce on the driver: no window, no shuffle, no job
     val reduced =
-      if (orderedTransport && onDriver(projected) &&
-          graft.expressions.InKeySet.exact(projected.schema(keyCol).dataType))
+      if (orderedTransport && graft.ops.DriverRows(projected, Some(keyCol)).isDefined)
         reduceOnDriver(projected, keyCol)
       else reduceBatch(projected, keyCol)
     require(!reduced.columns.exists(_.equalsIgnoreCase(casBatchCol)),
@@ -1173,17 +1169,18 @@ object Streams {
     * each bucket dir exactly one file.
     *
     * An unpartitioned output that reads only files and driver rows (the
-    * state and [[materialize]]'s small-batch relations) is written as
-    * ⌈its plan-size estimate / `spark.sql.files.maxPartitionBytes`⌉
-    * files, at least one. Left alone, the write emits one file per
-    * upstream partition (state splits plus change partitions): a 25 KB
-    * state became 5 files of 2–13 KB, each with its own task, footer
-    * and open cost on every later read. The coalesce adds no shuffle,
-    * and so it also sets the parallelism of everything after the
-    * output's last shuffle; an output that reads the streamed batch (a
-    * persisted batch over the bound, the SCD2 apply) keeps its
-    * upstream partitions, so a large snapshot or catch-up batch is
-    * still reduced and written by as many tasks as its shuffle has. */
+    * state and a batch within [[batchFrame]]'s bound, for the last-image
+    * and the SCD2 apply alike) is written as ⌈its plan-size estimate /
+    * `spark.sql.files.maxPartitionBytes`⌉ files, at least one. Left
+    * alone, the write emits one file per upstream partition (state
+    * splits plus change partitions): a 25 KB state became 5 files of
+    * 2–13 KB, each with its own task, footer and open cost on every
+    * later read. The coalesce adds no shuffle, and so it also sets the
+    * parallelism of everything after the output's last shuffle; an
+    * output that reads the persisted batch (one over the bound) keeps
+    * its upstream partitions, so a large snapshot or catch-up batch is
+    * still reduced, folded and written by as many tasks as its shuffle
+    * has. */
   private final class ParquetState(spark: SparkSession, statePath: String) {
     private val state = new org.apache.hadoop.fs.Path(statePath)
     val fs: org.apache.hadoop.fs.FileSystem =
@@ -1197,7 +1194,11 @@ object Streams {
     /** Files for an unpartitioned write of `out`: ⌈its analyzed plan's
       * size estimate (state scan plus changes) / maxPartitionBytes⌉, at
       * least 1, when every leaf is a file scan or a `LocalRelation`;
-      * None, keeping `out`'s partitions, when it reads anything else. */
+      * None, keeping `out`'s partitions, when it reads anything else.
+      * This is not [[graft.ops.DriverRows]]' question: `out` reads the
+      * state's files too, so it never optimizes to one `LocalRelation`.
+      * It asks instead whether `out` reads the persisted batch, whose
+      * size no estimate at open bounds. */
     private def files(out: DataFrame): Option[Int] = {
       import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
       import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -1272,11 +1273,12 @@ object Streams {
     * its events alone would have produced — checkpoint offsets stay
     * shared, preserving the transport's cross-table delivery position
     * (one slot, one ack, as in the reference). The batch is read once
-    * for all N demux passes: collected to the driver when it is small
-    * ([[batchFrame]]), else persisted, so the source isn't re-read per
-    * relation. Events whose `table` is not registered FAIL the batch
-    * loudly: silently dropping them is data loss, silently merging
-    * them (the pre-demux behavior) corrupts keys across relations.
+    * for all N demux passes, as for every sink ([[batchFrame]]):
+    * collected to the driver when it is within the broadcast bound,
+    * else persisted, so the source isn't re-read per relation. Events
+    * whose `table` is not registered FAIL the batch loudly: silently
+    * dropping them is data loss, silently merging them (the pre-demux
+    * behavior) corrupts keys across relations.
     * Read a relation's live rows with
     * `cdcLiveState(spark, s"$stateRoot/<relation>")`. */
   def materializeCdcTables(envelopes: DataFrame, checkpoint: String,
@@ -1288,7 +1290,7 @@ object Streams {
     requireDistinctStateDirs(relations)
     materialize(envelopes, checkpoint,
       s"parquet-multi:$stateRoot:${modeTag(orderedTransport)}${partitionTag(statePartitions)}",
-      Demux(relations, maxConcurrentRelations), driverRows = true) { (t, batchId, _) =>
+      Demux(relations, maxConcurrentRelations)) { (t, batchId, _) =>
       applyBatchParquet(t.events, s"$stateRoot/${t.name}", batchId, t.keyCol,
         orderedTransport, casTombstoneRetention, statePartitions)
     }
@@ -1420,9 +1422,10 @@ object Streams {
       bucket: String => Option[String]): Map[Option[String], Long] = {
     val name = if (batch.columns.contains("table")) col("table") else lit(null).cast("string")
     val names = batch.filter(Envelope.tagFilter).select(name)
-    val parts =
-      if (onDriver(names)) Array(tally(names.queryExecution.executedPlan.executeCollect().iterator, bucket))
-      else names.queryExecution.toRdd.mapPartitions(rows => Iterator.single(tally(rows, bucket))).collect()
+    val parts = graft.ops.DriverRows(names) match {
+      case Some(rows) => Array(tally(rows.iterator, bucket))
+      case None => names.queryExecution.toRdd.mapPartitions(rows => Iterator.single(tally(rows, bucket))).collect()
+    }
     parts.foldLeft(Map.empty[Option[String], Long]) { (all, part) =>
       part.foldLeft(all) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
     }
@@ -2077,7 +2080,9 @@ object Streams {
       val spark = batch.sparkSession
       requireSinkBinding(spark.sparkContext.hadoopConfiguration,
         checkpoint, s"ivf-index:$indexPath#$modelPath")
-      val b = batch.persist()
+      // the batch read once (driver rows or persisted), so the empty
+      // probe, the assignment and the census share it
+      val (b, release) = batchFrame(batch)
       try {
         if (!b.isEmpty) {
           // restore the membership marker if the previous attempt at
@@ -2123,7 +2128,7 @@ object Streams {
             } finally merged.unpersist()
           } finally assigned.unpersist()
         }
-      } finally b.unpersist()
+      } finally release()
     })
   }
 
@@ -2161,7 +2166,9 @@ object Streams {
       val spark = batch.sparkSession
       requireSinkBinding(spark.sparkContext.hadoopConfiguration,
         checkpoint, s"dedup-index:$indexRoot")
-      val b = batch.persist()
+      // the batch read once (driver rows or persisted), so the empty
+      // probe and the shingling share it
+      val (b, release) = batchFrame(batch)
       try {
         if (!b.isEmpty) {
           // restore markers if the previous attempt at this batch died
@@ -2211,7 +2218,7 @@ object Streams {
             } finally decisions.unpersist()
           } finally { withSh.unpersist(); caches.release() }
         }
-      } finally b.unpersist()
+      } finally release()
     })
 
   /** Live rows of a CAS-mode [[materializeCdcJdbc]] table: filters the

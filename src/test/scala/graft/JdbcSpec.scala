@@ -142,53 +142,57 @@ class JdbcSpec extends SparkSuite {
     import java.nio.file.Files
     import graft.cdc.{Envelope, Fixture}
     import graft.streaming.Streams
-    val sinkUrl = "jdbc:derby:memory:graft_scd2_sink;create=true"
-    val in = Fixture.materializeChunks(4)
-    val ckpt = Files.createTempDirectory("graft_scd2jdbc_ckpt").toString
-    Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, in), ckpt, sinkUrl, "students_history")
-      .awaitTermination()
-    var waited = 0
-    while (spark.streams.active.nonEmpty && waited < 10000) {
-      Thread.sleep(100); waited += 100
+    // one input on each side of the driver-rows bound (threshold -1:
+    // every batch persisted); both must equal the same fold
+    for (threshold <- Seq(None, Some("-1"))) withBroadcastThreshold(threshold) {
+      val sinkUrl = s"jdbc:derby:memory:graft_scd2_sink${threshold.fold("")(_ => "_m1")};create=true"
+      val in = Fixture.materializeChunks(4)
+      val ckpt = Files.createTempDirectory("graft_scd2jdbc_ckpt").toString
+      Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, in), ckpt, sinkUrl, "students_history")
+        .awaitTermination()
+      var waited = 0
+      while (spark.streams.active.nonEmpty && waited < 10000) {
+        Thread.sleep(100); waited += 100
+      }
+      def asTuples(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("id"), col("firstName"), col("lastName"),
+          col("dateOfBirth").cast("string"), col("status"),
+          col("valid_from"), col("valid_to"), col("is_current"))
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
+          r.getInt(4), r.getLong(5),
+          if (r.isNullAt(6)) -1L else r.getLong(6),
+          r.getInt(7)))
+        .toSeq.sorted
+      def tableRows() = asTuples(Jdbc.snapshot(spark, sinkUrl, "students_history"))
+      val expected = asTuples(Envelope.scd2Fold(
+        Envelope.project(spark.read.schema(Envelope.schema).json(in))
+          .filter(col("tag").isin("insert", "update", "delete"))
+          .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
+          .drop("lsn")))
+      assert(expected.nonEmpty && tableRows() == expected,
+        s"the incrementally landed JDBC history must equal the q50 batch fold (threshold $threshold)")
+      // scd2AsOf works on the JDBC table unchanged: as-of max LSN ==
+      // the live rows, i.e. the last-image fold
+      val live = Envelope.scd2AsOf(Jdbc.snapshot(spark, sinkUrl, "students_history"), Long.MaxValue)
+        .select(col("id")).collect().map(_.getLong(0)).toSet
+      val lastImage = Envelope.lastImageByKey(Envelope.project(
+        spark.read.schema(Envelope.schema).json(in)))
+        .select(col("id")).collect().map(_.getLong(0)).toSet
+      assert(live == lastImage, "as-of(max) over the JDBC history must equal the last-image fold")
+      // crash after apply, before the checkpoint commit: the replayed
+      // batch's events are all under the stored high-water marks — the
+      // history must come out row-for-row identical, no duplicates
+      val commitsDir = new java.io.File(ckpt, "commits")
+      val newest = commitsDir.listFiles().filterNot(_.getName.startsWith("."))
+        .maxBy(_.getName.toLong)
+      assert(newest.delete())
+      new java.io.File(commitsDir, s".${newest.getName}.crc").delete()
+      Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, in), ckpt, sinkUrl, "students_history")
+        .awaitTermination()
+      assert(tableRows() == expected,
+        s"replaying a batch whose commit was lost must be a no-op on the history (threshold $threshold)")
     }
-    def asTuples(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("id"), col("firstName"), col("lastName"),
-        col("dateOfBirth").cast("string"), col("status"),
-        col("valid_from"), col("valid_to"), col("is_current"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
-        r.getInt(4), r.getLong(5),
-        if (r.isNullAt(6)) -1L else r.getLong(6),
-        r.getInt(7)))
-      .toSeq.sorted
-    def tableRows() = asTuples(Jdbc.snapshot(spark, sinkUrl, "students_history"))
-    val expected = asTuples(Envelope.scd2Fold(
-      Envelope.project(spark.read.schema(Envelope.schema).json(in))
-        .filter(col("tag").isin("insert", "update", "delete"))
-        .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
-        .drop("lsn")))
-    assert(expected.nonEmpty && tableRows() == expected,
-      "the incrementally landed JDBC history must equal the q50 batch fold")
-    // scd2AsOf works on the JDBC table unchanged: as-of max LSN ==
-    // the live rows, i.e. the last-image fold
-    val live = Envelope.scd2AsOf(Jdbc.snapshot(spark, sinkUrl, "students_history"), Long.MaxValue)
-      .select(col("id")).collect().map(_.getLong(0)).toSet
-    val lastImage = Envelope.lastImageByKey(Envelope.project(
-      spark.read.schema(Envelope.schema).json(in)))
-      .select(col("id")).collect().map(_.getLong(0)).toSet
-    assert(live == lastImage, "as-of(max) over the JDBC history must equal the last-image fold")
-    // crash after apply, before the checkpoint commit: the replayed
-    // batch's events are all under the stored high-water marks — the
-    // history must come out row-for-row identical, no duplicates
-    val commitsDir = new java.io.File(ckpt, "commits")
-    val newest = commitsDir.listFiles().filterNot(_.getName.startsWith("."))
-      .maxBy(_.getName.toLong)
-    assert(newest.delete())
-    new java.io.File(commitsDir, s".${newest.getName}.crc").delete()
-    Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, in), ckpt, sinkUrl, "students_history")
-      .awaitTermination()
-    assert(tableRows() == expected,
-      "replaying a batch whose commit was lost must be a no-op on the history")
   }
 
   test("materializeScd2Jdbc: a busy batch runs 3 jobs; a history it creates gets a key index, a pre-existing one gets none and still lands the q50 fold") {
@@ -214,37 +218,47 @@ class JdbcSpec extends SparkSuite {
         finally rs.close()
       } finally c.close()
     }
-    val src = Files.createTempDirectory("graft_scd2jobs_in")
-    val ckpt = Files.createTempDirectory("graft_scd2jobs_ckpt").toString
-    val now = System.currentTimeMillis()
-    def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
-      val f = src.resolve(name)
-      Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      f.toFile.setLastModified(mtime)
+    // the busy-batch pin on each side of the driver-rows bound: within
+    // it the first job is the batch collect, over it (threshold -1) the
+    // one-job guard's tally that fills the cache
+    val inputs = Seq(
+      (None, 3, "the batch collect"),
+      (Some("-1"), 3, "the one-job guard"))
+    for ((threshold, wantJobs, first) <- inputs) withBroadcastThreshold(threshold) {
+      val table = s"students_hist_jobs${threshold.fold("")(_ => "_m1")}"
+      val src = Files.createTempDirectory("graft_scd2jobs_in")
+      val ckpt = Files.createTempDirectory("graft_scd2jobs_ckpt").toString
+      val now = System.currentTimeMillis()
+      def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
+        val f = src.resolve(name)
+        Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        f.toFile.setLastModified(mtime)
+      }
+      def student(lsn: String, tag: String, id: Long, fn: String) =
+        s"""{"lsn": "$lsn", "tag": "$tag", "table": "students", "new": {"id": $id, "first_name": "$fn", "last_name": "ln$id", "date_of_birth": "1990-01-01", "status_id": 1}}"""
+      def run() = Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, src.toString),
+        ckpt, sinkUrl, table).awaitTermination()
+      writeChunk("chunk_0000.jsonl", now - 60000L,
+        student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
+        student("0/00000030", "insert", 3L, "three"))
+      run(); quiesce()
+      assert(keyIndexes(table.toUpperCase, "id") == Seq((s"${table.toUpperCase}_GRAFT_KEY", "id")),
+        "the history the sink creates carries a non-unique index led by the key")
+      // the busy batch: repeated updates of one key, a delete, an insert
+      writeChunk("chunk_0001.jsonl", now - 30000L,
+        student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
+        s"""{"lsn": "0/00000060", "tag": "delete", "table": "students", "old": {"id": 2}}""",
+        student("0/00000070", "insert", 4L, "four"))
+      val jobs = jobsDuring { run(); quiesce() }
+      assert(jobs == wantJobs,
+        s"threshold $threshold: a busy SCD2 JDBC micro-batch ran $jobs jobs; $first plus the " +
+          s"repartitioned apply (shuffle map, result) runs $wantJobs (an aggregating guard ran " +
+          "3 jobs, for 5)")
+      assert(Jdbc.snapshot(spark, sinkUrl, table)
+        .filter(col("is_current") === 1).select("id", "firstName").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+        Map(1L -> "eins", 3L -> "three", 4L -> "four"))
     }
-    def student(lsn: String, tag: String, id: Long, fn: String) =
-      s"""{"lsn": "$lsn", "tag": "$tag", "table": "students", "new": {"id": $id, "first_name": "$fn", "last_name": "ln$id", "date_of_birth": "1990-01-01", "status_id": 1}}"""
-    def run() = Streams.materializeScd2Jdbc(Streams.envelopeStream(spark, src.toString),
-      ckpt, sinkUrl, "students_hist_jobs").awaitTermination()
-    writeChunk("chunk_0000.jsonl", now - 60000L,
-      student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
-      student("0/00000030", "insert", 3L, "three"))
-    run(); quiesce()
-    assert(keyIndexes("STUDENTS_HIST_JOBS", "id") == Seq(("STUDENTS_HIST_JOBS_GRAFT_KEY", "id")),
-      "the history the sink creates carries a non-unique index led by the key")
-    // the busy batch: repeated updates of one key, a delete, an insert
-    writeChunk("chunk_0001.jsonl", now - 30000L,
-      student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
-      s"""{"lsn": "0/00000060", "tag": "delete", "table": "students", "old": {"id": 2}}""",
-      student("0/00000070", "insert", 4L, "four"))
-    val jobs = jobsDuring { run(); quiesce() }
-    assert(jobs == 3,
-      s"a busy SCD2 JDBC micro-batch ran $jobs jobs; the one-job guard plus the " +
-        "repartitioned apply (shuffle map, result) runs 3 (an aggregating guard ran 3 jobs, for 5)")
-    assert(Jdbc.snapshot(spark, sinkUrl, "students_hist_jobs")
-      .filter(col("is_current") === 1).select("id", "firstName").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
-      Map(1L -> "eins", 3L -> "three", 4L -> "four"))
 
     // a history created beforehand with no index (the DDL the sink
     // itself used before it indexed the key) stays as its owner made it

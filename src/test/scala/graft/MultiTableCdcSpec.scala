@@ -111,26 +111,6 @@ class MultiTableCdcSpec extends SparkSuite {
       "registry projection must reproduce the hand-written students mapping")
   }
 
-  /** Run `body` with the session's `spark.sql.autoBroadcastJoinThreshold`
-    * set to `value` (None: as configured), restored afterwards. A stream
-    * copies the session conf when it starts, so the setting covers every
-    * stream `body` starts. -1 puts every micro-batch over the parquet
-    * last-image sinks' driver-rows bound. */
-  private def withBroadcastThreshold[T](value: Option[String])(body: => T): T =
-    withConf("spark.sql.autoBroadcastJoinThreshold", value)(body)
-
-  /** Run `body` with session conf `key` set to `value` (None: as
-    * configured), restored afterwards. */
-  private def withConf[T](key: String, value: Option[String])(body: => T): T = {
-    val old = spark.conf.getOption(key)
-    value.foreach(spark.conf.set(key, _))
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("materializeCdcTables (ordered): one mixed stream lands one consistent state table per relation") {
     // one input on each side of the driver-rows bound: the fixture's
     // small batches are collected and applied from driver rows; at a
@@ -341,33 +321,37 @@ class MultiTableCdcSpec extends SparkSuite {
   }
 
   test("materializeCdcJdbcTables (ordered): the mixed stream lands one queryable Derby table per relation") {
-    val sinkUrl = "jdbc:derby:memory:graft_mtjdbc;create=true"
-    val in = Fixture.materializeMultiTableChunks(4)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mtjdbc_ckpt").toString
-    Streams.materializeCdcJdbcTables(
-      Streams.envelopeStream(spark, in, schema = union), ckpt, sinkUrl, relations,
-      tableNames = n => s"live_$n").awaitTermination()
-    quiesce()
-    val students = graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_students")
-    val status = graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_status")
-    assert(collectStudents(students) == studentsFinal)
-    assert(collectStatus(status) == statusFinal)
-    // lost-commit replay is a per-relation no-op (idempotent applies)
-    val commitsDir = new java.io.File(ckpt, "commits")
-    val newest = commitsDir.listFiles().filterNot(_.getName.startsWith("."))
-      .maxBy(_.getName.toLong)
-    assert(newest.delete())
-    new java.io.File(commitsDir, s".${newest.getName}.crc").delete()
-    Streams.materializeCdcJdbcTables(
-      Streams.envelopeStream(spark, in, schema = union), ckpt, sinkUrl, relations,
-      tableNames = n => s"live_$n").awaitTermination()
-    quiesce()
-    assert(collectStudents(
-      graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_students")) ==
-      studentsFinal)
-    assert(collectStatus(
-      graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_status")) == statusFinal,
-      "replaying the lost batch must be a no-op on every relation's table")
+    // one input on each side of the driver-rows bound (threshold -1:
+    // every batch persisted); both must equal the same folds
+    for (threshold <- Seq(None, Some("-1"))) withBroadcastThreshold(threshold) {
+      val sinkUrl = s"jdbc:derby:memory:graft_mtjdbc${threshold.fold("")(_ => "_m1")};create=true"
+      val in = Fixture.materializeMultiTableChunks(4)
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_mtjdbc_ckpt").toString
+      Streams.materializeCdcJdbcTables(
+        Streams.envelopeStream(spark, in, schema = union), ckpt, sinkUrl, relations,
+        tableNames = n => s"live_$n").awaitTermination()
+      quiesce()
+      val students = graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_students")
+      val status = graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_status")
+      assert(collectStudents(students) == studentsFinal, s"threshold $threshold")
+      assert(collectStatus(status) == statusFinal, s"threshold $threshold")
+      // lost-commit replay is a per-relation no-op (idempotent applies)
+      val commitsDir = new java.io.File(ckpt, "commits")
+      val newest = commitsDir.listFiles().filterNot(_.getName.startsWith("."))
+        .maxBy(_.getName.toLong)
+      assert(newest.delete())
+      new java.io.File(commitsDir, s".${newest.getName}.crc").delete()
+      Streams.materializeCdcJdbcTables(
+        Streams.envelopeStream(spark, in, schema = union), ckpt, sinkUrl, relations,
+        tableNames = n => s"live_$n").awaitTermination()
+      quiesce()
+      assert(collectStudents(
+        graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_students")) ==
+        studentsFinal)
+      assert(collectStatus(
+        graft.sources.Jdbc.snapshot(spark, sinkUrl, "live_status")) == statusFinal,
+        s"replaying the lost batch must be a no-op on every relation's table (threshold $threshold)")
+    }
   }
 
   test("materializeCdcJdbcTables (CAS): reversed mixed delivery converges per relation in SQL state") {
@@ -931,42 +915,50 @@ class MultiTableCdcSpec extends SparkSuite {
     import java.nio.file.Files
     // The SCD2 twin of the busy two-relation pin, on one relation. The
     // history read takes its schema from a driver-side footer read, so
-    // every job counted here is the batch's own work.
-    val src = Files.createTempDirectory("graft_scd2busy_in")
-    val ckpt = Files.createTempDirectory("graft_scd2busy_ckpt").toString
-    val state = Files.createTempDirectory("graft_scd2busy_state").toString + "/students"
-    val now = System.currentTimeMillis()
-    def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
-      val f = src.resolve(name)
-      Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      f.toFile.setLastModified(mtime)
-    }
+    // every job counted here is the batch's own work. Within the
+    // driver-rows bound the first job is the batch collect; over it
+    // (threshold -1) the first is the tally that fills the cache.
     def student(lsn: String, tag: String, id: Long, fn: String) =
       s"""{"lsn": "$lsn", "tag": "$tag", "table": "students", "new": {"id": $id, "first_name": "$fn", "last_name": "ln$id", "date_of_birth": "1990-01-01", "status_id": 1}}"""
     def delete(lsn: String, id: Long) =
       s"""{"lsn": "$lsn", "tag": "delete", "table": "students", "old": {"id": $id}}"""
-    def run(): Unit = {
-      Streams.materializeScd2(Streams.envelopeStream(spark, src.toString), ckpt, state)
-        .awaitTermination()
-      quiesce()
+    val inputs = Seq(
+      (None, 12, "the batch collect"),
+      (Some("-1"), 12, "the cache-filling tally"))
+    for ((threshold, wantJobs, first) <- inputs) withBroadcastThreshold(threshold) {
+      val src = Files.createTempDirectory("graft_scd2busy_in")
+      val ckpt = Files.createTempDirectory("graft_scd2busy_ckpt").toString
+      val state = Files.createTempDirectory("graft_scd2busy_state").toString + "/students"
+      val now = System.currentTimeMillis()
+      def writeChunk(name: String, mtime: Long, lines: String*): Unit = {
+        val f = src.resolve(name)
+        Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        f.toFile.setLastModified(mtime)
+      }
+      def run(): Unit = {
+        Streams.materializeScd2(Streams.envelopeStream(spark, src.toString), ckpt, state)
+          .awaitTermination()
+        quiesce()
+      }
+      writeChunk("chunk_0000.jsonl", now - 60000L,
+        student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
+        student("0/00000030", "insert", 3L, "three"))
+      run()
+      writeChunk("chunk_0001.jsonl", now - 30000L,
+        student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
+        delete("0/00000060", 2L), delete("0/00000070", 9L),
+        student("0/00000080", "insert", 4L, "four"))
+      val jobs = jobsDuring(run())
+      assert(jobs == wantJobs,
+        s"threshold $threshold: a busy materializeScd2 micro-batch ran $jobs jobs; with the " +
+          s"history's schema read from a footer on the driver it runs $wantJobs, the first " +
+          s"being $first (the history read's inference job made 13)")
+      val live = Streams.scd2AsOfState(spark, state, Long.MaxValue).collect()
+        .map(r => r.getLong(r.fieldIndex("id")) -> r.getString(r.fieldIndex("firstName"))).toMap
+      assert(live == Map(1L -> "eins", 3L -> "three", 4L -> "four"))
+      assert(spark.read.parquet(state).count() == 6L,
+        "history: one, uno, eins for key 1; two (closed); three; four")
     }
-    writeChunk("chunk_0000.jsonl", now - 60000L,
-      student("0/00000010", "insert", 1L, "one"), student("0/00000020", "insert", 2L, "two"),
-      student("0/00000030", "insert", 3L, "three"))
-    run()
-    writeChunk("chunk_0001.jsonl", now - 30000L,
-      student("0/00000040", "update", 1L, "uno"), student("0/00000050", "update", 1L, "eins"),
-      delete("0/00000060", 2L), delete("0/00000070", 9L),
-      student("0/00000080", "insert", 4L, "four"))
-    val jobs = jobsDuring(run())
-    assert(jobs == 12,
-      s"a busy materializeScd2 micro-batch ran $jobs jobs; with the history's schema read " +
-        "from a footer on the driver it runs 12 (the history read's inference job made 13)")
-    val live = Streams.scd2AsOfState(spark, state, Long.MaxValue).collect()
-      .map(r => r.getLong(r.fieldIndex("id")) -> r.getString(r.fieldIndex("firstName"))).toMap
-    assert(live == Map(1L -> "eins", 3L -> "three", 4L -> "four"))
-    assert(spark.read.parquet(state).count() == 6L,
-      "history: one, uno, eins for key 1; two (closed); three; four")
   }
 
   test("a batch with no events for a relation skips that relation's state rewrite entirely") {
@@ -1208,45 +1200,49 @@ class MultiTableCdcSpec extends SparkSuite {
   }
 
   test("materializeScd2Tables: one mixed stream lands one consistent SCD2 history per relation") {
-    val in = Fixture.materializeMultiTableChunks(5)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mtscd_ckpt").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_mtscd_state").toString
-    Streams.materializeScd2Tables(
-      Streams.envelopeStream(spark, in, schema = union), ckpt, root, relations)
-      .awaitTermination()
-    quiesce()
-    // each relation's streamed history == the batch SCD2 fold of ITS
-    // events alone (the q50 parity convention, per relation)
-    val mixed = spark.read.schema(union).json(in)
-    def expected(rel: Envelope.Relation) = Envelope.scd2Fold(
-      Envelope.projectRelation(mixed.filter(col("table") === rel.name), rel)
-        .filter(col("tag").isin("insert", "update", "delete"))
-        .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
-        .drop("lsn"),
-      rel.outName(rel.key))
-    relations.foreach { rel =>
-      val got = spark.read.parquet(s"$root/${rel.name}")
-      val want = expected(rel)
-      val cols = got.columns.sorted.map(col)
-      assert(got.count() == want.count(), s"${rel.name} history row count")
-      assert(got.select(cols: _*).exceptAll(want.select(cols: _*)).isEmpty &&
-        want.select(cols: _*).exceptAll(got.select(cols: _*)).isEmpty,
-        s"${rel.name} streamed history must equal its single-relation batch fold")
+    // one input on each side of the driver-rows bound (threshold -1:
+    // every batch persisted); both must equal the same folds
+    for (threshold <- Seq(None, Some("-1"))) withBroadcastThreshold(threshold) {
+      val in = Fixture.materializeMultiTableChunks(5)
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_mtscd_ckpt").toString
+      val root = java.nio.file.Files.createTempDirectory("graft_mtscd_state").toString
+      Streams.materializeScd2Tables(
+        Streams.envelopeStream(spark, in, schema = union), ckpt, root, relations)
+        .awaitTermination()
+      quiesce()
+      // each relation's streamed history == the batch SCD2 fold of ITS
+      // events alone (the q50 parity convention, per relation)
+      val mixed = spark.read.schema(union).json(in)
+      def expected(rel: Envelope.Relation) = Envelope.scd2Fold(
+        Envelope.projectRelation(mixed.filter(col("table") === rel.name), rel)
+          .filter(col("tag").isin("insert", "update", "delete"))
+          .withColumn("valid_from", Envelope.lsnNumeric(col("lsn")))
+          .drop("lsn"),
+        rel.outName(rel.key))
+      relations.foreach { rel =>
+        val got = spark.read.parquet(s"$root/${rel.name}")
+        val want = expected(rel)
+        val cols = got.columns.sorted.map(col)
+        assert(got.count() == want.count(), s"${rel.name} history row count (threshold $threshold)")
+        assert(got.select(cols: _*).exceptAll(want.select(cols: _*)).isEmpty &&
+          want.select(cols: _*).exceptAll(got.select(cols: _*)).isEmpty,
+          s"${rel.name} streamed history must equal its single-relation batch fold (threshold $threshold)")
+      }
+      // no cross-contamination: each history carries exactly its own
+      // image columns + the interval bookkeeping
+      assert(spark.read.parquet(s"$root/status").columns.toSet ==
+        Set("id", "value", "valid_from", "valid_to", "is_current"))
+      assert(spark.read.parquet(s"$root/students").columns.toSet ==
+        Set("id", "firstName", "lastName", "dateOfBirth", "status",
+          "valid_from", "valid_to", "is_current"))
+      // the open intervals are each relation's last-image fold
+      assert(collectStudents(spark.read.parquet(s"$root/students")
+          .filter(col("is_current") === 1)) == studentsFinal,
+        "students open intervals must equal the students-only sequential fold")
+      assert(collectStatus(spark.read.parquet(s"$root/status")
+          .filter(col("is_current") === 1)) == statusFinal,
+        "status open intervals must equal the status-only sequential fold")
     }
-    // no cross-contamination: each history carries exactly its own
-    // image columns + the interval bookkeeping
-    assert(spark.read.parquet(s"$root/status").columns.toSet ==
-      Set("id", "value", "valid_from", "valid_to", "is_current"))
-    assert(spark.read.parquet(s"$root/students").columns.toSet ==
-      Set("id", "firstName", "lastName", "dateOfBirth", "status",
-        "valid_from", "valid_to", "is_current"))
-    // the open intervals are each relation's last-image fold
-    assert(collectStudents(spark.read.parquet(s"$root/students")
-        .filter(col("is_current") === 1)) == studentsFinal,
-      "students open intervals must equal the students-only sequential fold")
-    assert(collectStatus(spark.read.parquet(s"$root/status")
-        .filter(col("is_current") === 1)) == statusFinal,
-      "status open intervals must equal the status-only sequential fold")
   }
 
   test("target naming refuses a collision with another target's compaction-horizon sidecar (r21, ADVICE)") {
@@ -1276,8 +1272,11 @@ class MultiTableCdcSpec extends SparkSuite {
 
   test("materializeScd2JdbcTables: one mixed stream lands one JDBC SCD2 history per relation; lost-commit replay is a no-op; both transport modes") {
     import graft.sources.Jdbc
-    for (ordered <- Seq(true, false)) {
-    val modeTag = if (ordered) "ord" else "ooo"
+    // each transport mode on both sides of the driver-rows bound
+    // (threshold -1: every batch persisted)
+    for (ordered <- Seq(true, false); threshold <- Seq(None, Some("-1")))
+      withBroadcastThreshold(threshold) {
+    val modeTag = (if (ordered) "ord" else "ooo") + threshold.fold("")(_ => "_m1")
     val sinkUrl = s"jdbc:derby:memory:graft_mtscd2_jdbc_$modeTag;create=true"
     // ordered mode streams the LSN-ordered chunks; unordered mode
     // streams them fully REVERSED — deletes out-run their inserts
@@ -1325,10 +1324,10 @@ class MultiTableCdcSpec extends SparkSuite {
       // fully delivered → no zero-width orphan tombstones may remain
       assert(Jdbc.snapshot(spark, sinkUrl, s"${rel.name}_history")
         .filter(col("valid_to").isNotNull && col("valid_to") === col("valid_from")).isEmpty,
-        s"${rel.name}_history must carry no zero-width tombstones after full delivery (ordered=$ordered)")
+        s"${rel.name}_history must carry no zero-width tombstones after full delivery (ordered=$ordered, threshold $threshold)")
       val want = canon(expected(rel))
       assert(want.nonEmpty && landed(rel) == want,
-        s"${rel.name}_history must equal its single-relation batch fold (ordered=$ordered)")
+        s"${rel.name}_history must equal its single-relation batch fold (ordered=$ordered, threshold $threshold)")
     }
     // column isolation: each table carries exactly its own image
     // columns + the interval bookkeeping (no cross-relation bleed)
@@ -1354,7 +1353,7 @@ class MultiTableCdcSpec extends SparkSuite {
     run()
     quiesce()
     assert(relations.map(landed) == before,
-      s"replaying a batch whose commit was lost must be a no-op on every relation's history (ordered=$ordered)")
+      s"replaying a batch whose commit was lost must be a no-op on every relation's history (ordered=$ordered, threshold $threshold)")
     }
   }
 

@@ -42,6 +42,26 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     jobs.get()
   }
 
+  /** Run `body` with session conf `key` set to `value` (None: as
+    * configured), restored afterwards. A stream copies the session conf
+    * when it starts, so the setting covers every stream `body` starts. */
+  protected def withConf[T](key: String, value: Option[String])(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    value.foreach(spark.conf.set(key, _))
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** [[withConf]] for `spark.sql.autoBroadcastJoinThreshold`, the bound
+    * under which a foreachBatch sink reads its micro-batch as driver rows
+    * (`Streams.batchFrame`). -1 puts every micro-batch of every sink over
+    * the bound, on the persisted path. */
+  protected def withBroadcastThreshold[T](value: Option[String])(body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", value)(body)
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")

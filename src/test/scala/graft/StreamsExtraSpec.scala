@@ -1508,45 +1508,49 @@ class StreamsExtraSpec extends SparkSuite {
 
   test("materializeScd2: streamed type-2 history equals the q50 batch fold after EVERY micro-batch") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_scd2_in")
-    val ckpt = Files.createTempDirectory("graft_scd2_ckpt").toString
-    val stateDir = Files.createTempDirectory("graft_scd2_state").toString
-    val state = stateDir + "/students_history"
-    val scdCols = Seq("id", "valid_from", "valid_to", "firstName",
-      "lastName", "dateOfBirth", "status", "is_current")
-    val lines = Fixture.jsonLines
-    val chunks = lines.grouped(math.max(1, lines.size / 4)).toVector
-    val t0 = System.currentTimeMillis() - 2000L * (chunks.size + 1)
-    def quiesce(): Unit = {
-      var waited = 0
-      while (spark.streams.active.nonEmpty && waited < 10000) {
-        Thread.sleep(100); waited += 100
+    // one input on each side of the driver-rows bound (threshold -1:
+    // every batch persisted); both must equal the same fold
+    for (threshold <- Seq(None, Some("-1"))) withBroadcastThreshold(threshold) {
+      val dir = Files.createTempDirectory("graft_scd2_in")
+      val ckpt = Files.createTempDirectory("graft_scd2_ckpt").toString
+      val stateDir = Files.createTempDirectory("graft_scd2_state").toString
+      val state = stateDir + "/students_history"
+      val scdCols = Seq("id", "valid_from", "valid_to", "firstName",
+        "lastName", "dateOfBirth", "status", "is_current")
+      val lines = Fixture.jsonLines
+      val chunks = lines.grouped(math.max(1, lines.size / 4)).toVector
+      val t0 = System.currentTimeMillis() - 2000L * (chunks.size + 1)
+      def quiesce(): Unit = {
+        var waited = 0
+        while (spark.streams.active.nonEmpty && waited < 10000) {
+          Thread.sleep(100); waited += 100
+        }
       }
-    }
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val f = dir.resolve(f"chunk_$i%04d.jsonl")
-      Files.write(f, chunk.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      f.toFile.setLastModified(t0 + i * 2000L)
+      chunks.zipWithIndex.foreach { case (chunk, i) =>
+        val f = dir.resolve(f"chunk_$i%04d.jsonl")
+        Files.write(f, chunk.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        f.toFile.setLastModified(t0 + i * 2000L)
+        Streams.materializeScd2(Streams.envelopeStream(spark, dir.toString), ckpt, state)
+          .awaitTermination()
+        quiesce()
+        val got = spark.read.parquet(state).select(scdCols.map(col): _*)
+        val expected = batchScd2(dir.toString)
+        assert(got.count() == expected.count(), s"row count after chunk $i (threshold $threshold)")
+        assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+          s"after chunk $i the incremental history must equal the batch SCD2 replay (threshold $threshold)")
+        // exactly one open interval per live key, closed intervals chain
+        val open = spark.read.parquet(state).filter(col("is_current") === 1)
+        assert(open.groupBy("id").count().filter(col("count") > 1).isEmpty,
+          "at most one open interval per key")
+      }
+      // restart on the same checkpoint with no new data: state unchanged
+      val before = spark.read.parquet(state).orderBy("id", "valid_from").collect().toSeq
       Streams.materializeScd2(Streams.envelopeStream(spark, dir.toString), ckpt, state)
         .awaitTermination()
       quiesce()
-      val got = spark.read.parquet(state).select(scdCols.map(col): _*)
-      val expected = batchScd2(dir.toString)
-      assert(got.count() == expected.count(), s"row count after chunk $i")
-      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
-        s"after chunk $i the incremental history must equal the batch SCD2 replay")
-      // exactly one open interval per live key, closed intervals chain
-      val open = spark.read.parquet(state).filter(col("is_current") === 1)
-      assert(open.groupBy("id").count().filter(col("count") > 1).isEmpty,
-        "at most one open interval per key")
+      val after = spark.read.parquet(state).orderBy("id", "valid_from").collect().toSeq
+      assert(after == before, "restart with no new data must not change the history")
     }
-    // restart on the same checkpoint with no new data: state unchanged
-    val before = spark.read.parquet(state).orderBy("id", "valid_from").collect().toSeq
-    Streams.materializeScd2(Streams.envelopeStream(spark, dir.toString), ckpt, state)
-      .awaitTermination()
-    quiesce()
-    val after = spark.read.parquet(state).orderBy("id", "valid_from").collect().toSeq
-    assert(after == before, "restart with no new data must not change the history")
   }
 
   test("materializeScd2: lost checkpoint commit after a completed swap — the replayed batch re-folds idempotently") {
